@@ -17,98 +17,79 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 TIERS: dict[str, int] = {}
 
-# Explicit driver-pass order for round 18 (optimization round 2). The
-# driver's correctness pass verifies the first 50 registry entries per
-# round, so coverage rotates. The ordering rule (enforced by
-# tests/test_registry.py, rebuilt each round with
-# tools/make_driver_order.py; --check = read-only validate):
-#
-# This round the window is 100% changed-source re-verifies: the r18
-# optimizations (conditional corpus-spread views in _docs_view/_emb_view,
-# the minhash/LSH Arrow kernels, the footer row counts, the join-order
-# re-land, the cid width scaling) drifted 68 governed closures — more
-# than the window holds. The 50 slots go to every changed query whose
-# own plan/kernel changed or that consumes the changed views on its hot
-# path; the 18 lowest-risk closure ripples (the mixture/budget/shard
-# text-stats family plus small embedding projections, all r16/r17-green
-# and all bit-exact in this session's full-registry parity at sf0.01 +
-# sf0.1) carry an explicit one-round deferral recorded in the manifest
-# (make_driver_order --defer-changed; they are HARD slot demands for
-# r19). Rotation pressure is zero this round (stale = 0, pending = 0;
-# the r13-cohort tail's horizon is r19).
-#
-# Correction of the r17 header's narrative (r17 ADVICE): the r17 window
-# actually held 12 r13-cohort rows at positions 26-37 and 8
-# changed-source re-verifies at 38-45 — not "20 r13 rows / no
-# changed-source re-verifies" as the header then claimed.
-# Forward schedule under P=6: r19 = the 18 deferred entries + remaining
-# r13 rows (horizon r19) + r14 leading edge; the r14 window must
-# complete by r20, the r15 window by r21, the r16 window by r22.
-# Capacity policy (r15 verdict ask #7, decided here rather than by
-# drift): at 210 registered, P=6 holds through 250. BEFORE registering
-# past ~230, the committed plan is to retire the labeled exact-baseline
-# twins from the driver rotation FIRST — each SCALE_PATHS baseline
-# (embedding_near_pairs, cosine_topk, ngram_containment_pairs, ...) is
-# coverage-redundant with its registered production twin, and its
-# correctness is additionally pinned by the twins' recall/containment
-# contracts in pytest — and only bump to P=7 (capacity 350, staleness
-# bound 7 rounds) if registration pressure continues after that. A
-# P bump is a real cost (every row waits up to one round longer
-# between re-verifies), so the cheap retirement lever goes first.
+# Explicit driver-pass order. The driver's correctness pass verifies the
+# first 50 registry entries per round, so coverage rotates through this
+# list; unlisted queries follow in registration order. Rebuilt at each
+# round start: validate with ``tools/make_driver_order.py --check``
+# (read-only), then record the manifest with ``tools/make_driver_order.py``
+# (rules in its docstring, enforced by tests/test_registry.py). Slots go,
+# in this order, to:
+#   1. hard demands: stale queries (latest green driver row at least P
+#      rounds old, P = max(3, ceil(registry / 50) + 1)), never-verified
+#      queries, and changed queries whose one-round deferral has come due;
+#   2. queries whose governed source changed since their verified hash,
+#      those whose computation changed ahead of those where only shared
+#      plumbing (such as the streaming drain) changed.
+# Changed queries that do not fit are deferred one round with
+# ``--defer-changed``, backed by a same-session full-registry parity run
+# at sf0.01 and sf0.1; at the next round they are hard demands.
+# Capacity: P = 6 holds up to 250 registered queries. Before registering
+# past ~230, retire the labeled exact baselines (SCALE_PATHS) from the
+# rotation, and only then raise P.
 DRIVER_ORDER: list[str] = [
-    # -- 1-13: kernel/join-order/width changes (source edited directly) ----
-    "ann_topk_lsh",
-    "ivf_pq_topk",
-    "ivf_pq_topk_kmeans",
-    "ivf_opq_topk",
-    "ivf_pq_incremental",
-    "semantic_dedup",
-    "minhash_signatures",
-    "minhash_lsh_pairs",
-    "minhash_band_stats",
+    # -- stale: latest driver row is P = 6 or more rounds old --------------
+    "streaming_click_to_purchase",
+    "streaming_sessionize_flushed",
+    "session_window_batch",
+    "stratified_sample",
+    "shard_assignments",
+    "corpus_clean",
+    "dedup_incremental",
+    "pseudonymize_users",
+    "doc_chunks",
+    "repetition_ratio",
+    "bpe_merge_candidates",
+    "integrity_orphans",
+    "hot_keys_events",
+    "order_price_histogram",
+    "embedding_normalized",
+    "shipping_priority",
+    "local_supplier_volume",
+    "rolling_revenue_7d",
+    "customer_order_gaps",
+    "big_quantity_orders",
+    "disjunctive_part_revenue",
+    "basket_part_pairs",
+    "customer_order_distribution",
+    "docs_length_outliers",
+    "embedding_label_centroids",
+    "bigram_lm_score",
+    # -- changed, one-round deferral now due ---------------------------------
+    "packing_efficiency",
+    "domain_mixture_weights",
+    "lang_source_mix",
+    "token_entropy",
+    "zipf_slope",
+    "curriculum_stages",
+    "contamination_by_benchmark",
+    "source_token_kl",
+    "source_quality_gate",
+    "token_budget_plan_mixture",
+    "token_budget_rebalance",
+    "token_budget_materialize",
+    "token_budget_fill_report",
+    "training_shard_manifest",
+    "training_shard_append",
+    "embedding_quantize_int8",
+    "embedding_pca_spectrum",
+    # -- changed here: shared drain/staging and batch-twin helpers -----------
     "minhash_lsh_incremental",
-    "materialize_training_set_v2",
-    "materialize_training_set_incremental",
-    "streaming_lsh_ingest",
-    # -- 14-22: _matmul_assign / footer-rowcount consumers ------------------
-    "ivf_topk",
-    "ivf_topk_kmeans",
-    "ivf_cluster_balance",
-    "ivf_split_plan",
-    "ivf_rebalance",
+    "ivf_pq_incremental",
     "semantic_dedup_incremental",
-    "embedding_cluster_drift",
-    "drift_retrain_plan",
-    "hybrid_rank_fusion",
-    # -- 23-50: conditional-view consumers (dedup/text/similarity hot paths)
-    "hybrid_rank_fusion_ivf",
-    "dedup_cluster_sizes",
-    "near_dup_keep_canonical",
-    "near_dup_clusters",
-    "cross_source_dup_matrix",
-    "cross_source_near_dup_matrix",
-    "ngram_jaccard_pairs",
-    "ngram_jaccard_pairs_capped",
-    "ngram_containment_pairs",
-    "ngram_containment_capped",
-    "ngram_novelty",
-    "simhash_fingerprints",
-    "simhash_near_pairs",
-    "dup_span_stats",
-    "dup_span_scrub",
-    "chunk_dedup",
-    "decontaminate",
-    "bloom_dedup",
-    "materialize_training_set",
-    "embedding_near_pairs",
-    "embedding_near_pairs_lsh",
-    "lsh_buckets",
-    "cosine_topk",
-    "exact_topk",
-    "embedding_norm_outliers",
+    "streaming_lsh_ingest",
     "streaming_pq_ingest",
     "streaming_semantic_dedup",
-    "corpus_quality_funnel",
+    "streaming_scd2_history",
 ]
 # Baseline → production twin. Entries here are *labeled baselines*: exact
 # but super-linear (quadratic self-joins, brute-force scans) — correct as

@@ -914,11 +914,18 @@ def ivf_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the emission — a real deployment reads them from the standing index's
     stats, making ingest cost O(batch) end-to-end.
     """
+    corpus, batch, encode = _pq_incr_index(spark, sf_dir)
+    return _pq_incr_counts(spark, encode(corpus), encode(batch))
+
+
+def _pq_incr_index(spark: SparkSession, sf_dir: str):
+    """The incremental ingest's standing index, trained on the corpus
+    partition. Returns (corpus, batch, encode): the prepped corpus and
+    ingest partitions, and ``encode(df)`` mapping prepped rows to
+    (vec_id, cid, codes) against that index."""
     _emb_view(spark, sf_dir)
     prepped = spark.sql(_SPARK_PREP)
     corpus = prepped.where(f"NOT ({_PQ_INCR_SPLIT})")
-    batch = prepped.where(_PQ_INCR_SPLIT)
-
     n = (
         spark.table("embeddings_raw")
         .where(f"NOT ({_PQ_INCR_SPLIT})")
@@ -927,13 +934,22 @@ def ivf_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bc = spark.sparkContext.broadcast(_corpus_pq_index(corpus, n))
     assign_encode = _assign_encode_fn(bc)
-    schema = "vec_id BIGINT, cid BIGINT, codes ARRAY<INT>"
-    corpus.mapInPandas(assign_encode, schema).createOrReplaceTempView(
-        "pqi_corpus_codes"
-    )
-    batch.mapInPandas(assign_encode, schema).createOrReplaceTempView(
-        "pqi_batch_codes"
-    )
+
+    def encode(df: DataFrame) -> DataFrame:
+        return df.mapInPandas(
+            assign_encode, "vec_id BIGINT, cid BIGINT, codes ARRAY<INT>"
+        )
+
+    return corpus, prepped.where(_PQ_INCR_SPLIT), encode
+
+
+def _pq_incr_counts(
+    spark: SparkSession, corpus_codes: DataFrame, batch_codes: DataFrame
+) -> DataFrame:
+    """Updated inverted lists: per cid, the standing count, the ingested
+    count and their total (views ``pqi_corpus_codes`` / ``pqi_batch_codes``)."""
+    corpus_codes.createOrReplaceTempView("pqi_corpus_codes")
+    batch_codes.createOrReplaceTempView("pqi_batch_codes")
     return spark.sql(
         """
         WITH c AS (SELECT cid, COUNT(*) AS n FROM pqi_corpus_codes

@@ -1207,9 +1207,16 @@ def minhash_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard compares exact integer signature components.
     """
     _docs_view(spark, sf_dir)
-    sigs = _minhash_sigs_df(spark.table("documents")).localCheckpoint(
-        eager=True
+    bands = _lsh_bands(
+        _minhash_sigs_df(spark.table("documents")).localCheckpoint(eager=True)
     )
+    is_batch = F.expr(INCR_BATCH_PRED)
+    return _lsh_band_join(bands.filter(~is_batch), bands.filter(is_batch))
+
+
+def _lsh_bands(sigs: DataFrame) -> DataFrame:
+    """(doc_id, sig, band_id, band_hash): each signature row exploded into
+    its LSH_BANDS bands, the band hash an md5 over the band's components."""
     rows = MINHASH_K // LSH_BANDS
     band_structs = F.array(
         *[
@@ -1225,12 +1232,15 @@ def minhash_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     sig_arr = F.array(*[F.col(f"sig{i}") for i in range(MINHASH_K)])
-    bands = sigs.select(
+    return sigs.select(
         "doc_id", sig_arr.alias("sig"), F.explode(band_structs).alias("band")
     ).select("doc_id", "sig", "band.band_id", "band.band_hash")
-    is_batch = F.expr(INCR_BATCH_PRED)
-    corpus_bands = bands.filter(~is_batch).alias("x")
-    batch_bands = bands.filter(is_batch).alias("y")
+
+
+def _lsh_band_join(corpus_bands: DataFrame, batch_bands: DataFrame) -> DataFrame:
+    """(corpus_doc, batch_doc, est_jaccard) for every pair sharing a band:
+    the ingest-sized batch band table broadcasts into the corpus one."""
+    x, y = corpus_bands.alias("x"), batch_bands.alias("y")
     matches = F.aggregate(
         F.zip_with(
             F.col("x.sig"), F.col("y.sig"), lambda a, b: (a == b).cast("int")
@@ -1239,8 +1249,8 @@ def minhash_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, v: acc + v,
     )
     return (
-        corpus_bands.join(
-            F.broadcast(batch_bands),
+        x.join(
+            F.broadcast(y),
             (F.col("x.band_id") == F.col("y.band_id"))
             & (F.col("x.band_hash") == F.col("y.band_hash")),
         )

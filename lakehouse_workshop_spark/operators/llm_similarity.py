@@ -1659,6 +1659,13 @@ _SEM_ASSIGN_SCHEMA = (
 )
 
 
+# _sem_incr_gate's output, shared with the streaming twin's per-batch gate
+_SEM_GATE_SCHEMA = (
+    "vec_id BIGINT, cid BIGINT, brn INT, dup_vs_corpus BOOLEAN,"
+    " dup_vs_batch BOOLEAN, kept BOOLEAN"
+)
+
+
 def _sem_incr_gate(pdf, within_batch: bool):
     """Per-cluster incremental verdict (applyInPandas over cid groups of
     the corpus ∪ batch union).
@@ -1726,14 +1733,6 @@ def _sem_incr_gated(spark: SparkSession, batch_df: DataFrame) -> DataFrame:
     batch-boundary-invariant columns). Returns (vec_id, cid, brn,
     dup_vs_corpus, dup_vs_batch, kept) over exactly ``batch_df``'s rows.
     """
-    from pyspark.sql.types import (
-        BooleanType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     bc = _sem_incr_centroids(spark)
     corpus = spark.sql(_SPARK_PREP).where(f"NOT ({SEM_INCR_SPLIT})")
     assigned_c = corpus.mapInPandas(
@@ -1742,20 +1741,10 @@ def _sem_incr_gated(spark: SparkSession, batch_df: DataFrame) -> DataFrame:
     assigned_b = batch_df.mapInPandas(
         _centroid_assign_fn(bc, "sem_incr_b"), _SEM_ASSIGN_SCHEMA
     ).withColumn("is_batch", F.lit(True))
-    out_schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("cid", LongType()),
-            StructField("brn", IntegerType()),
-            StructField("dup_vs_corpus", BooleanType()),
-            StructField("dup_vs_batch", BooleanType()),
-            StructField("kept", BooleanType()),
-        ]
-    )
     return (
         assigned_c.unionByName(assigned_b)
         .groupBy("cid")
-        .applyInPandas(lambda pdf: _sem_incr_gate(pdf, True), out_schema)
+        .applyInPandas(lambda pdf: _sem_incr_gate(pdf, True), _SEM_GATE_SCHEMA)
     )
 
 

@@ -8,12 +8,25 @@ equivalent. ``session_window_batch`` exercises Spark's native
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_workshop_spark.catalog import load_table
 from lakehouse_workshop_spark.operators import query
 from lakehouse_workshop_spark.operators.completions import SESSION_GAP_SECONDS
+
+
+def _in_workdir(job, spark: SparkSession, sf_dir: str, *order_by: str) -> DataFrame:
+    """Run a staged streaming ``job(spark, sf_dir, workdir)`` in a
+    throwaway workdir. Its result is ordered by ``order_by`` and
+    materialized before the workdir is removed, which also happens when
+    the job raises."""
+    with tempfile.TemporaryDirectory() as workdir:
+        return (
+            job(spark, sf_dir, workdir).orderBy(*order_by).localCheckpoint(eager=True)
+        )
 
 
 @query(
@@ -224,8 +237,6 @@ def streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is one event (the last seen), so transition pairs bridge
     micro-batch boundaries with O(users) memory; aggregating the emitted
     pairs reproduces the batch window pass exactly."""
-    from pyspark.sql import functions as F
-
     from lakehouse_workshop_spark.streaming.jobs import (
         run_streaming_event_transitions,
     )
@@ -266,12 +277,6 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches (prior-history join + re-window), never table size — the
     property this query exists to pin.
     """
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from lakehouse_workshop_spark.catalog import load_table
     from lakehouse_workshop_spark.streaming.jobs import run_streaming_scd2
 
     events = (
@@ -284,9 +289,6 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    workdir = tempfile.mkdtemp(prefix="scd2_stream_")
-    src = f"{workdir}/src"
-    target = f"{workdir}/target"
     batches = (
         events.filter("valid_from < '1996-06-01'"),
         events.filter(
@@ -296,23 +298,19 @@ def streaming_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             events.filter("valid_from < '1995-06-01'")  # late replay
         ),
     )
-    import glob
-    import os
-
-    os.makedirs(src, exist_ok=True)
-    for i, b in enumerate(batches):
-        tmp = f"{workdir}/b{i}"
-        b.coalesce(1).write.parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        shutil.move(part, f"{src}/batch_{i}.parquet")
-        shutil.rmtree(tmp)
-    result = run_streaming_scd2(spark, src, target, events.schema)
-    # materialize off the temp dir before it is removed
-    out = result.select(
-        "custkey", "version_key", "attr_value", "valid_from", "valid_to", "is_current"
-    ).localCheckpoint(eager=True)
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+    with tempfile.TemporaryDirectory() as workdir:
+        # One file per batch, written in order: the file source takes them
+        # one per trigger, oldest first.
+        for i, b in enumerate(batches):
+            b.coalesce(1).write.parquet(f"{workdir}/src/batch_{i}")
+        result = run_streaming_scd2(
+            spark, f"{workdir}/src/batch_*", f"{workdir}/target", events.schema
+        )
+        # materialize off the workdir before it is removed
+        return result.select(
+            "custkey", "version_key", "attr_value", "valid_from", "valid_to",
+            "is_current",
+        ).localCheckpoint(eager=True)
 
 
 def _streaming_bloom_oracle() -> str:
@@ -344,20 +342,9 @@ def streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is zero — the gate is stateless BETWEEN batches by design (the
     filter snapshot rebuilds per ingest cycle, not per event).
     """
-    import shutil
-    import tempfile
-
     from lakehouse_workshop_spark.streaming.jobs import run_streaming_bloom_gate
 
-    workdir = tempfile.mkdtemp(prefix="bloom_stream_")
-    result = run_streaming_bloom_gate(spark, sf_dir, workdir)
-    out = (
-        result.select("doc_id", "bloom_maybe_dup", "exact_dup")
-        .orderBy("doc_id")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+    return _in_workdir(run_streaming_bloom_gate, spark, sf_dir, "doc_id")
 
 
 def _streaming_cms_oracle() -> str:
@@ -396,19 +383,9 @@ def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     counter partial regardless of batch size or key cardinality — the
     no-per-key-state frequency monitor a 100 TB event stream needs.
     """
-    import shutil
-    import tempfile
-
     from lakehouse_workshop_spark.streaming.jobs import run_streaming_cms
 
-    workdir = tempfile.mkdtemp(prefix="cms_stream_")
-    out = (
-        run_streaming_cms(spark, sf_dir, workdir)
-        .orderBy("user_id")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+    return _in_workdir(run_streaming_cms, spark, sf_dir, "user_id")
 
 
 def _streaming_pq_oracle() -> str:
@@ -437,19 +414,9 @@ def streaming_pq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     that batch only; state is the append-only code parts table — the
     nightly vector-store ingest shape.
     """
-    import shutil
-    import tempfile
-
     from lakehouse_workshop_spark.streaming.jobs import run_streaming_pq_ingest
 
-    workdir = tempfile.mkdtemp(prefix="pq_stream_")
-    out = (
-        run_streaming_pq_ingest(spark, sf_dir, workdir)
-        .orderBy("cid")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+    return _in_workdir(run_streaming_pq_ingest, spark, sf_dir, "cid")
 
 
 def _streaming_lsh_oracle() -> str:
@@ -487,19 +454,11 @@ def streaming_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch plus a broadcast band join; zero state between batches (the
     signature table is the per-cycle snapshot, like the bloom filter).
     """
-    import shutil
-    import tempfile
-
     from lakehouse_workshop_spark.streaming.jobs import run_streaming_lsh_ingest
 
-    workdir = tempfile.mkdtemp(prefix="lsh_stream_")
-    out = (
-        run_streaming_lsh_ingest(spark, sf_dir, workdir)
-        .orderBy("corpus_doc", "batch_doc")
-        .localCheckpoint(eager=True)
+    return _in_workdir(
+        run_streaming_lsh_ingest, spark, sf_dir, "corpus_doc", "batch_doc"
     )
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
 
 
 def _streaming_semantic_oracle() -> str:
@@ -536,18 +495,8 @@ def streaming_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-cluster Gram blocks against ~n/nlist standing kept members; zero
     state between batches — the kept table is the per-cycle snapshot.
     """
-    import shutil
-    import tempfile
-
     from lakehouse_workshop_spark.streaming.jobs import (
         run_streaming_semantic_dedup,
     )
 
-    workdir = tempfile.mkdtemp(prefix="sem_stream_")
-    out = (
-        run_streaming_semantic_dedup(spark, sf_dir, workdir)
-        .orderBy("vec_id")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(workdir, ignore_errors=True)
-    return out
+    return _in_workdir(run_streaming_semantic_dedup, spark, sf_dir, "vec_id")

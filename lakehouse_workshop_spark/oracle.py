@@ -10,18 +10,34 @@ ever sees it.
 from __future__ import annotations
 
 import math
+import os
 from dataclasses import dataclass, field
 
 import duckdb
 import pandas as pd
 
 from lakehouse_workshop_spark.catalog import TESTDATA_TABLES
+from lakehouse_workshop_spark.session import _default_driver_mem
+
+
+def _duck_memory_limit() -> str:
+    """Half the RAM the Spark heap leaves free. DuckDB's own default (80%
+    of RAM) plus the ~60% heap of ``session._default_driver_mem``
+    over-commit the host, and the kernel then kills the Spark JVM. The
+    other half covers the JVM's memory outside its heap, this process and
+    its Python workers."""
+    total_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / (1 << 30)
+    heap_gib = int(_default_driver_mem().rstrip("g"))
+    return f"{max(1.0, (total_gib - heap_gib) / 2):.1f}GiB"
 
 
 def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    import os
-
-    con = duckdb.connect()
+    # No spill directory: an oracle that does not fit in memory fails with
+    # OutOfMemoryException, instead of filling the disk under the working
+    # directory with spill files first.
+    con = duckdb.connect(
+        config={"memory_limit": _duck_memory_limit(), "temp_directory": ""}
+    )
     for name in TESTDATA_TABLES:
         path = f"{sf_dir}/{name}.parquet"
         # Probe corpora are multi-file parquet DIRECTORIES holding only

@@ -1,33 +1,40 @@
 """Structured Streaming jobs (engine extension; SURVEY.md §2.9 notes the
 reference has no streaming — this is the Spark-native completion).
 
-- ``run_streaming_windowed_counts``: parquet source → tumbling-window
-  aggregate → memory sink, driven to completion with availableNow. Complete
-  output mode so every window is emitted (deterministic vs the batch oracle).
-- ``sessionize_stateful``: custom stateful operator via
-  ``applyInPandasWithState`` — the gap-based sessionizer with explicit
-  per-user state, the streaming twin of ``operators.completions.
-  sessionize_events``.
+Every job runs its stream to completion through one of two shared
+functions, so checkpointing, triggering and state-store width live in one
+place:
 
-Scale posture: watermarks bound state; per-key state is O(1) (open-session
-bounds only). The parquet file source here stands in for Kafka — the plan
-shape downstream of the source is identical.
+- :func:`_drain` starts a ``DataStreamWriter`` over a throwaway
+  checkpoint with the ``availableNow`` trigger, the state stores at
+  ``_STREAM_SHUFFLE_PARTITIONS``, and waits for the stream to finish.
+  Jobs with a memory sink then read the sink's table; ``foreachBatch``
+  jobs read what their batch writer left on disk.
+- :func:`_staged_stream` writes a batch DataFrame as
+  ``_STAGED_FILES`` parquet files under ``<target_dir>/_incoming`` and
+  returns a one-file-per-trigger stream over them, its schema taken from
+  the DataFrame. The ingest-gate twins (bloom, CMS, PQ, LSH, semantic)
+  stream through it, so each runs several micro-batches.
+
+The event jobs read ``events.parquet`` itself as a file stream (one
+micro-batch); the parquet file source stands in for Kafka — the plan
+shape downstream of the source is the same. Watermarks bound state, and
+per-key state is O(1).
 """
 
 from __future__ import annotations
 
+import os
 import tempfile
 from collections.abc import Iterator
-from contextlib import contextmanager
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as PsWindow
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    DoubleType,
     IntegerType,
     LongType,
     StringType,
@@ -35,28 +42,15 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+from pyspark.sql.window import Window as PsWindow
 
 from lakehouse_workshop_spark.operators.completions import SESSION_GAP_SECONDS
 
-# events.parquet physical schema with ts as int64 nanos (the r1-r4 datagen
-# encoding — see catalog.decode_events_ts). Newer datagen writes native µs
-# timestamps; _events_raw_schema probes the file footer and returns whichever
-# physical schema the file actually carries, since a stream source needs the
-# schema declared up front.
-_EVENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType(), True),
-        StructField("ts", LongType(), True),
-        StructField("user_id", LongType(), True),
-        StructField("event_type", StringType(), True),
-        StructField("value", DoubleType(), True),
-        StructField("props", StringType(), True),
-    ]
-)
-
 
 def _events_raw_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    """Physical schema of ``events.parquet`` (one footer read, no data scan)."""
+    """Physical schema of ``events.parquet`` (one footer read, no data
+    scan): older datagen wrote ``ts`` as int64 nanos, newer as native µs
+    timestamps, and a stream source needs the schema declared up front."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
@@ -67,17 +61,44 @@ def _events_raw_schema(spark: SparkSession, sf_dir: str) -> StructType:
 # setup 4× without changing results. A real deployment sizes this to
 # state volume (state-store count scales with partitions, not data).
 _STREAM_SHUFFLE_PARTITIONS = 8
+# Files a staged source is split into: one micro-batch each.
+_STAGED_FILES = 5
 
 
-@contextmanager
-def _stream_shuffle(spark: SparkSession, n: int = _STREAM_SHUFFLE_PARTITIONS):
+def _drain(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Run ``writer``'s query to completion: availableNow over a throwaway
+    checkpoint, with ``_STREAM_SHUFFLE_PARTITIONS`` state stores."""
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    spark.conf.set(key, str(_STREAM_SHUFFLE_PARTITIONS))
     try:
-        yield
+        with tempfile.TemporaryDirectory() as ckpt:
+            writer.option("checkpointLocation", ckpt).trigger(
+                availableNow=True
+            ).start().awaitTermination()
     finally:
         spark.conf.set(key, old)
+
+
+def _drain_to_memory(
+    spark: SparkSession, df: DataFrame, mode: str, name: str
+) -> DataFrame:
+    """:func:`_drain` ``df`` into the memory table ``name`` and return it."""
+    _drain(spark, df.writeStream.outputMode(mode).format("memory").queryName(name))
+    return spark.table(name)
+
+
+def _staged_stream(df: DataFrame, target_dir: str) -> DataFrame:
+    """Stage ``df`` as ``_STAGED_FILES`` parquet files under
+    ``target_dir/_incoming`` and stream them back one file per trigger."""
+    source_dir = os.path.join(target_dir, "_incoming")
+    df.repartition(_STAGED_FILES).write.mode("overwrite").parquet(source_dir)
+    return (
+        df.sparkSession.readStream.format("parquet")
+        .schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .load(source_dir)
+    )
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -94,30 +115,15 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_events_ts(raw)
 
 
-def run_streaming_windowed_counts(
-    spark: SparkSession, sf_dir: str, window: str = "5 minutes"
+def _windowed_counts(
+    spark: SparkSession, events: DataFrame, mode: str, name: str
 ) -> DataFrame:
-    """Tumbling-window counts per event_type, driven to completion.
-
-    Complete mode emits every window at the final trigger, so the result
-    equals the batch aggregation (oracle-checkable).
-    """
-    events = _event_stream(spark, sf_dir)
+    """5-minute tumbling-window counts per event_type, drained into the
+    memory table ``name`` in output ``mode``."""
     agg = events.groupBy(
-        F.window("ts", window).alias("win"), "event_type"
+        F.window("ts", "5 minutes").alias("win"), "event_type"
     ).agg(F.count("*").alias("n_events"))
-    name = "stream_windowed_counts"
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return _drain_to_memory(spark, agg, mode, name).select(
         F.col("win.start").alias("window_start"),
         F.col("win.end").alias("window_end"),
         "event_type",
@@ -125,13 +131,22 @@ def run_streaming_windowed_counts(
     )
 
 
+def run_streaming_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling-window counts per event_type, driven to completion.
+
+    Complete mode emits every window at the final trigger, so the result
+    equals the batch aggregation (oracle-checkable).
+    """
+    return _windowed_counts(
+        spark, _event_stream(spark, sf_dir), "complete", "stream_windowed_counts"
+    )
+
+
 def run_streaming_windowed_counts_watermarked(
-    spark: SparkSession,
-    sf_dir: str,
-    window: str = "5 minutes",
-    delay: str = "10 minutes",
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Windowed counts with a watermark, append mode — the late-data path.
+    """Windowed counts with a 10-minute watermark, append mode — the
+    late-data path.
 
     Append mode only emits a window once the watermark (max observed event
     time − delay) passes its end, so the result is the *closed* windows;
@@ -141,29 +156,8 @@ def run_streaming_windowed_counts_watermarked(
     ``window_end <= watermark`` — which is exactly the SQL oracle's
     HAVING predicate.
     """
-    events = _event_stream(spark, sf_dir)
-    agg = (
-        events.withWatermark("ts", delay)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-    )
-    name = "stream_windowed_counts_wm"
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
-        F.col("win.start").alias("window_start"),
-        F.col("win.end").alias("window_end"),
-        "event_type",
-        "n_events",
-    )
+    events = _event_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
+    return _windowed_counts(spark, events, "append", "stream_windowed_counts_wm")
 
 
 def run_streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,18 +179,7 @@ def run_streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame
         nation, customer.c_nationkey == nation.n_nationkey
     )
     agg = enriched.groupBy("n_name").agg(F.count("*").alias("n_events"))
-    name = "stream_enriched_counts"
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(spark, agg, "complete", "stream_enriched_counts")
 
 
 def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -225,18 +208,7 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["event_id"])
         .select("event_id", "user_id", "ts", "event_type")
     )
-    name = "stream_dedup"
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(spark, deduped, "append", "stream_dedup")
 
 
 def run_streaming_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,18 +246,7 @@ def run_streaming_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFra
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 10 minutes")),
     ).select("click_id", "user_id", "click_ts", "purchase_id", "purchase_ts")
-    name = "stream_click_to_purchase"
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(spark, joined, "append", "stream_click_to_purchase")
 
 
 def run_streaming_merge_latest(
@@ -304,8 +265,6 @@ def run_streaming_merge_latest(
     overwrite — otherwise the lazy plan would read the directory it is
     rewriting.
     """
-    import os
-
     from lakehouse_workshop_spark.operators.cdc import merge_upsert
 
     events = _event_stream(spark, sf_dir)
@@ -325,14 +284,7 @@ def run_streaming_merge_latest(
             merged = latest
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_dir)
 
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            events.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, events.writeStream.foreachBatch(merge_batch))
     return spark.read.parquet(target_dir)
 
 
@@ -357,6 +309,20 @@ _SESSION_STATE_SCHEMA = StructType(
 )
 
 
+def _session_rows(user_id: Any, sessions: list[tuple]) -> pd.DataFrame:
+    """Output rows for ``sessions``, each a state tuple
+    (session_id, n_events, start_us, end_us)."""
+    return pd.DataFrame(
+        {
+            "user_id": [user_id] * len(sessions),
+            "session_id": [o[0] for o in sessions],
+            "n_events": [o[1] for o in sessions],
+            "session_start": [pd.Timestamp(o[2], unit="us") for o in sessions],
+            "session_end": [pd.Timestamp(o[3], unit="us") for o in sessions],
+        }
+    )
+
+
 def _session_fn(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
@@ -365,11 +331,9 @@ def _session_fn(
 
     NoTimeout on purpose: under ``availableNow`` a ProcessingTimeTimeout
     keeps the query alive with empty timeout-check batches forever, so
-    ``awaitTermination`` never returns. Open-tail flushing belongs to a
-    long-running deployment (EventTimeTimeout + watermark), not this
-    drive-to-completion harness entry.
+    the drain never returns. Open-tail flushing is
+    :func:`_session_fn_eventtime`'s job (EventTimeTimeout + watermark).
     """
-    (user_id,) = key
     gap_us = SESSION_GAP_SECONDS * 1_000_000
 
     ts_us: list[int] = []
@@ -390,70 +354,40 @@ def _session_fn(
     state.update((sid, n, start_us, end_us))
 
     if out:
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(out),
-                "session_id": [o[0] for o in out],
-                "n_events": [o[1] for o in out],
-                "session_start": [pd.Timestamp(o[2], unit="us") for o in out],
-                "session_end": [pd.Timestamp(o[3], unit="us") for o in out],
-            }
-        )
+        yield _session_rows(key[0], out)
 
 
 def _session_fn_eventtime(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """:func:`_session_fn` plus event-time timeouts: the open tail is
-    flushed once the watermark passes last-event + gap. (Round 1 found
-    ProcessingTimeTimeout never terminates under availableNow — empty
-    timeout batches forever; EventTimeTimeout is watermark-driven, so the
-    final timeout batch drains and the query stops.)"""
-    (user_id,) = key
-    gap_us = SESSION_GAP_SECONDS * 1_000_000
-
+    flushed once the watermark passes last-event + gap. EventTimeTimeout
+    is watermark-driven, so the final timeout batch drains and the query
+    stops (a ProcessingTimeTimeout would not)."""
     if state.hasTimedOut:
-        sid, n, start_us, end_us = state.get
+        tail = state.get
         state.remove()
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "session_id": [sid],
-                "n_events": [n],
-                "session_start": [pd.Timestamp(start_us, unit="us")],
-                "session_end": [pd.Timestamp(end_us, unit="us")],
-            }
-        )
+        yield _session_rows(key[0], [tail])
         return
+    yield from _session_fn(key, pdfs, state)
+    # PySpark serializes the state only after the output is exhausted, so
+    # the timeout set here (from the tail _session_fn stored) is kept.
+    state.setTimeoutTimestamp(state.get[3] // 1000 + SESSION_GAP_SECONDS * 1000)
 
-    ts_us: list[int] = []
-    for pdf in pdfs:
-        ts_us.extend(int(t.value // 1000) for t in pd.to_datetime(pdf["ts"]))
-    ts_us.sort()
 
-    sid, n, start_us, end_us = state.get if state.exists else (1, 0, None, None)
-    out: list[tuple[int, int, int, int]] = []
-    for t in ts_us:
-        if start_us is None:
-            start_us, end_us, n = t, t, 1
-        elif t - end_us > gap_us:
-            out.append((sid, n, start_us, end_us))
-            sid, n, start_us, end_us = sid + 1, 1, t, t
-        else:
-            end_us, n = t, n + 1
-    state.update((sid, n, start_us, end_us))
-    state.setTimeoutTimestamp(end_us // 1000 + SESSION_GAP_SECONDS * 1000)
-
-    if out:
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(out),
-                "session_id": [o[0] for o in out],
-                "n_events": [o[1] for o in out],
-                "session_start": [pd.Timestamp(o[2], unit="us") for o in out],
-                "session_end": [pd.Timestamp(o[3], unit="us") for o in out],
-            }
-        )
+def _sessions(
+    events: DataFrame,
+    fn=_session_fn,
+    timeout: str = GroupStateTimeout.NoTimeout,
+) -> DataFrame:
+    """Per-user stateful sessionization of an event stream with ``fn``."""
+    return events.groupBy("user_id").applyInPandasWithState(
+        fn,
+        outputStructType=_SESSION_OUT_SCHEMA,
+        stateStructType=_SESSION_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=timeout,
+    )
 
 
 def sessionize_stateful_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -466,26 +400,12 @@ def sessionize_stateful_flushed(spark: SparkSession, sf_dir: str) -> DataFrame:
     only tails still inside the gap window of the stream's frontier stay
     in state, as they must (more events could still extend them).
     """
-    events = _event_stream(spark, sf_dir).withWatermark("ts", "0 seconds")
-    sessions = events.groupBy("user_id").applyInPandasWithState(
+    sessions = _sessions(
+        _event_stream(spark, sf_dir).withWatermark("ts", "0 seconds"),
         _session_fn_eventtime,
-        outputStructType=_SESSION_OUT_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        GroupStateTimeout.EventTimeTimeout,
     )
-    name = "stream_sessions_flushed"
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(spark, sessions, "append", "stream_sessions_flushed")
 
 
 def sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -495,26 +415,8 @@ def sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     *closed* sessions (open tails stay in state) — the honest streaming
     semantics; the batch operator emits all sessions.
     """
-    events = _event_stream(spark, sf_dir)
-    sessions = events.groupBy("user_id").applyInPandasWithState(
-        _session_fn,
-        outputStructType=_SESSION_OUT_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = "stream_sessions"
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    sessions = _sessions(_event_stream(spark, sf_dir))
+    return _drain_to_memory(spark, sessions, "append", "stream_sessions")
 
 
 def sessionize_stateful_to_files(
@@ -524,24 +426,13 @@ def sessionize_stateful_to_files(
     stateful plan, but the sink is a parquet directory — results flow
     executor→files and never buffer on the driver (the memory sink above is
     harness-only). Returns a batch scan of the sink directory."""
-    events = _event_stream(spark, sf_dir)
-    sessions = events.groupBy("user_id").applyInPandasWithState(
-        _session_fn,
-        outputStructType=_SESSION_OUT_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    sessions = _sessions(_event_stream(spark, sf_dir))
+    _drain(
+        spark,
+        sessions.writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir),
     )
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return spark.read.schema(_SESSION_OUT_SCHEMA).parquet(out_dir)
 
 
@@ -594,6 +485,18 @@ def _transition_fn(
         )
 
 
+def _transitions(events: DataFrame) -> DataFrame:
+    """Per-user (from_type, to_type) pairs of an event stream, bridged
+    across micro-batches by :func:`_transition_fn`'s state."""
+    return events.groupBy("user_id").applyInPandasWithState(
+        _transition_fn,
+        outputStructType=_TRANSITION_OUT_SCHEMA,
+        stateStructType=_TRANSITION_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
 def run_streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming first-order transition extraction via
     ``applyInPandasWithState``: per-user state is ONE event (the last
@@ -607,28 +510,7 @@ def run_streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFra
     events = _event_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id", "event_type"
     )
-    pairs = events.groupBy("user_id").applyInPandasWithState(
-        _transition_fn,
-        outputStructType=_TRANSITION_OUT_SCHEMA,
-        stateStructType=_TRANSITION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    name = "stream_transitions"
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            pairs.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
-
-
-# --- streaming SCD2 (round 6) ----------------------------------------------
+    return _drain_to_memory(spark, _transitions(events), "append", "stream_transitions")
 
 
 def run_streaming_scd2(
@@ -660,8 +542,6 @@ def run_streaming_scd2(
     is one anti-join against the broadcast key set. The per-key window
     is bounded by versions per key.
     """
-    import os
-
     stream = (
         spark.readStream.format("parquet")
         .schema(schema)
@@ -697,25 +577,14 @@ def run_streaming_scd2(
             target_dir
         )
 
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(scd2_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(scd2_batch))
     return spark.read.parquet(target_dir)
-
-
-# --- streaming bloom ingest gate (round 7) -----------------------------------
 
 
 def run_streaming_bloom_gate(
     spark: SparkSession,
     sf_dir: str,
     target_dir: str,
-    n_source_files: int = 5,
 ) -> DataFrame:
     """Streaming twin of the batch ``bloom_dedup`` ingest gate: the
     corpus's set-bit position table and exact-hash set build ONCE (the
@@ -731,8 +600,6 @@ def run_streaming_bloom_gate(
     arrival order; production rebuilds the filter between cycles exactly
     to keep gating deterministic and replayable.
     """
-    import os
-
     from lakehouse_workshop_spark.catalog import load_table
     from lakehouse_workshop_spark.operators.llm_mixture import (
         BLOOM_K,
@@ -743,10 +610,9 @@ def run_streaming_bloom_gate(
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(~F.expr(NEW_BATCH_PRED)).select("text")
     # Kirsch–Mitzenmacher double hashing over ONE md5 digest per doc,
-    # identical to the batch gate's _bloom_sql (r11): h1/h2 from hex
-    # chars 1-15 / 16-30 of the digest, position_i = (h1 + i·h2') mod m
-    # with h2' forced odd. One digest per doc replaces the K+1 full-text
-    # md5 passes of the pre-r11 form.
+    # identical to the batch gate's _bloom_sql: h1/h2 from hex chars
+    # 1-15 / 16-30 of the digest, position_i = (h1 + i·h2') mod m with
+    # h2' forced odd.
     h1 = "CAST(conv(substring(dg, 1, 15), 16, 10) AS BIGINT)"
     h2 = "CAST(conv(substring(dg, 16, 15), 16, 10) AS BIGINT)"
     pos_expr = f"(h1 + i * (h2 - h2 % 2 + 1)) % {BLOOM_M}"
@@ -762,18 +628,10 @@ def run_streaming_bloom_gate(
         corpus.select(F.md5("text").alias("h")).distinct().localCheckpoint(eager=True)
     )
 
-    source_dir = os.path.join(target_dir, "_incoming")
-    docs.filter(F.expr(NEW_BATCH_PRED)).select("doc_id", "text").repartition(
-        n_source_files
-    ).write.mode("overwrite").parquet(source_dir)
-    out_dir = os.path.join(target_dir, "gated")
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
+    stream = _staged_stream(
+        docs.filter(F.expr(NEW_BATCH_PRED)).select("doc_id", "text"), target_dir
     )
+    out_dir = os.path.join(target_dir, "gated")
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.createOrReplaceTempView("bloom_gate_batch")
@@ -806,25 +664,14 @@ def run_streaming_bloom_gate(
         )
         gated.write.mode("append").parquet(out_dir)
 
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(gate_batch))
     return spark.read.parquet(out_dir)
-
-
-# --- streaming Count-Min sketch (round 8) ------------------------------------
 
 
 def run_streaming_cms(
     spark: SparkSession,
     sf_dir: str,
     target_dir: str,
-    n_source_files: int = 5,
 ) -> DataFrame:
     """Streaming twin of the batch ``cms_heavy_hitters``: events arrive as
     a file stream (one micro-batch per file) and every batch contributes
@@ -846,7 +693,6 @@ def run_streaming_cms(
     frequency monitoring over a stream — no per-key state anywhere.
     """
     import math
-    import os
 
     from lakehouse_workshop_spark.catalog import load_table
     from lakehouse_workshop_spark.operators.profiling import (
@@ -856,18 +702,8 @@ def run_streaming_cms(
     )
 
     events = load_table(spark, sf_dir, "events")
-    source_dir = os.path.join(target_dir, "_incoming")
-    events.select("event_id", "user_id").repartition(n_source_files).write.mode(
-        "overwrite"
-    ).parquet(source_dir)
+    stream = _staged_stream(events.select("event_id", "user_id"), target_dir)
     parts_dir = os.path.join(target_dir, "sketch_parts")
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("event_id BIGINT, user_id BIGINT")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
 
     def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.createOrReplaceTempView("cms_stream_batch")
@@ -881,14 +717,7 @@ def run_streaming_cms(
             """
         ).write.mode("append").parquet(parts_dir)
 
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(sketch_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(sketch_batch))
 
     spark.read.parquet(parts_dir).groupBy("d", "bucket").agg(
         F.sum("cnt").alias("cnt")
@@ -928,7 +757,6 @@ def run_streaming_pq_ingest(
     spark: SparkSession,
     sf_dir: str,
     target_dir: str,
-    n_source_files: int = 5,
 ) -> DataFrame:
     """Streaming twin of the batch ``ivf_pq_incremental``: the ingest
     partition (vec_id % 10 = 9) arrives as a file stream (one micro-batch
@@ -949,100 +777,26 @@ def run_streaming_pq_ingest(
     state is the append-only code parts table — exactly what a nightly
     100 TB embedding ingest job does, minus the object-store plumbing.
     """
-    import os
-
     from lakehouse_workshop_spark.operators.llm_ann_pq import (
-        _assign_encode_fn,
-        _corpus_pq_index,
-        _PQ_INCR_SPLIT,
-    )
-    from lakehouse_workshop_spark.operators.llm_similarity import (
-        _emb_view,
-        _SPARK_PREP,
+        _pq_incr_counts,
+        _pq_incr_index,
     )
 
-    _emb_view(spark, sf_dir)
-    prepped = spark.sql(_SPARK_PREP)
-    corpus = prepped.where(f"NOT ({_PQ_INCR_SPLIT})")
-    n = (
-        spark.table("embeddings_raw")
-        .where(f"NOT ({_PQ_INCR_SPLIT})")
-        .select("vec_id")
-        .count()
-    )
-    bc = spark.sparkContext.broadcast(_corpus_pq_index(corpus, n))
-    assign_encode = _assign_encode_fn(bc)
-    schema = "vec_id BIGINT, cid BIGINT, codes ARRAY<INT>"
-
-    # The standing index's counts (a real deployment reads these from the
-    # index's stats; re-derived here so the emission is self-contained).
-    corpus.mapInPandas(assign_encode, schema).createOrReplaceTempView(
-        "pq_stream_corpus_codes"
-    )
-
-    source_dir = os.path.join(target_dir, "_incoming")
-    (
-        spark.table("embeddings_raw")
-        .where(_PQ_INCR_SPLIT)
-        .select("vec_id", "embedding")
-        .repartition(n_source_files)
-        .write.mode("overwrite")
-        .parquet(source_dir)
-    )
+    corpus, batch, encode = _pq_incr_index(spark, sf_dir)
+    stream = _staged_stream(batch, target_dir)
     parts_dir = os.path.join(target_dir, "code_parts")
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-
     def encode_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.createOrReplaceTempView("pq_stream_batch")
-        prepped_b = batch_df.sparkSession.sql(
-            _SPARK_PREP.replace("FROM embeddings", "FROM pq_stream_batch")
-        )
-        prepped_b.mapInPandas(assign_encode, schema).write.mode(
-            "append"
-        ).parquet(parts_dir)
+        encode(batch_df).write.mode("append").parquet(parts_dir)
 
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(encode_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    spark.read.parquet(parts_dir).createOrReplaceTempView(
-        "pq_stream_batch_codes"
-    )
-    return spark.sql(
-        """
-        WITH c AS (SELECT cid, COUNT(*) AS n FROM pq_stream_corpus_codes
-                   GROUP BY cid),
-        b AS (SELECT cid, COUNT(*) AS n FROM pq_stream_batch_codes
-              GROUP BY cid)
-        SELECT COALESCE(c.cid, b.cid) AS cid,
-               CAST(COALESCE(c.n, 0) AS BIGINT) AS n_corpus,
-               CAST(COALESCE(b.n, 0) AS BIGINT) AS n_batch,
-               CAST(COALESCE(c.n, 0) + COALESCE(b.n, 0) AS BIGINT)
-                   AS n_total
-        FROM c FULL OUTER JOIN b ON c.cid = b.cid
-        """
-    )
-
-
-# --- streaming LSH near-dup ingest gate (round 12) ---------------------------
+    _drain(spark, stream.writeStream.foreachBatch(encode_batch))
+    return _pq_incr_counts(spark, encode(corpus), spark.read.parquet(parts_dir))
 
 
 def run_streaming_lsh_ingest(
     spark: SparkSession,
     sf_dir: str,
     target_dir: str,
-    n_source_files: int = 5,
 ) -> DataFrame:
     """Streaming twin of the batch ``minhash_lsh_incremental``: the
     standing corpus's MinHash signature/band table builds ONCE (the
@@ -1065,89 +819,28 @@ def run_streaming_lsh_ingest(
     ingest-sized); state is zero between batches — the signature table
     is the per-cycle snapshot, exactly like the bloom gate's filter.
     """
-    import os
-
     from lakehouse_workshop_spark.catalog import load_table
     from lakehouse_workshop_spark.operators.llm_dedup import (
+        _lsh_band_join,
+        _lsh_bands,
         _minhash_sigs_df,
         INCR_BATCH_PRED,
-        LSH_BANDS,
-        MINHASH_K,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    rows = MINHASH_K // LSH_BANDS
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"sig{b * rows + j}") for j in range(rows)]
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(LSH_BANDS)
-        ]
-    )
-    sig_arr = F.array(*[F.col(f"sig{i}") for i in range(MINHASH_K)])
-
-    def _bands(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "doc_id", sig_arr.alias("sig"), F.explode(band_structs).alias("band")
-        ).select("doc_id", "sig", "band.band_id", "band.band_hash")
-
-    corpus_bands = _bands(
+    corpus_bands = _lsh_bands(
         _minhash_sigs_df(docs.filter(~F.expr(INCR_BATCH_PRED)))
     ).localCheckpoint(eager=True)
-
-    source_dir = os.path.join(target_dir, "_incoming")
-    docs.filter(F.expr(INCR_BATCH_PRED)).select("doc_id", "text").repartition(
-        n_source_files
-    ).write.mode("overwrite").parquet(source_dir)
+    stream = _staged_stream(
+        docs.filter(F.expr(INCR_BATCH_PRED)).select("doc_id", "text"), target_dir
+    )
     out_dir = os.path.join(target_dir, "pairs")
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("doc_id BIGINT, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bsig = _minhash_sigs_df(batch_df)
-        x, y = corpus_bands.alias("x"), _bands(bsig).alias("y")
-        matches = F.aggregate(
-            F.zip_with(
-                F.col("x.sig"), F.col("y.sig"), lambda a, b: (a == b).cast("int")
-            ),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-        pairs = (
-            x.join(
-                F.broadcast(y),
-                (F.col("x.band_id") == F.col("y.band_id"))
-                & (F.col("x.band_hash") == F.col("y.band_hash")),
-            )
-            .select(
-                F.col("x.doc_id").alias("corpus_doc"),
-                F.col("y.doc_id").alias("batch_doc"),
-                (matches.cast("double") / MINHASH_K).alias("est"),
-            )
-            .groupBy("corpus_doc", "batch_doc")
-            .agg(F.first("est").alias("est_jaccard"))
-        )
+        pairs = _lsh_band_join(corpus_bands, _lsh_bands(_minhash_sigs_df(batch_df)))
         pairs.write.mode("append").parquet(out_dir)
 
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(gate_batch))
     return spark.read.parquet(out_dir)
 
 
@@ -1155,7 +848,6 @@ def run_streaming_semantic_dedup(
     spark: SparkSession,
     sf_dir: str,
     target_dir: str,
-    n_source_files: int = 5,
 ) -> DataFrame:
     """Streaming twin of ``semantic_dedup_incremental``: the standing
     corpus's kept set builds ONCE (corpus-only centroid assignment + the
@@ -1189,8 +881,6 @@ def run_streaming_semantic_dedup(
     partitions the output by ``batch_id`` and dynamically overwrites
     that partition (or MERGEs on vec_id) to get effectively-once.
     """
-    import os
-
     from lakehouse_workshop_spark.operators.llm_similarity import (
         _centroid_assign_fn,
         _emb_view,
@@ -1198,6 +888,7 @@ def run_streaming_semantic_dedup(
         _sem_incr_gate,
         _sem_dropped_mask,
         _SEM_ASSIGN_SCHEMA,
+        _SEM_GATE_SCHEMA,
         _SPARK_PREP,
         SEM_INCR_SPLIT,
     )
@@ -1222,37 +913,8 @@ def run_streaming_semantic_dedup(
         .localCheckpoint(eager=True)
     )
 
-    source_dir = os.path.join(target_dir, "_incoming")
-    spark.sql(_SPARK_PREP).where(SEM_INCR_SPLIT).repartition(
-        n_source_files
-    ).write.mode("overwrite").parquet(source_dir)
+    stream = _staged_stream(spark.sql(_SPARK_PREP).where(SEM_INCR_SPLIT), target_dir)
     out_dir = os.path.join(target_dir, "verdicts")
-
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("vec_id BIGINT, emb ARRAY<DOUBLE>, nrm DOUBLE")
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-
-    from pyspark.sql.types import (
-        BooleanType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    gate_schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("cid", LongType()),
-            StructField("brn", IntegerType()),
-            StructField("dup_vs_corpus", BooleanType()),
-            StructField("dup_vs_batch", BooleanType()),
-            StructField("kept", BooleanType()),
-        ]
-    )
 
     def gate_batch(batch_df: DataFrame, batch_id: int) -> None:
         assigned_b = batch_df.mapInPandas(
@@ -1261,7 +923,7 @@ def run_streaming_semantic_dedup(
         verdicts = (
             corpus_kept.unionByName(assigned_b)
             .groupBy("cid")
-            .applyInPandas(lambda pdf: _sem_incr_gate(pdf, False), gate_schema)
+            .applyInPandas(lambda pdf: _sem_incr_gate(pdf, False), _SEM_GATE_SCHEMA)
             # brn is micro-batch-local and dup_vs_batch is vacuously
             # False under the corpus-only gate: neither is
             # batch-boundary-invariant, so neither is emitted.
@@ -1269,14 +931,7 @@ def run_streaming_semantic_dedup(
         )
         verdicts.write.mode("append").parquet(out_dir)
 
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(gate_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, stream.writeStream.foreachBatch(gate_batch))
     # Lazy reader, like run_streaming_lsh_ingest: the registered wrapper
     # orders + checkpoints ONCE and owns workdir cleanup — a checkpoint
     # here would materialize the whole verdict set a second time.

@@ -84,7 +84,7 @@ def test_ann_lsh_buckets_kernel_matches_sql(spark, sf_dir):
     dots→buckets CTEs exactly — margin-repaired BLAS signs vs the
     interpreted left fold."""
     S._emb_view(spark, sf_dir)
-    S._ann_lsh_buckets_view(spark)
+    S._ann_lsh_buckets_view(spark, sf_dir)
     k_rows = sorted(
         (r.vec_id, int(r.tbl), r.bucket)
         for r in spark.table("ann_lsh_buckets").collect()

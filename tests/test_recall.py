@@ -443,24 +443,16 @@ def test_ivf_rebalance_splits_and_verifies_at_probe_scale(spark):
     diagnose -> decide -> act chain exists to cap."""
     from collections import Counter
 
-    import duckdb
-
     from bench import _probe_dir
     from lakehouse_workshop_spark.operators import all_oracles
     from lakehouse_workshop_spark.operators.llm_similarity import ivf_rebalance
-    from lakehouse_workshop_spark.oracle import canon_rows
+    from lakehouse_workshop_spark.oracle import canon_rows, duck_connect
 
     probe = _probe_dir(spark, SF01)
-    # duck_connect registers every testdata table and the probe dir only
-    # materializes documents/embeddings — register just what the oracle
-    # reads.
-    con = duckdb.connect()
-    con.sql(
-        "CREATE OR REPLACE VIEW embeddings AS "
-        # the probe corpus is Spark-written (a directory of part files),
-        # unlike the driver testdata's single-file parquet
-        f"SELECT * FROM read_parquet('{probe}/embeddings.parquet/*.parquet')"
-    )
+    # duck_connect globs the probe's part-file directories, skips the
+    # tables the probe lacks, and caps DuckDB at the RAM the Spark heap
+    # leaves free
+    con = duck_connect(probe)
     oracle_pdf = con.sql(all_oracles()["ivf_rebalance"]).df()
     spark_df = ivf_rebalance(spark, probe).localCheckpoint(eager=True)
     assert canon_rows(spark_df.toPandas()) == canon_rows(oracle_pdf), (
@@ -550,22 +542,16 @@ def test_drift_retrain_plan_fires_at_probe_scale(spark):
     probe scale (the same oracle the driver runs), and (2) the decision
     layer recommends retrain_centroids corpus-wide with no split rows
     (per-list surgery on a stale geometry is wasted work)."""
-    import duckdb
-
     from bench import _probe_dir
     from lakehouse_workshop_spark.operators import all_oracles
     from lakehouse_workshop_spark.operators.llm_similarity import (
         EMB_DRIFT_RETRAIN_TVD,
         drift_retrain_plan,
     )
-    from lakehouse_workshop_spark.oracle import canon_rows
+    from lakehouse_workshop_spark.oracle import canon_rows, duck_connect
 
     probe = _probe_dir(spark, SF01)
-    con = duckdb.connect()
-    con.sql(
-        "CREATE OR REPLACE VIEW embeddings AS "
-        f"SELECT * FROM read_parquet('{probe}/embeddings.parquet/*.parquet')"
-    )
+    con = duck_connect(probe)
     oracle_pdf = con.sql(all_oracles()["drift_retrain_plan"]).df()
     spark_df = drift_retrain_plan(spark, probe).localCheckpoint(eager=True)
     assert canon_rows(spark_df.toPandas()) == canon_rows(oracle_pdf), (

@@ -148,20 +148,12 @@ def test_sessionizer_state_carries_across_micro_batches(spark, sf_dir, tmp_path)
     so sessions spanning a batch boundary must be stitched from carried
     state. The closed sessions must equal the single-batch streaming run
     (sessions are a function of the data, not the batching)."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from lakehouse_workshop_spark.catalog import decode_events_ts, load_table
+    from lakehouse_workshop_spark.catalog import decode_events_ts
     from lakehouse_workshop_spark.streaming.jobs import (
+        _drain_to_memory,
         _events_raw_schema,
-        _stream_shuffle,
-        sessionize_stateful,
-        _session_fn,
-        _SESSION_OUT_SCHEMA,
-        _SESSION_STATE_SCHEMA,
+        _sessions,
     )
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     # Split raw events (pre-decode physical schema) into 3 ts-ordered
     # files so each micro-batch is a contiguous time slice.
@@ -183,24 +175,9 @@ def test_sessionizer_state_carries_across_micro_batches(spark, sf_dir, tmp_path)
         .option("maxFilesPerTrigger", "1")
         .load(str(src) + "/slice=*")
     )
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        _session_fn,
-        outputStructType=_SESSION_OUT_SCHEMA,
-        stateStructType=_SESSION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    multibatch = _drain_to_memory(
+        spark, _sessions(stream), "append", "stream_sessions_multibatch"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            sessions.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("stream_sessions_multibatch")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    multibatch = spark.table("stream_sessions_multibatch")
 
     singlebatch = sessionize_stateful(spark, sf_dir)
     assert multibatch.count() == singlebatch.count() > 0
@@ -214,18 +191,13 @@ def test_streaming_transitions_bridge_microbatches(spark, sf_dir, tmp_path):
     per trigger must yield the identical transition matrix as the batch
     window pass (boundary-crossing pairs exist only if state carries the
     last event across batches)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from lakehouse_workshop_spark.catalog import decode_events_ts
     from lakehouse_workshop_spark.operators.completions import event_transitions
     from lakehouse_workshop_spark.streaming.jobs import (
-        _TRANSITION_OUT_SCHEMA,
-        _TRANSITION_STATE_SCHEMA,
+        _drain_to_memory,
         _events_raw_schema,
-        _stream_shuffle,
-        _transition_fn,
+        _transitions,
     )
-    import tempfile
 
     raw_schema = _events_raw_schema(spark, sf_dir)
     raw = spark.read.schema(raw_schema).parquet(f"{sf_dir}/events.parquet")
@@ -246,27 +218,12 @@ def test_streaming_transitions_bridge_microbatches(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .load(str(src) + "/slice=*")
     ).select("user_id", "ts", "event_id", "event_type")
-    pairs = stream.groupBy("user_id").applyInPandasWithState(
-        _transition_fn,
-        outputStructType=_TRANSITION_OUT_SCHEMA,
-        stateStructType=_TRANSITION_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    pairs = _drain_to_memory(
+        spark, _transitions(stream), "append", "stream_transitions_multibatch"
     )
-    with tempfile.TemporaryDirectory() as ckpt, _stream_shuffle(spark):
-        q = (
-            pairs.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("stream_transitions_multibatch")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     got = {
         (r.from_type, r.to_type): r.n
-        for r in spark.table("stream_transitions_multibatch")
-        .groupBy("from_type", "to_type")
+        for r in pairs.groupBy("from_type", "to_type")
         .count()
         .withColumnRenamed("count", "n")
         .collect()
@@ -495,3 +452,30 @@ def test_semantic_incremental_dropped_corpus_not_a_target(spark):
     assert got[100] == (False, False, True), got[100]
     assert got[101] == (True, False, False), got[101]
     assert got[102][1] and not got[102][2], got[102]
+
+
+def test_staged_streaming_query_leaves_no_workdir_when_its_job_raises(
+    monkeypatch, tmp_path
+):
+    """A registered staged streaming query owns a throwaway workdir; when
+    its job raises mid-run, the workdir must still be removed."""
+    import tempfile
+
+    import pytest
+
+    from lakehouse_workshop_spark.operators import all_queries
+    from lakehouse_workshop_spark.streaming import jobs
+
+    seen = []
+
+    def failing_job(spark, sf_dir, target_dir):
+        seen.append(target_dir)
+        open(f"{target_dir}/partial.parquet", "w").close()
+        raise RuntimeError("stream failed")
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(jobs, "run_streaming_cms", failing_job)
+    with pytest.raises(RuntimeError, match="stream failed"):
+        all_queries()["streaming_cms_heavy_hitters"](None, "unused")
+    assert seen and seen[0].startswith(str(tmp_path))
+    assert list(tmp_path.iterdir()) == []
