@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_workshop_spark.catalog import table_rowcount
+from lakehouse_workshop_spark.kernels import nearest, unit, worker_buf
 from lakehouse_workshop_spark.operators import query
 from lakehouse_workshop_spark.operators.llm_similarity import (
     _cid_width,
@@ -36,7 +37,6 @@ from lakehouse_workshop_spark.operators.llm_similarity import (
     _SPARK_COS,
     _SPARK_PREP,
     _topk_sql,
-    _worker_buf,
     EMB_DIM,
     IVF_NLIST_MIN,
     QUERY_FILTER,
@@ -222,32 +222,18 @@ def _assign_encode_fn(bc):
         for pdf in batches:
             if not len(pdf):
                 continue
-            vecs = np.stack(pdf["emb"].to_numpy())
-            vecs /= pdf["nrm"].to_numpy()[:, None]
+            vecs = unit(pdf["emb"].to_numpy(), pdf["nrm"].to_numpy())
             n = len(vecs)
-            # raw argmax + tie repair ≡ round(·,6)-then-first-max (any
-            # index whose rounded sim equals the rounded max has raw sim
-            # within 1e-6 of the raw max), without np.round over the
-            # full b×nlist similarity block. Score and residual-diff
-            # intermediates land in reused worker buffers (_WORKER_BUFS:
-            # fresh per-batch allocations of this size were the dominant
-            # 100×-probe cost).
-            s = np.matmul(
-                vecs, c_mat.T, out=_worker_buf("enc_s", (n, len(c_mat)))
+            best = nearest(
+                np.matmul(vecs, c_mat.T, out=worker_buf("enc_s", (n, len(c_mat))))
             )
-            best = s.argmax(axis=1)
-            mx = s[np.arange(len(s)), best]
-            close = (s >= (mx - 2e-6)[:, None]).sum(axis=1) > 1
-            for i in np.nonzero(close)[0]:
-                cand = np.nonzero(s[i] >= mx[i] - 2e-6)[0]
-                best[i] = cand[np.round(s[i][cand], 6).argmax()]
             res = vecs - c_mat[best]
             if rot is not None:
                 res = np.matmul(
-                    res, rot, out=_worker_buf("enc_rot", res.shape)
+                    res, rot, out=worker_buf("enc_rot", res.shape)
                 )
             codes = np.empty((len(pdf), PQ_M), dtype=np.int32)
-            diff = _worker_buf("enc_diff", (n, PQ_K, sub))
+            diff = worker_buf("enc_diff", (n, PQ_K, sub))
             for m in range(PQ_M):
                 x = res[:, m * sub : (m + 1) * sub]
                 np.subtract(x[:, None, :], bks[m][None, :, :], out=diff)
@@ -262,6 +248,46 @@ def _assign_encode_fn(bc):
             )
 
     return assign_encode
+
+
+def _pq_prefix(prepped: DataFrame, nlist: int, coarse: str = "prefix"):
+    """Collect the IVF-PQ training prefix (``vec_id < max(nlist,
+    PQ_TRAIN_N)``, ascending) once and derive the coarse index from it:
+    returns (cent_mat, cent_ids, residuals of the prefix against its
+    nearest centroid) — the codebook training input. ``coarse="prefix"``
+    takes the ``vec_id < nlist`` rows as centroids; ``"kmeans"`` trains
+    them with :func:`_kmeans_centroids`. The sample assignment is the
+    distributed encode's rule exactly (:func:`kernels.nearest`)."""
+    bound = max(nlist, PQ_TRAIN_N)
+    prefix = prepped.where(F.col("vec_id") < bound).orderBy("vec_id").collect()
+    if not prefix:
+        raise ValueError(
+            f"IVF-PQ index build found no rows with vec_id < {bound} — the "
+            "prefix-sample rule assumes dense vec_ids starting near 0; "
+            "remap ids before indexing"
+        )
+    ids = np.array([int(r["vec_id"]) for r in prefix], dtype=np.int64)
+    xs = unit([r["emb"] for r in prefix], [r["nrm"] for r in prefix])
+    if coarse == "kmeans":
+        from lakehouse_workshop_spark.operators.llm_similarity import (
+            KMEANS_TRAIN_N,
+        )
+
+        # The collected prefix answers the trainer's emptiness guard —
+        # no extra take(1) job.
+        cent_mat = _kmeans_centroids(
+            prepped, nlist, prefix_nonempty=bool((ids < KMEANS_TRAIN_N).any())
+        )
+        cent_ids = np.arange(nlist, dtype=np.int64)
+    else:
+        is_cent = ids < nlist
+        if not is_cent.any():
+            raise ValueError(
+                f"IVF-PQ coarse-centroid prefix (vec_id < {nlist}) is empty "
+                "— dense-from-0 vec_ids required"
+            )
+        cent_mat, cent_ids = xs[is_cent], ids[is_cent]
+    return cent_mat, cent_ids, xs - cent_mat[nearest(xs @ cent_mat.T)]
 
 
 def ivf_pq_search(
@@ -312,72 +338,22 @@ def ivf_pq_search(
     prepped = spark.sql(_SPARK_PREP)
     prepped.createOrReplaceTempView(f"{tag}_prepped")
 
-    # ONE prefix collect covers both the coarse centroids (the same
-    # vec_id < nlist prefix rule as _matmul_assign/ivf_topk) and the PQ
-    # training sample; the sample's coarse assignment and the codebook
-    # training both run driver-side on that bounded slice, so the whole
-    # index build costs one count + one collect + one distributed
-    # assign-and-encode pass (the first cut of this query re-derived the
-    # centroids and the sample through _matmul_assign and paid every job
-    # twice).
-    # n from the parquet footer (table_rowcount — no job, r18): the
-    # zero-column count scan this replaces was one of the per-rep job
-    # barriers the scaling block billed to every PQ row.
+    # One prefix collect (_pq_prefix) covers both the coarse centroids
+    # (the vec_id < nlist rule of _matmul_assign/ivf_topk) and the PQ
+    # training sample, so the index build costs one collect + one
+    # distributed assign-and-encode pass; n comes from the parquet
+    # footer (table_rowcount — no job).
     n = table_rowcount(sf_dir, "embeddings")
     nlist = max(IVF_NLIST_MIN, int(n**0.5))
     nprobe, shortlist = _pq_knobs(n, nlist)
-    prefix = (
-        prepped.where(F.col("vec_id") < max(nlist, PQ_TRAIN_N))
-        .orderBy("vec_id")
-        .collect()
-    )
-    if not prefix:
-        raise ValueError(
-            "IVF-PQ index build found no rows with vec_id < "
-            f"{max(nlist, PQ_TRAIN_N)} — the prefix-sample rule assumes "
-            "dense vec_ids starting near 0; remap ids before indexing"
-        )
-    unit = np.array([r["emb"] for r in prefix], dtype=np.float64)
-    unit /= np.array([r["nrm"] for r in prefix])[:, None]
-    if coarse == "kmeans":
-        from lakehouse_workshop_spark.operators.llm_similarity import (
-            KMEANS_TRAIN_N,
-        )
-
-        # The collected prefix (vec_id < max(nlist, PQ_TRAIN_N), which at
-        # our SFs is a subset of the KMeans prefix) already answers the
-        # trainer's emptiness guard — no extra take(1) job. A corpus big
-        # enough that max(nlist, PQ_TRAIN_N) > KMEANS_TRAIN_N still
-        # answers exactly: the any() just scans more collected rows.
-        cent_mat = _kmeans_centroids(
-            prepped,
-            nlist,
-            prefix_nonempty=any(
-                int(r["vec_id"]) < KMEANS_TRAIN_N for r in prefix
-            ),
-        )
-        cent_ids = np.arange(nlist, dtype=np.int64)
-    else:
-        is_cent = np.array([int(r["vec_id"]) < nlist for r in prefix])
-        if not is_cent.any():
-            raise ValueError(
-                f"IVF-PQ coarse-centroid prefix (vec_id < {nlist}) is empty "
-                "— dense-from-0 vec_ids required"
-            )
-        cent_mat = unit[is_cent]
-        cent_ids = np.array(
-            [int(r["vec_id"]) for r in prefix if int(r["vec_id"]) < nlist],
-            dtype=np.int64,
-        )
-    # Sample assignment mirrors the distributed rule exactly: 6-dp
-    # rounding BEFORE the argmax, first maximum over cid-ascending axis.
-    s_best = np.round(unit @ cent_mat.T, 6).argmax(axis=1)
+    cent_mat, cent_ids, res = _pq_prefix(prepped, nlist, coarse)
     if rotate:
-        R, books, _, _ = _train_opq(unit - cent_mat[s_best])
+        R, books, _, _ = _train_opq(res)
         bc = spark.sparkContext.broadcast((cent_mat, cent_ids, books, R))
     else:
-        books = _train_codebooks(unit - cent_mat[s_best])
-        bc = spark.sparkContext.broadcast((cent_mat, cent_ids, books))
+        bc = spark.sparkContext.broadcast(
+            (cent_mat, cent_ids, _train_codebooks(res))
+        )
     assign_encode = _assign_encode_fn(bc)
 
     # Checkpoint the codes ALREADY hash-partitioned by cid (r17): the
@@ -408,8 +384,7 @@ def ivf_pq_search(
         prepped.where(F.expr(QUERY_FILTER)).orderBy("vec_id").collect()
     )
     q_ids = np.array([int(r["vec_id"]) for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["emb"] for r in q_rows], dtype=np.float64)
-    q_mat /= np.array([r["nrm"] for r in q_rows])[:, None]
+    q_mat = unit([r["emb"] for r in q_rows], [r["nrm"] for r in q_rows])
     sims = np.round(q_mat @ cent_mat.T, 6)
     # top-nprobe per query, ties by ascending cid (stable mergesort on
     # (-sim, cid-order) — matches the SQL ORDER BY sim DESC, cid)
@@ -478,20 +453,20 @@ def ivf_pq_search(
             vids = vids_all[start : start + ADC_BLOCK]
             # decoded slab reuses a worker buffer (row-prefix views stay
             # contiguous); the broadcast-copy form re-allocated the slab
-            # per iteration — see _WORKER_BUFS
-            dec = _worker_buf("adc_dec", (ADC_BLOCK, len(base)))[: len(codes)]
+            # per iteration — see kernels.worker_buf
+            dec = worker_buf("adc_dec", (ADC_BLOCK, len(base)))[: len(codes)]
             np.copyto(dec, base)
             for m in range(PQ_M):
                 dec[:, m * sub : (m + 1) * sub] += bks[m][codes[:, m]]
             # Score into a reused worker slab (r17): `qsub @ dec.T`
             # allocated a fresh |q_probing|×block float64 matrix per
             # slab — ~1 GB of first-touch page faults per rep at the
-            # 100× probe, the exact _WORKER_BUFS pathology. The buffer
+            # 100× probe, the page-fault cost worker_buf avoids. The buffer
             # is sized by the FULL query count so one allocation serves
             # every cluster; matmul writes row-prefix views in place
             # (only the ragged tail slab, codes < ADC_BLOCK, pays a
             # fresh allocation via the fallback).
-            sbuf = _worker_buf("adc_scores", (len(qids), ADC_BLOCK))
+            sbuf = worker_buf("adc_scores", (len(qids), ADC_BLOCK))
             if len(codes) == ADC_BLOCK and len(qsub) <= len(qids):
                 scores = np.matmul(qsub, dec.T, out=sbuf[: len(qsub)])
             else:
@@ -618,9 +593,9 @@ def exact_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Scores land (candidates × queries) in a REUSED worker
             # buffer (row-major, so per-query ops run down contiguous
             # columns and reused row-prefix views stay contiguous) — see
-            # _WORKER_BUFS for why fresh allocations here were the
+            # kernels.worker_buf for why fresh allocations here were the
             # dominant cost at the 100× probe.
-            s = np.matmul(vecs, qmat.T, out=_worker_buf("exact_s", (n, nq)))
+            s = np.matmul(vecs, qmat.T, out=worker_buf("exact_s", (n, nq)))
             for col, vid in enumerate(vids):  # mask self-hits
                 qi = qpos.get(int(vid))
                 if qi is not None:
@@ -634,16 +609,16 @@ def exact_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
             # and only the emitted cells get rounded — np.round over the
             # full batch×|Q| matrix measured ~2× the matmul itself.
             k = min(TOP_K, n)
-            p = _worker_buf("exact_p", (n, nq))
+            p = worker_buf("exact_p", (n, nq))
             np.copyto(p, s)
             p.partition(n - k, axis=0)  # in-place: no per-batch copy alloc
             thr = p[n - k]  # per-query kth-largest raw score
             # s > -1.5 drops the -2.0 self-hit sentinels: in a batch with
             # <= k rows the threshold falls to the sentinel itself and
             # the masked cell would otherwise pollute the final top-k.
-            sel = _worker_buf("exact_sel", (n, nq), np.bool_)
+            sel = worker_buf("exact_sel", (n, nq), np.bool_)
             np.greater_equal(s, thr - 2e-6, out=sel)
-            live = _worker_buf("exact_live", (n, nq), np.bool_)
+            live = worker_buf("exact_live", (n, nq), np.bool_)
             np.greater(s, -1.5, out=live)
             sel &= live
             col_idx, qi_idx = np.nonzero(sel)
@@ -862,29 +837,10 @@ def _corpus_pq_index(corpus: DataFrame, n: int):
     ``ivf_pq_search`` uses). Returns the broadcastable
     (cent_mat, cent_ids, books) triple; shared by the batch incremental
     ingest and its streaming twin so both encode bit-identically."""
-    nlist = max(IVF_NLIST_MIN, int(n**0.5))
-    prefix = (
-        corpus.where(F.col("vec_id") < max(nlist, PQ_TRAIN_N))
-        .orderBy("vec_id")
-        .collect()
+    cent_mat, cent_ids, res = _pq_prefix(
+        corpus, max(IVF_NLIST_MIN, int(n**0.5))
     )
-    if not prefix:
-        raise ValueError(
-            "PQ corpus prefix (vec_id < "
-            f"{max(nlist, PQ_TRAIN_N)}) is empty — dense-from-0 vec_ids "
-            "required"
-        )
-    unit = np.array([r["emb"] for r in prefix], dtype=np.float64)
-    unit /= np.array([r["nrm"] for r in prefix])[:, None]
-    is_cent = np.array([int(r["vec_id"]) < nlist for r in prefix])
-    cent_mat = unit[is_cent]
-    cent_ids = np.array(
-        [int(r["vec_id"]) for r in prefix if int(r["vec_id"]) < nlist],
-        dtype=np.int64,
-    )
-    s_best = np.round(unit @ cent_mat.T, 6).argmax(axis=1)
-    books = _train_codebooks(unit - cent_mat[s_best])
-    return cent_mat, cent_ids, books
+    return cent_mat, cent_ids, _train_codebooks(res)
 
 
 @query("ivf_pq_incremental", tier=2, oracle=_PQ_INCR_ORACLE)

@@ -356,9 +356,10 @@ def _minhash_sigs_df(docs: "DataFrame") -> "DataFrame":
     W = SHINGLE_WIDTH
     # Shingle chunk bound for the (K × chunk) hash slab: batch-wide
     # temporaries ((16, ~800k) int64 ×3 passes ≈ 300 MB/task) measured
-    # ~2 s/task of pure first-touch page faults on this VM (the exact
-    # _WORKER_BUFS pathology, r17 §6); a fixed-size reused slab keeps
-    # the pages warm across chunks, batches AND tasks (worker reuse).
+    # ~2 s/task of pure first-touch page faults on this VM (the
+    # pathology kernels.worker_buf exists for, r17 §6); a fixed-size
+    # reused slab keeps the pages warm across chunks, batches AND tasks
+    # (worker reuse).
     CHUNK = 1 << 16
 
     def sigs(batches):
@@ -367,9 +368,7 @@ def _minhash_sigs_df(docs: "DataFrame") -> "DataFrame":
         import numpy as np
         import pandas as pd
 
-        from lakehouse_workshop_spark.operators.llm_similarity import (
-            _worker_buf,
-        )
+        from lakehouse_workshop_spark.kernels import worker_buf
 
         md5 = hashlib.md5
         for pdf in batches:
@@ -377,6 +376,8 @@ def _minhash_sigs_df(docs: "DataFrame") -> "DataFrame":
             counts: list = []
             xs: list = []
             for doc_id, text in zip(pdf["doc_id"].to_numpy(), pdf["text"]):
+                if text is None:
+                    continue  # the SQL path's split/explode drops null text
                 toks = text.split(" ")
                 if len(toks) < W:
                     continue
@@ -396,8 +397,8 @@ def _minhash_sigs_df(docs: "DataFrame") -> "DataFrame":
             ends = np.cumsum(counts)
             ndocs = len(counts)
             mins = np.empty((MINHASH_K, ndocs), dtype=np.int64)
-            hb = _worker_buf("mh_h", (MINHASH_K, CHUNK), np.int64)
-            xb = _worker_buf("mh_xm", (CHUNK,), np.int64)
+            hb = worker_buf("mh_h", (MINHASH_K, CHUNK), np.int64)
+            xb = worker_buf("mh_xm", (CHUNK,), np.int64)
             d0 = 0
             pos = 0
             while d0 < ndocs:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_workshop_spark.catalog import load_table, table_rowcount
+from lakehouse_workshop_spark.kernels import nearest, unit, worker_buf
 from lakehouse_workshop_spark.operators import query
 
 TOP_K = 10
@@ -67,32 +68,6 @@ _SPARK_COS = """
 """
 
 _DUCK_COS = "list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm)"
-
-
-# Per-worker-process reusable numpy scratch buffers, keyed by (tag, shape,
-# dtype). Root cause (measured at the 100× probe, r10): every Arrow batch
-# allocated fresh 20-100 MB intermediates (score matrices, partition
-# copies, residual diffs); numpy mmaps blocks that size and munmaps them
-# on free, so EVERY batch re-faulted and re-zeroed its pages — and this
-# VM first-faults guest memory at ~0.1-0.3 GB/s serialized (96% of 32
-# CPUs in kernel page management; a 2000×6250 dgemm measured 10-16s
-# against a 0.13s steady state). Reusing one live buffer per worker
-# faults its pages exactly once per worker lifetime — precisely what a
-# long-lived executor does at 100 TB. The cache is bounded: shapes recur
-# (uniform Arrow batches + one partial tail), so entries stay in the
-# single digits per worker.
-_WORKER_BUFS: dict = {}
-
-
-def _worker_buf(tag: str, shape: tuple, dtype=None) -> "np.ndarray":
-    import numpy as np
-
-    dt = np.dtype(dtype or np.float64)
-    key = (tag, shape, dt.str)
-    buf = _WORKER_BUFS.get(key)
-    if buf is None:
-        buf = _WORKER_BUFS[key] = np.empty(shape, dtype=dt)
-    return buf
 
 
 # Rows-per-task target for the user cid repartitions feeding the BLAS
@@ -170,8 +145,6 @@ def _matmul_assign(
     the raw count is a zero-column scan; only nlist — a scalar —
     depends on it. Returns (vec_id, emb, nrm, cid, ccos).
     """
-    import numpy as np
-
     prepped = spark.sql(_SPARK_PREP)
     if n_universe is not None:
         prepped = prepped.where(F.col("vec_id") < n_universe)
@@ -182,17 +155,22 @@ def _matmul_assign(
         n = n_total
     else:
         n = spark.table("embeddings_raw").select("vec_id").count()
-    nlist = _ivf_nlist(n)
-    cent_rows = (
-        prepped.where(F.col("vec_id") < nlist).orderBy("vec_id").collect()
-    )
-    cent_mat = np.array([r["emb"] for r in cent_rows], dtype=np.float64)
-    cent_mat /= np.array([r["nrm"] for r in cent_rows])[:, None]
-    cids = np.array([r["vec_id"] for r in cent_rows], dtype=np.int64)
-    bc = spark.sparkContext.broadcast((cent_mat, cids))
+    bc = _prefix_centroids(spark, prepped, _ivf_nlist(n))
     return prepped.mapInPandas(
         _centroid_assign_fn(bc, "ivf_assign_s"), _SEM_ASSIGN_SCHEMA
     )
+
+
+def _prefix_centroids(spark: SparkSession, prepped: DataFrame, nlist: int):
+    """Broadcast (cent_mat, cids): the unit vectors of ``prepped``'s
+    ``vec_id < nlist`` prefix, cid-ascending — the prefix-centroid rule
+    every IVF geometry in this module uses."""
+    import numpy as np
+
+    rows = prepped.where(F.col("vec_id") < nlist).orderBy("vec_id").collect()
+    cent_mat = unit([r["emb"] for r in rows], [r["nrm"] for r in rows])
+    cids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    return spark.sparkContext.broadcast((cent_mat, cids))
 
 
 def _topk_sql(cos: str, prep: str) -> str:
@@ -747,7 +725,7 @@ def _ann_lsh_buckets_view(spark: SparkSession, sf_dir: str) -> None:
             nr = len(m)
             if nr <= cap:
                 d = np.matmul(
-                    m, P.T, out=_worker_buf("lsh_dots", (cap, len(P)))[:nr]
+                    m, P.T, out=worker_buf("lsh_dots", (cap, len(P)))[:nr]
                 )
             else:
                 d = m @ P.T
@@ -1401,7 +1379,7 @@ def _sem_verdict_batch(pdf):
     import pandas as pd
 
     pdf = pdf.sort_values("crn")
-    m = np.stack(pdf["emb"].to_numpy()) / pdf["nrm"].to_numpy()[:, None]
+    m = unit(pdf["emb"].to_numpy(), pdf["nrm"].to_numpy())
     dropped = _sem_dropped_mask(m)
     return pd.DataFrame(
         {
@@ -1596,26 +1574,17 @@ def _sem_incr_centroids(spark: SparkSession):
     prefix (corpus-only rows, vec_id < nlist_c). Shared by the batch
     incremental query and its streaming twin so both assign
     bit-identically."""
-    import numpy as np
-
     n_corpus = (
         spark.table("embeddings_raw")
         .where(f"NOT ({SEM_INCR_SPLIT})")
         .select("vec_id")
         .count()
     )
-    nlist = _ivf_nlist(n_corpus)
-    cent_rows = (
-        spark.sql(_SPARK_PREP)
-        .where(f"NOT ({SEM_INCR_SPLIT})")
-        .where(F.col("vec_id") < nlist)
-        .orderBy("vec_id")
-        .collect()
+    return _prefix_centroids(
+        spark,
+        spark.sql(_SPARK_PREP).where(f"NOT ({SEM_INCR_SPLIT})"),
+        _ivf_nlist(n_corpus),
     )
-    cent_mat = np.array([r["emb"] for r in cent_rows], dtype=np.float64)
-    cent_mat /= np.array([r["nrm"] for r in cent_rows])[:, None]
-    cids = np.array([r["vec_id"] for r in cent_rows], dtype=np.int64)
-    return spark.sparkContext.broadcast((cent_mat, cids))
 
 
 def _centroid_assign_fn(bc, buf_tag: str):
@@ -1632,15 +1601,10 @@ def _centroid_assign_fn(bc, buf_tag: str):
 
         c_mat, c_ids = bc.value
         for pdf in batches:
-            m = np.stack(pdf["emb"].to_numpy()) / pdf["nrm"].to_numpy()[:, None]
+            m = unit(pdf["emb"].to_numpy(), pdf["nrm"].to_numpy())
             n = len(m)
-            s = np.matmul(m, c_mat.T, out=_worker_buf(buf_tag, (n, len(c_mat))))
-            best = s.argmax(axis=1)
-            mx = s[np.arange(n), best]
-            close = (s >= (mx - 2e-6)[:, None]).sum(axis=1) > 1
-            for i in np.nonzero(close)[0]:
-                cand = np.nonzero(s[i] >= mx[i] - 2e-6)[0]
-                best[i] = cand[np.round(s[i][cand], 6).argmax()]
+            s = np.matmul(m, c_mat.T, out=worker_buf(buf_tag, (n, len(c_mat))))
+            best = nearest(s)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -1700,10 +1664,10 @@ def _sem_incr_gate(pdf, within_batch: bool):
     corpus = pdf[~pdf["is_batch"]].sort_values(
         ["ccos", "vec_id"], ascending=[False, True]
     )
-    mb = np.stack(batch["emb"].to_numpy()) / batch["nrm"].to_numpy()[:, None]
+    mb = unit(batch["emb"].to_numpy(), batch["nrm"].to_numpy())
     dup_c = np.zeros(nb, dtype=bool)
     if len(corpus):
-        mc = np.stack(corpus["emb"].to_numpy()) / corpus["nrm"].to_numpy()[:, None]
+        mc = unit(corpus["emb"].to_numpy(), corpus["nrm"].to_numpy())
         kc = mc[~_sem_dropped_mask(mc)]
         for s in range(0, nb, SEM_VERDICT_BLOCK):
             e = min(s + SEM_VERDICT_BLOCK, nb)
@@ -1934,15 +1898,8 @@ def ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         if ns <= 1:
             sub_id = np.ones(c, dtype=np.int32)
         else:
-            m = np.stack(pdf["emb"].to_numpy()) / pdf["nrm"].to_numpy()[:, None]
-            sub = m[: min(ns, c)]
-            s = m @ sub.T
-            best = s.argmax(axis=1)
-            mx = s[np.arange(c), best]
-            close = (s >= (mx - 2e-6)[:, None]).sum(axis=1) > 1
-            for i in np.nonzero(close)[0]:
-                cand = np.nonzero(s[i] >= mx[i] - 2e-6)[0]
-                best[i] = cand[np.round(s[i][cand], 6).argmax()]
+            m = unit(pdf["emb"].to_numpy(), pdf["nrm"].to_numpy())
+            best = nearest(m @ m[: min(ns, c)].T)
             if (best == best[0]).all():
                 # Did-the-split-shrink check: every member funneled to
                 # one sub-centroid (identical-vector flood — all cosines

@@ -42,8 +42,13 @@ import functools
 import hashlib
 import inspect
 import types
+from pathlib import Path
 
 PACKAGE = "lakehouse_workshop_spark"
+# Oracle SQL may embed absolute fixture paths (the CLV golden parquet);
+# hashing them verbatim would make the governed hash depend on where the
+# repo is checked out, so the root is replaced by a fixed token first.
+REPO_ROOT = str(Path(__file__).resolve().parents[1])
 
 _MISSING = object()
 _SIMPLE = (int, float, complex, bool, str, bytes, type(None))
@@ -60,7 +65,7 @@ _SIMPLE = (int, float, complex, bool, str, bytes, type(None))
 # not bare name (r11 ADVICE) — so a genuine behavior-carrying constant
 # that happens to share a cache's name in ANOTHER module still governs.
 RUNTIME_STATE = {
-    (f"{PACKAGE}.operators.llm_similarity", "_WORKER_BUFS"),
+    (f"{PACKAGE}.kernels", "_WORKER_BUFS"),
     (f"{PACKAGE}.clv.pipeline", "_SCORED_CACHE"),
 }
 
@@ -372,7 +377,7 @@ def governed_source_hash(fn, oracle: str | None = None) -> str:
     parts = collect_sources(fn)
     blob = "\n".join(f"{k}\n{v}" for k, v in sorted(parts.items()))
     if oracle is not None:
-        blob += "\n-- oracle --\n" + oracle
+        blob += "\n-- oracle --\n" + oracle.replace(REPO_ROOT, "<repo>")
     return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 

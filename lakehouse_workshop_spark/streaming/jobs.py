@@ -881,6 +881,7 @@ def run_streaming_semantic_dedup(
     partitions the output by ``batch_id`` and dynamically overwrites
     that partition (or MERGEs on vec_id) to get effectively-once.
     """
+    from lakehouse_workshop_spark.kernels import unit
     from lakehouse_workshop_spark.operators.llm_similarity import (
         _centroid_assign_fn,
         _emb_view,
@@ -897,10 +898,8 @@ def run_streaming_semantic_dedup(
     bc = _sem_incr_centroids(spark)
 
     def _kept_only(pdf):
-        import numpy as np
-
         pdf = pdf.sort_values(["ccos", "vec_id"], ascending=[False, True])
-        m = np.stack(pdf["emb"].to_numpy()) / pdf["nrm"].to_numpy()[:, None]
+        m = unit(pdf["emb"].to_numpy(), pdf["nrm"].to_numpy())
         return pdf[~_sem_dropped_mask(m)]
 
     corpus_kept = (

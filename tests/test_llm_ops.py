@@ -38,8 +38,8 @@ def test_minhash_sigs_kernel_matches_sql(spark, sf_dir):
     path (md5 top-60-bits, universal-hash mins) — the md5-parity
     constraint the r17 verdict set before allowing the kernel swap.
     Includes adversarial tokenization: consecutive / leading / trailing
-    spaces (split keeps empties in both engines) and a doc shorter than
-    the shingle width (emits no row in both)."""
+    spaces (split keeps empties in both engines), a doc shorter than
+    the shingle width and a null text (each emits no row in both)."""
     D._docs_view(spark, sf_dir)
     sql_rows = sorted(
         spark.sql(D._minhash_sig_sql(D._SPARK_SHINGLE_INT, D._SPARK_SHINGLES))
@@ -52,10 +52,11 @@ def test_minhash_sigs_kernel_matches_sql(spark, sf_dir):
         (2, " a b c d "),            # leading/trailing space
         (3, "x y"),                  # shorter than SHINGLE_WIDTH: no row
         (4, "a b c a b c a b c"),    # heavy shingle dedup
+        (5, None),                   # null text: no row
     ]
-    spark.createDataFrame(rows, ["doc_id", "text"]).createOrReplaceTempView(
-        "documents"
-    )
+    spark.createDataFrame(
+        rows, "doc_id BIGINT, text STRING"
+    ).createOrReplaceTempView("documents")
     sql_rows = sorted(
         spark.sql(D._minhash_sig_sql(D._SPARK_SHINGLE_INT, D._SPARK_SHINGLES))
         .collect()

@@ -15,6 +15,7 @@ import hashlib
 import importlib.util
 import inspect
 import sys
+from pathlib import Path
 
 from lakehouse_workshop_spark.srchash import (
     collect_sources,
@@ -132,19 +133,38 @@ def test_hash_invariant_under_runtime_cache_mutation():
     mutated caches had leaked into dependent queries' hashes. Pins the
     RUNTIME_STATE exclusion."""
     import lakehouse_workshop_spark.clv.pipeline as P
-    import lakehouse_workshop_spark.operators.llm_similarity as S
+    import lakehouse_workshop_spark.kernels as K
     from lakehouse_workshop_spark.srchash import registry_hash
 
     names = ("ivf_topk", "clv_distributed", "exact_topk")
     before = {n: registry_hash(n) for n in names}
-    S._WORKER_BUFS["__scratch__"] = object()
+    K._WORKER_BUFS["__scratch__"] = object()
     P._SCORED_CACHE[("__scratch__",)] = object()
     try:
         after = {n: registry_hash(n) for n in names}
     finally:
-        S._WORKER_BUFS.pop("__scratch__", None)
+        K._WORKER_BUFS.pop("__scratch__", None)
         P._SCORED_CACHE.pop(("__scratch__",), None)
     assert before == after
+
+
+def test_hash_does_not_depend_on_the_checkout_path(monkeypatch):
+    """The CLV oracles embed the absolute path of their golden parquet;
+    the governed hash must not change when the repo is checked out
+    elsewhere, or every copy at another path sees them as drifted."""
+    from lakehouse_workshop_spark import srchash
+
+    root = str(Path(srchash.__file__).resolve().parents[1])
+    fn, oracle = all_queries()["clv_distributed"], all_oracles()["clv_distributed"]
+    assert root in oracle
+    here = governed_source_hash(fn, oracle)
+    # the rest of the oracle text is still governed
+    edited = oracle.replace("read_parquet", "read_csv")
+    assert governed_source_hash(fn, edited) != here
+    # the same oracle as a checkout at another directory builds it
+    moved = oracle.replace(root, "/elsewhere/checkout")
+    monkeypatch.setattr(srchash, "REPO_ROOT", "/elsewhere/checkout", raising=False)
+    assert governed_source_hash(fn, moved) == here
 
 
 def test_partial_bound_args_are_governed():
