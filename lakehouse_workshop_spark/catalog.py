@@ -283,7 +283,7 @@ def table_stats(path: str, columns: list[str] | None = None) -> list[dict]:
     import pyarrow.parquet as pq
 
     out: list[dict] = []
-    for f in sorted(_parquet_data_files(path)):
+    for f in data_files(path):
         meta = pq.ParquetFile(f).metadata
         for rg in range(meta.num_row_groups):
             group = meta.row_group(rg)
@@ -306,20 +306,30 @@ def table_stats(path: str, columns: list[str] | None = None) -> list[dict]:
     return out
 
 
-def _parquet_data_files(root: str) -> list[str]:
-    import os as _os
+def data_files(path: str) -> list[str]:
+    """The files Spark's parquet reader scans for ``path`` (a file or a
+    directory), sorted: every file under it, recursively, except names
+    the reader treats as hidden — a ``.`` prefix, a ``_`` prefix without
+    an ``=`` (``_SUCCESS``, ``_temporary/``, but not ``_k=1/``), or a
+    ``._COPYING_`` suffix (Hadoop's ``shouldFilterOutPathName``). Row
+    counts, file statistics, compaction and the DuckDB oracle all read
+    this list, so they see exactly the rows ``spark.read.parquet`` does.
+    """
 
-    if _os.path.isfile(root):
-        return [root]
+    def hidden(name: str) -> bool:
+        return (
+            name.startswith(".")
+            or (name.startswith("_") and "=" not in name)
+            or name.endswith("._COPYING_")
+        )
+
+    if os.path.isfile(path):
+        return [path]
     files = []
-    for dirpath, _d, filenames in _os.walk(root):
-        files += [
-            _os.path.join(dirpath, f)
-            for f in filenames
-            if f.endswith(".parquet") and not f.startswith("_")
-        ]
-    return files
-
+    for dirpath, dirnames, filenames in os.walk(path):
+        dirnames[:] = [d for d in dirnames if not hidden(d)]
+        files += [os.path.join(dirpath, f) for f in filenames if not hidden(f)]
+    return sorted(files)
 
 
 # --- compaction (small-file maintenance) -----------------------------------
@@ -345,20 +355,7 @@ def compact_files(
     import math
     import shutil
 
-    def _parquet_files(root: str) -> list[str]:
-        # Recursive: a Hive-partitioned layout keeps its data files in
-        # key=value subdirectories — a top-level listdir would size the
-        # table at 0 and always coalesce to 1 file.
-        out = []
-        for dirpath, _dirnames, filenames in os.walk(root):
-            out += [
-                os.path.join(dirpath, f)
-                for f in filenames
-                if f.endswith(".parquet") and not f.startswith("_")
-            ]
-        return out
-
-    files = _parquet_files(path)
+    files = data_files(path)
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(path)
@@ -380,7 +377,7 @@ def compact_files(
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)
-    after = len(_parquet_files(path))
+    after = len(data_files(path))
     return len(files), after
 
 
@@ -408,28 +405,18 @@ def decode_events_ts(df: DataFrame) -> DataFrame:
 
 def table_rowcount(sf_dir: str, name: str) -> int:
     """Exact row count of a testdata table from the parquet FOOTER
-    metadata — no Spark job (r18, guide §5: the driver should do almost
-    no data work, and a COUNT(*) job exists only to size index geometry
-    scalars). Parquet footers carry the exact ``num_rows`` per file, so
-    this equals ``COUNT(*)`` bit-for-bit; it is re-read from the input
-    on every invocation (nothing is memoized across runs). At 100 TB
+    metadata, with no Spark job. Footers carry the exact ``num_rows`` per
+    file, so the sum over :func:`data_files` equals ``COUNT(*)``; it is
+    re-read on every call (nothing is memoized across runs). At 100 TB
     the same number comes from the table format's manifest (Iceberg/
-    Delta snapshot row counts) without touching data files; on bare
-    parquet it is one footer read per file instead of a full scan job
-    with a cluster-wide barrier."""
+    Delta snapshot row counts); on bare parquet it is one footer read
+    per file instead of a full scan job with a cluster-wide barrier."""
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(root, f)
-                    ).metadata.num_rows
-        return total
-    return pq.ParquetFile(path).metadata.num_rows
+    return sum(
+        pq.read_metadata(f).num_rows
+        for f in data_files(f"{sf_dir}/{name}.parquet")
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_workshop_spark.catalog import load_table
+from lakehouse_workshop_spark.kernels import nearest
 
 # ORACLES import contract (r15 ADVICE #3): the operators package defines
 # the QUERIES/ORACLES dicts BEFORE it imports any operator module, so a
@@ -318,17 +319,17 @@ def topic_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-centroid plan as ``llm_similarity._matmul_assign``,
     replacing the r5 n×dim ⨝ labels×dim component equi-join (6
     exchanges) with a single scan + mapInPandas. The argmax pins to the
-    oracle's ``ORDER BY cosine DESC, label``: cosines round to 6 dp
-    first, and ``np.argmax`` takes the first maximum over the
+    oracle's ``ORDER BY cosine DESC, label``: ``kernels.nearest`` takes
+    the first maximum of the 6-dp-rounded cosines over the
     label-ascending centroid axis. (np.round is half-to-even vs SQL's
     half-away-from-zero — a divergence only on an exact .5 tie at the
     6th decimal, measure-zero for real cosines.)
     """
     import numpy as np
 
-    load_table(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    ).createOrReplaceTempView("embeddings")
+    from lakehouse_workshop_spark.operators.llm_similarity import _emb_view
+
+    _emb_view(spark, sf_dir)
     # |labels|×dim centroid components, DECIMAL-accumulated -> bit-equal
     # to the oracle's cent CTE. 10 labels × 64 dims: trivially collectable
     # and broadcastable at any corpus size (labels, not rows, bound it).
@@ -363,15 +364,15 @@ def topic_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             vn = np.sqrt((m * m).sum(axis=1))
-            sims = np.round((m @ cm.T) / (vn[:, None] * cn[None, :]), 6)
-            best = sims.argmax(axis=1)
+            raw = (m @ cm.T) / (vn[:, None] * cn[None, :])
+            best = nearest(raw)
             true = pdf["label"].to_numpy(dtype=np.int64)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
                     "true_label": true.astype(np.int32),
                     "assigned_label": lab[best].astype(np.int32),
-                    "cosine": sims[np.arange(len(best)), best],
+                    "cosine": np.round(raw[np.arange(len(best)), best], 6),
                     "matches_label": lab[best] == true,
                 }
             )
@@ -706,9 +707,10 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF, no weight table lookup at all in this md5 stand-in (a real
     model broadcasts its D-float weight array — same plan).
     """
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
+
+    _docs_view(spark, sf_dir)
+    docs = spark.table("documents")
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     bucket = F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint") % QC_BUCKETS
     w = (
@@ -775,9 +777,10 @@ def token_dist_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zipf-skewed tok key (AQE splits the head), source totals broadcast,
     the grand total is a 1-row cross join. Output is |sources| rows.
     """
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
+
+    _docs_view(spark, sf_dir)
+    docs = spark.table("documents")
     toks = docs.select("source", F.explode(F.split("text", " ")).alias("tok"))
     st = toks.groupBy("source", "tok").agg(F.count("*").alias("c_st"))
     st = st.localCheckpoint(eager=True)  # read by ct, ts, tt and the join
@@ -958,9 +961,10 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Raw-count smoothing uses rc+1 (every observed bucket has rc ≥ 1;
     unseen target buckets coalesce to tc=0 before their +1).
     """
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
+
+    _docs_view(spark, sf_dir)
+    docs = spark.table("documents")
     bucket = (
         F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint") % DSIR_BUCKETS
     )

@@ -747,9 +747,12 @@ def _ann_lsh_buckets_view(spark: SparkSession, sf_dir: str) -> None:
                 }
             )
 
+    # Materialized once: the candidate self-join reads it on both sides,
+    # and the sides differ (x is query-filtered), so Spark cannot reuse
+    # one side's exchange and would run the kernel twice.
     spark.sql(_SPARK_PREP).select("vec_id", "emb").mapInPandas(
         buckets, "vec_id BIGINT, tbl INT, bucket BIGINT"
-    ).createOrReplaceTempView("ann_lsh_buckets")
+    ).localCheckpoint(eager=True).createOrReplaceTempView("ann_lsh_buckets")
 
 
 def _ann_topk_lsh_sql(
@@ -2410,8 +2413,7 @@ def _hybrid_setup(spark: SparkSession, sf_dir: str) -> int:
     _docs_view(spark, sf_dir)
     _emb_view(spark, sf_dir)
     n_universe = min(
-        spark.table("documents").count(),
-        spark.table("embeddings_raw").count(),
+        table_rowcount(sf_dir, "documents"), table_rowcount(sf_dir, "embeddings")
     )
     # Partition the checkpoint BY doc_id at core-count width (r17): AQE
     # coalesces the distinct's exchange to the shuffle-volume-sized ~4

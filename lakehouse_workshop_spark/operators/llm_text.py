@@ -246,11 +246,10 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: exact content hash + min-hashed 5-token shingle
     (a 1-permutation minhash — the rolling-hash fingerprint primitive)."""
-    # single-row-group parquet: spread rows so the shingle lambdas
-    # parallelize (see llm_dedup._docs_view)
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
+
+    _docs_view(spark, sf_dir)
+    docs = spark.table("documents")
     # tokens split once (see llm_dedup._SPARK_SHINGLES note)
     # size(toks) < 5 guard: Spark's sequence(1, n) with n <= 0 emits a
     # DESCENDING ramp (1, 0, -1, ...) where DuckDB's generate_series is
@@ -310,9 +309,10 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
+
+    _docs_view(spark, sf_dir)
+    docs = spark.table("documents")
     tokens = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     tf = tokens.groupBy("doc_id", "tok").agg(F.count("*").alias("cnt"))
     # DF derives from TF (one row per doc×term) — COUNT(*) there equals
@@ -436,10 +436,9 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence) — no shuffle, chunk count proportional to corpus bytes;
     substring extraction stays inside whole-stage codegen.
     """
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    docs.createOrReplaceTempView("documents")
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
+
+    _docs_view(spark, sf_dir)
     return spark.sql(
         f"""
         SELECT doc_id,
@@ -483,9 +482,10 @@ def repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     both aggregates map-side combine, the only exchange is keyed by
     doc_id × token (uniform).
     """
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
+
+    _docs_view(spark, sf_dir)
+    docs = spark.table("documents")
     tf = (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("doc_id", "tok")
@@ -591,9 +591,10 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
+
+    _docs_view(spark, sf_dir)
+    docs = spark.table("documents")
     tf = (
         docs.select(F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("tok")
@@ -703,9 +704,10 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
+
+    _docs_view(spark, sf_dir)
+    docs = spark.table("documents")
     pairs = (
         docs.select(F.explode(F.split("text", " ")).alias("tok"))
         .where(F.length("tok") >= 2)

@@ -16,7 +16,7 @@ from dataclasses import dataclass, field
 import duckdb
 import pandas as pd
 
-from lakehouse_workshop_spark.catalog import TESTDATA_TABLES
+from lakehouse_workshop_spark.catalog import TESTDATA_TABLES, data_files
 from lakehouse_workshop_spark.session import _default_driver_mem
 
 
@@ -38,21 +38,15 @@ def duck_connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect(
         config={"memory_limit": _duck_memory_limit(), "temp_directory": ""}
     )
+    # The same file list Spark reads: probe corpora are multi-file
+    # directories holding only the corpus tables, so absent tables skip.
     for name in TESTDATA_TABLES:
-        path = f"{sf_dir}/{name}.parquet"
-        # Probe corpora are multi-file parquet DIRECTORIES holding only
-        # the corpus tables; glob directories and skip absent tables so
-        # probe-scale parity runs work (r18).
-        if os.path.isdir(path):
-            src = f"{path}/*.parquet"
-        elif os.path.exists(path):
-            src = path
-        else:
-            continue
-        con.sql(
-            f"CREATE OR REPLACE VIEW {name} AS "
-            f"SELECT * FROM read_parquet('{src}')"
-        )
+        files = data_files(f"{sf_dir}/{name}.parquet")
+        if files:
+            con.sql(
+                f"CREATE OR REPLACE VIEW {name} AS "
+                f"SELECT * FROM read_parquet({files!r})"
+            )
     return con
 
 

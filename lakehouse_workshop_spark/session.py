@@ -42,15 +42,13 @@ def _default_driver_mem() -> str:
 
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    Local test posture is ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
-    caller passes ``master=None`` with an external cluster manager and the same
-    SQL configs hold.
+    Local test posture is ``local[$SPARK_GRAFT_CPUS]``; on a real cluster
+    ``SPARK_GRAFT_MASTER`` names the cluster manager and the same SQL configs
+    hold. ``extra_conf`` sets or overrides any other conf.
     """
     cpus = _default_parallelism()
     # Single-threaded BLAS in the Python workers: local[N] already
@@ -62,14 +60,10 @@ def get_spark(
     # cluster sets the same via spark.executorEnv.
     os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
     os.environ.setdefault("OMP_NUM_THREADS", "1")
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    )
 
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
+        .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
         # Deterministic date semantics vs the DuckDB oracle (naive parquet ts).
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow for every pandas boundary (toPandas/createDataFrame/applyInPandas).
@@ -78,7 +72,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         # Prefer shuffled-hash over sort-merge when the build side fits
         # (guide §3.1/§9): SHJ skips both sides' sorts; measured r17 A/B
         # over the join-heavy subset: dup_span_scrub −13%, containment
@@ -95,19 +89,15 @@ def get_spark(
         # build partition can OOM an executor at scale. The estimate
         # bound is autoBroadcastJoinThreshold × shuffle partitions with
         # per-partition skew the residual exposure; a deployment that
-        # cannot tolerate it restores SMJ via SPARK_GRAFT_PREFER_SMJ
-        # and keeps only the bounded runtime conversion below. The AQE
+        # cannot tolerate it restores SMJ with
+        # extra_conf={"spark.sql.join.preferSortMergeJoin": "true"} and
+        # keeps only the bounded runtime conversion below. The AQE
         # threshold converts SMJ→SHJ at runtime only when EVERY
         # post-shuffle partition is under 64 MB; skew-join splitting
-        # stays on above. Env knobs restore the defaults for A/B
-        # re-measurement.
+        # stays on above.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "67108864"),
+            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "67108864"
         )
         # Scan-side partition sizing: 128 MB splits keep tasks executor-sized
         # at 100 TB; harmless locally.

@@ -442,3 +442,60 @@ def test_bucketed_join_is_shuffle_free(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
         spark.sql("DROP TABLE IF EXISTS bkt_orders")
         spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
+
+
+def _write_rows(path, n: int) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    pq.write_table(pa.table({"doc_id": pa.array(range(n), pa.int64())}), path)
+
+
+# Each layout: {relative file: rows, None for an empty marker file}, or None
+# for a table that is a single 10-row file. Names Spark's reader hides (`_SUCCESS`, `_temporary/`, `.`-prefixed,
+# `._COPYING_`) hold rows too, so listing them shows up as a wrong count.
+_LAYOUTS = {
+    "single_file": None,
+    "flat_success": {"part-0.parquet": 10, "part-1.parquet": 5, "_SUCCESS": None},
+    "temporary": {"part-0.parquet": 10, "_temporary/0/part-1.parquet": 10},
+    "dot_prefixed": {"part-0.parquet": 10, ".part-2.parquet": 10},
+    "copying": {"part-0.parquet": 10, "part-1.parquet._COPYING_": 10},
+    "zero_rows": {"part-0.parquet": 10, "part-1.parquet": 0},
+    "partitioned": {"k=1/part-0.parquet": 10, "k=2/part-0.parquet": 7},
+}
+
+
+@pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+def test_data_files_rowcount_and_oracle_read_what_spark_reads(
+    spark, tmp_path, layout
+):
+    """``data_files`` is the one definition of a table's files: it lists
+    what Spark's ``inputFiles()`` lists, the footer row count equals
+    Spark's ``count()``, and the DuckDB oracle reads the same rows."""
+    from urllib.parse import unquote, urlparse
+
+    from lakehouse_workshop_spark.oracle import duck_connect
+
+    path = str(tmp_path / "documents.parquet")
+    if _LAYOUTS[layout] is None:
+        _write_rows(path, 10)
+    else:
+        for rel, n in _LAYOUTS[layout].items():
+            if n is None:
+                os.makedirs(path, exist_ok=True)
+                open(os.path.join(path, rel), "w").close()
+            else:
+                _write_rows(os.path.join(path, rel), n)
+
+    df = spark.read.parquet(path)
+    spark_files = sorted(unquote(urlparse(u).path) for u in df.inputFiles())
+    assert cat.data_files(path) == spark_files
+    n = df.count()
+    assert cat.table_rowcount(str(tmp_path), "documents") == n
+    if layout != "partitioned":
+        con = duck_connect(str(tmp_path))
+        try:
+            assert con.sql("SELECT COUNT(*) FROM documents").fetchone()[0] == n
+        finally:
+            con.close()

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from lakehouse_workshop_spark.operators import all_queries
 
 Q = all_queries()
@@ -312,3 +314,76 @@ def test_semantic_dedup_verdict_shuffle_is_user_pinned(spark, sf_dir):
         "semantic_dedup's cid shuffle regressed to a planner exchange"
         " (AQE-coalescible)"
     )
+
+
+# Corpus reads routed through the one spread gate (llm_dedup._docs_view,
+# llm_similarity._emb_view). The last four localCheckpoint a token
+# reduction, so their spread runs in the checkpoint job, not in the plan
+# they return.
+SPREAD_GATED = (
+    "doc_fingerprint",
+    "doc_chunks",
+    "repetition_ratio",
+    "bpe_merge_candidates",
+    "topic_assign",
+    "quality_classifier_score",
+    "tfidf_top_terms",
+    "vocab_coverage",
+    "token_dist_shift",
+    "dsir_importance_weights",
+)
+
+
+@pytest.fixture()
+def checkpointed(spark, monkeypatch):
+    """Collects the executed plan of every DataFrame localCheckpointed
+    while the test runs."""
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
+    plans: list[str] = []
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    return plans
+
+
+def _round_robins(spark, sf_dir, name, checkpointed) -> int:
+    checkpointed.clear()
+    plan = _plan(spark, sf_dir, name)
+    return sum(p.count("RoundRobinPartitioning") for p in [plan, *checkpointed])
+
+
+def test_spread_gate_spreads_a_single_file_corpus(spark, sf_dir, checkpointed):
+    # one file scans as one task: the gate spreads it exactly once
+    for name in SPREAD_GATED:
+        n = _round_robins(spark, sf_dir, name, checkpointed)
+        assert n == 1, (name, n)
+
+
+def test_spread_gate_skips_a_multi_file_corpus(
+    spark, sf_dir, tmp_path, checkpointed
+):
+    # a table of >= core-count files already scans in parallel; a
+    # round-robin exchange there only reshuffles the whole corpus
+    from lakehouse_workshop_spark.catalog import load_table
+
+    width = spark.sparkContext.defaultParallelism
+    for table in ("documents", "embeddings"):
+        load_table(spark, sf_dir, table).repartition(width).write.parquet(
+            str(tmp_path / f"{table}.parquet")
+        )
+    for name in SPREAD_GATED:
+        n = _round_robins(spark, str(tmp_path), name, checkpointed)
+        assert n == 0, (name, n)
+
+
+def test_ann_lsh_bucket_kernel_runs_once(spark, sf_dir, checkpointed):
+    # both sides of the candidate self-join read the buckets, and the
+    # sides differ (x is query-filtered), so no exchange is reused: the
+    # view is materialized once instead of re-running the kernel per side
+    plan = _plan(spark, sf_dir, "ann_topk_lsh")
+    assert "MapInPandas" not in plan
+    assert sum(p.count("MapInPandas") for p in checkpointed) == 1

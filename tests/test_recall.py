@@ -449,7 +449,7 @@ def test_ivf_rebalance_splits_and_verifies_at_probe_scale(spark):
     from lakehouse_workshop_spark.oracle import canon_rows, duck_connect
 
     probe = _probe_dir(spark, SF01)
-    # duck_connect globs the probe's part-file directories, skips the
+    # duck_connect reads the probe's part files Spark reads, skips the
     # tables the probe lacks, and caps DuckDB at the RAM the Spark heap
     # leaves free
     con = duck_connect(probe)
