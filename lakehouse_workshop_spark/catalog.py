@@ -384,10 +384,9 @@ def compact_files(
 # --- testdata loading -----------------------------------------------------
 def decode_events_ts(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to a session-tz TIMESTAMP regardless of how
-    the datagen encoded it. Observed encodings across driver rounds:
-    TIMESTAMP(NANOS) read as int64 nanos under the legacy conf (r1-r4
-    datagen) and native ``timestamp[us]`` read as TIMESTAMP_NTZ (r5
-    datagen). Both map onto microsecond TIMESTAMP — the ns branch
+    the datagen encoded it. Observed encodings: TIMESTAMP(NANOS) read as
+    int64 nanos under the legacy conf, and native ``timestamp[us]`` read
+    as TIMESTAMP_NTZ. Both map onto microsecond TIMESTAMP — the ns branch
     truncates exactly like DuckDB's own ns→µs cast, and the NTZ branch is
     a value-preserving cast under the UTC session timezone — so oracle
     comparisons stay exact either way.

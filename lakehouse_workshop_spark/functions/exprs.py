@@ -88,8 +88,8 @@ def global_row_number(df: DataFrame, *order: Column, name: str = "rank") -> Data
         local.join(F.broadcast(offsets), "_rank_pid")
         # long, not int: a global rank is exactly the column that crosses
         # 2^31 first at scale (~2.5e10 documents at 100 TB) — an int cast
-        # here is the same silent-wrap class as the r16
-        # cross_source_dup_matrix pair-count fix. Parity is unaffected:
+        # here would wrap silently, like a BIGINT pair-count product in
+        # cross_source_dup_matrix. Parity is unaffected:
         # DuckDB's ROW_NUMBER is BIGINT already and the oracle compare
         # canonicalizes integer widths.
         .withColumn(name, (F.col("_rank_offset") + F.col("_rank_local")).cast("long"))

@@ -1,7 +1,7 @@
 """Real AVI (RIFF) container codec for the video modality — MJPEG frames.
 
-Round 7 left video as the one modality whose container needed external
-libs. It doesn't: classic AVI 1.0 is a RIFF file (the same chunk grammar
+Video's container needs no external libs: classic AVI 1.0 is a RIFF file
+(the same chunk grammar
 as our WAVE codec) whose ``movi`` list carries one ``00dc`` chunk per
 frame, and with Motion-JPEG those chunks are baseline JPEGs — which
 ``llm.jpeg`` already encodes and decodes natively. So the full video
@@ -26,9 +26,7 @@ odd-length padding) and VALIDATES the idx1 index against the movi chunks
 it actually found — offset convention: measured from the first byte of
 the 'movi' fourcc, keyframe flag 0x10 on every MJPEG frame. Mismatch
 raises; truncation raises; non-AVI raises. Loud refusal, like the other
-codecs (reference parity: the reference has no video surface at all —
-this extends the multimodal family the round-2+ verdicts graded as
-first-class).
+codecs (the reference has no video surface at all).
 """
 
 from __future__ import annotations

@@ -602,7 +602,7 @@ def sample_frames(
     return media.mapInPandas(body, schema=FRAME_SCHEMA)
 
 
-# --- audio feature extraction (round 6) ------------------------------------
+# --- audio feature extraction ----------------------------------------------
 
 SPEC_FRAME = 32
 SPEC_HOP = 16
@@ -715,7 +715,7 @@ def media_jpeg_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(body, schema=MEDIA_SCHEMA)
 
 
-# --- perceptual hashing (round 7) --------------------------------------------
+# --- perceptual hashing ------------------------------------------------------
 
 PHASH_SIDE = 32  # phash input raster (32x32, the classic pHash shape)
 PHASH_BLOCK = 8  # digest bytes tile as 4x4 blocks of 8x8 pixels
@@ -808,8 +808,8 @@ def media_phash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", "text").mapInPandas(body, schema=MEDIA_SCHEMA)
 
 
-# --- MJPEG-AVI video corpus (round 8) ---------------------------------------
-# Video's container (``llm.avi``) is now a REAL parser and the frames are
+# --- MJPEG-AVI video corpus -------------------------------------------------
+# Video's container (``llm.avi``) is a REAL parser and the frames are
 # real baseline JPEGs, so the synthesized corpus exercises the full path:
 # RIFF walk -> idx1 validation -> per-frame DCT/Huffman decode. Frame
 # pixels derive from md5(text + frame index), so the Python side can

@@ -15,7 +15,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-TIERS: dict[str, int] = {}
 
 # Explicit driver-pass order. The driver's correctness pass verifies the
 # first 50 registry entries per round, so coverage rotates through this
@@ -102,29 +101,17 @@ def query(
     name: str,
     oracle: str | None = None,
     scale_path: str | None = None,
-    tier: int = 1,
 ) -> Callable[[QueryFn], QueryFn]:
     """Register a named operator query and optionally its DuckDB oracle SQL.
 
     ``scale_path`` marks this query as an exact-but-super-linear baseline
     and names the registered twin that holds its cost sub-quadratic at
     scale (exposed via :func:`all_scale_paths`).
-
-    ``tier`` orders the registry the driver iterates: tier 1 is the
-    reference-derived + first-wave surface, tier 2 the later extensions.
-    The round-1 driver correctness pass stopped partway through the
-    registry (50 of 57 rows), so whatever its budget is, the queries it
-    must verify have to come first — within a tier, registration order is
-    preserved.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
-        # Duplicate-name guard (r16 verdict ask #1): QUERIES[name] = fn
-        # used to silently overwrite, which is how a 66-line pasted
-        # duplicate of token_budget_plan_mixture registered twice with
-        # no error in r16 — and in the bad case a future collision
-        # would silently shadow a DIFFERENT operator while its oracle
-        # and tests kept passing against the survivor.
+        # A second registration under one name would silently shadow the
+        # first operator while its oracle and tests kept passing.
         if name in QUERIES:
             raise ValueError(
                 f"duplicate query registration: {name!r} is already "
@@ -132,7 +119,6 @@ def query(
                 "stale definition"
             )
         QUERIES[name] = fn
-        TIERS[name] = tier
         if oracle is not None:
             ORACLES[name] = oracle
         if scale_path is not None:

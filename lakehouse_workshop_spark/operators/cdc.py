@@ -74,7 +74,7 @@ def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:
     return updates.unionByName(untouched.select(*updates.columns))
 
 
-@query("merge_upsert_orders", oracle=_DUCK_MERGE, tier=2)
+@query("merge_upsert_orders", oracle=_DUCK_MERGE)
 def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE the deterministic CDC batch into orders (updates + inserts +
     pass-through), via broadcast anti-join — target read once, no shuffle."""
@@ -84,7 +84,7 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merge_upsert(target, cdc_batch(spark, sf_dir), "o_orderkey")
 
 
-# --- SCD Type-2 history build (round 6) ------------------------------------
+# --- SCD Type-2 history build ----------------------------------------------
 # The other half of the lakehouse CDC story: MERGE applies changes to the
 # CURRENT table; SCD2 preserves every version with validity intervals so
 # "what was this customer's value on date D" is a range lookup. Treating
@@ -104,7 +104,7 @@ _SCD2_SQL = """
 """
 
 
-@query("scd2_customer_history", oracle=_SCD2_SQL, tier=2)
+@query("scd2_customer_history", oracle=_SCD2_SQL)
 def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension Type 2 build: every order becomes a
     versioned dimension row with [valid_from, valid_to) validity and an
@@ -141,7 +141,7 @@ _SCD2_ASOF_SQL = f"""
 """
 
 
-@query("scd2_asof_lookup", oracle=_SCD2_ASOF_SQL, tier=2)
+@query("scd2_asof_lookup", oracle=_SCD2_ASOF_SQL)
 def scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCD2 consumer: each customer's version valid AS OF
     {SCD2_ASOF_T} — the half-open interval predicate
@@ -160,7 +160,7 @@ def scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SCD2_ASOF_SQL)
 
 
-# --- snapshot diff (round 6) ------------------------------------------------
+# --- snapshot diff ----------------------------------------------------------
 # The audit half of time travel (`catalog.snapshot_write/read` hold the
 # versions): what changed between table versions, by class. Runs current
 # vs the CDC-merged next version; identical SQL text on both engines.
@@ -188,7 +188,7 @@ _SNAPSHOT_DIFF_SQL = f"""
 """
 
 
-@query("snapshot_diff_orders", oracle=_SNAPSHOT_DIFF_SQL, tier=2)
+@query("snapshot_diff_orders", oracle=_SNAPSHOT_DIFF_SQL)
 def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table-version DIFF: row counts per change class (added / changed /
     unchanged — this batch has no deletes) between the current orders

@@ -161,7 +161,7 @@ def clv_segment_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- temporal holdout validation (round 6) ---------------------------------
+# --- temporal holdout validation -------------------------------------------
 # The reference documents an offline 70/30 temporal train/validation split
 # ("we did a 70-30 split ... weekly aggregation work better in terms of
 # less error", DS_cust_lifetime_value.py:512-513) but ships no code for

@@ -392,7 +392,6 @@ FUNNEL_STAGES = ("view", "click", "purchase")
 
 @query(
     "conversion_funnel",
-    tier=2,
     oracle="""
     WITH stage_ts AS (
         SELECT user_id,
@@ -436,7 +435,6 @@ def conversion_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cohort_retention",
-    tier=2,
     oracle="""
     WITH firsts AS (
         SELECT o_custkey,
@@ -484,7 +482,6 @@ ATTR_WINDOW_SECONDS = 3600
 
 @query(
     "click_attribution",
-    tier=2,
     oracle=f"""
     SELECT p.event_id AS purchase_id, p.user_id, p.ts AS purchase_ts,
            COUNT(c.ts) AS n_clicks, MAX(c.ts) AS last_click_ts
@@ -555,7 +552,6 @@ def click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "event_transitions",
-    tier=2,
     oracle="""
     WITH ordered AS (
         SELECT user_id, event_type, ts,

@@ -1,4 +1,4 @@
-"""Event-stream analytics operators (round 7).
+"""Event-stream analytics operators.
 
 Sequence and seasonality shapes over the ``events`` table that the
 existing funnel/sessionize/attribution family doesn't cover: path
@@ -43,7 +43,7 @@ def _path_sql() -> str:
     """
 
 
-@query("user_path_trigrams", tier=2, oracle=_path_sql())
+@query("user_path_trigrams", oracle=_path_sql())
 def user_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{PATH_TOP_K} three-step event-type paths across all user
     streams — the path-mining primitive behind "what do users do right
@@ -76,7 +76,6 @@ def _seasonality_sql(hour_expr: str) -> str:
 
 @query(
     "hourly_seasonality",
-    tier=2,
     oracle=_seasonality_sql("EXTRACT(hour FROM ts)"),
 )
 def hourly_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,7 +126,6 @@ def _anomaly_sql(day_expr: str) -> str:
 
 @query(
     "daily_value_anomalies",
-    tier=2,
     oracle=_anomaly_sql("strftime(ts, '%Y-%m-%d')"),
 )
 def daily_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,14 +144,13 @@ def daily_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_anomaly_sql("date_format(ts, 'yyyy-MM-dd')"))
 
 
-# --- bucketized range join (round 8; sub-cell rewrite round 9) ---------------
+# --- bucketized range join ---------------------------------------------------
 RANGE_JOIN_WINDOW_S = 300  # "purchases within 5 minutes after the error"
 RANGE_JOIN_CELL_S = 5  # pre-aggregation grain; must divide the window
 
 
 @query(
     "range_join_error_purchases",
-    tier=2,
     oracle=f"""
     SELECT e.event_id, CAST(COUNT(p.event_id) AS BIGINT) AS n_purchases_5m
     FROM events e
@@ -182,22 +179,18 @@ def range_join_error_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact timestamp predicate — traffic in 2·{RANGE_JOIN_CELL_S}s per
     error, bounded even when platform-wide traffic-per-window is not.
 
-    Interior form (round 12): the inclusive running sum ``cum(x)`` =
+    Interior form: the inclusive running sum ``cum(x)`` =
     purchases in cells ≤ x is materialized ONCE over the union of the
     (cell, cnt) table and two zero-weight probe points per error, via
     the two-pass range-partitioned :func:`global_cumsum` (no
     single-partition window); each error then reads
     ``cum(c0+{RANGE_JOIN_WINDOW_S // RANGE_JOIN_CELL_S - 1}) - cum(c0)``
-    as a signed sum over its own two probe rows. Rounds 8-11 instead
-    exploded the {RANGE_JOIN_WINDOW_S // RANGE_JOIN_CELL_S - 1} interior
-    cells per error into an equi-join + re-aggregation — still linear,
-    but with a W/C = {RANGE_JOIN_WINDOW_S // RANGE_JOIN_CELL_S}× row
-    multiplier whose transient working set (~20 GB at the 100× probe:
-    118M exploded rows + per-error hash-agg state) made the row's wall
-    time fault-bound on this box (r11 verdict "What's wrong #1": the
-    microVM serializes first-touch page faults, and heap the GC
-    uncommits between bench reps loses host backing — measured 993s of
-    kernel CPU vs 167s of user CPU on a 70s rep). The cumsum carries
+    as a signed sum over its own two probe rows. Exploding the
+    {RANGE_JOIN_WINDOW_S // RANGE_JOIN_CELL_S - 1} interior cells per
+    error into an equi-join + re-aggregation is also linear, but with a
+    W/C = {RANGE_JOIN_WINDOW_S // RANGE_JOIN_CELL_S}× row multiplier
+    whose transient working set is ~20 GB at the 100× probe (118M
+    exploded rows + per-error hash-agg state). The cumsum carries
     |cells| + 2·|errors| rows through one range exchange — the same
     count reduction a 1000-executor cluster wants, where the explode's
     W/C multiplier is shuffle volume.
@@ -217,7 +210,7 @@ def range_join_error_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIV truncates toward zero, which equals floor only for non-negative
     micros — so the cell expression asserts post-epoch in-plan
     (``assert_true``): a pre-1970 fixture fails LOUDLY instead of
-    silently mis-bucketing (r9 ADVICE).
+    silently mis-bucketing.
     """
     from pyspark.sql import functions as F
 

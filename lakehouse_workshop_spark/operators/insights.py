@@ -101,7 +101,6 @@ def customer_value_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sales_cube",
-    tier=2,
     oracle="""
     SELECT CAST(year(o_orderdate) AS INT) AS order_year,
            o_orderstatus,
@@ -129,7 +128,6 @@ def sales_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "order_percentiles",
-    tier=2,
     scale_path="order_percentiles_approx",
     oracle="""
     SELECT o_orderstatus,
@@ -164,7 +162,6 @@ def order_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_spend_quartiles",
-    tier=2,
     oracle="""
     WITH spend AS (
         SELECT c.c_nationkey,
@@ -210,7 +207,6 @@ def customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "order_percentiles_approx",
-    tier=2,
     oracle="""
     SELECT o_orderstatus,
            ROUND(quantile_cont(o_totalprice, 0.25), 6) AS p25_exact,

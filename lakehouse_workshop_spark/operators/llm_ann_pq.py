@@ -1,4 +1,4 @@
-"""Product-quantized ANN (IVF-PQ) and PCA spectrum over embeddings (round 7).
+"""Product-quantized ANN (IVF-PQ) and PCA spectrum over embeddings.
 
 ``ivf_topk`` / ``ivf_topk_kmeans`` keep full vectors in every inverted
 list; at 100 TB the candidate scan's memory traffic IS the search cost.
@@ -56,11 +56,10 @@ ADC_BLOCK = 4096  # decoded-slab rows: peak ADC task memory = ADC_BLOCK×dim
 
 
 def _pq_knobs(n: int, nlist: int) -> tuple[int, int]:
-    """Scale-derived search knobs (round 10: the full-parity sweep at
-    sf0.1 caught the constant knobs failing the recall contract the
-    driver's smaller SF never stressed — coverage was 0.43 at nprobe=8/44
-    lists, and even full coverage put only 40% of true neighbors in a
-    top-100 shortlist of the 32-bit codes on this near-iid corpus).
+    """Scale-derived search knobs. Constant knobs fail the recall
+    contract at sf0.1: coverage was 0.43 at nprobe=8/44 lists, and even
+    full coverage put only 40% of true neighbors in a top-100 shortlist
+    of the 32-bit codes on this near-iid corpus.
 
     nprobe = max(floor, ⌈3·√nlist⌉): probed-candidate volume is
     n·nprobe/nlist = 3n/√nlist = 3·n^(3/4) — still sublinear (fixed
@@ -177,7 +176,7 @@ def _kmeans_centroids(
     ``prefix_nonempty`` lets a caller that already knows whether rows with
     vec_id < KMEANS_TRAIN_N exist (ivf_pq_search collects a superset
     prefix anyway) skip the guard's take(1) — one fewer Spark job per
-    index build (r9 verdict ask #5). Returns (nlist, dim); row i is
+    index build. Returns (nlist, dim); row i is
     centroid of cluster id i."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -299,9 +298,9 @@ def ivf_pq_search(
     quantization to {PQ_M}×4-bit codes, ADC candidate scoring against the
     decoded approximations, shortlist, exact re-rank by id — returning
     (query_id, vec_id, cosine, rnk) like the exact search. nprobe and the
-    shortlist are DERIVED from the index geometry (:func:`_pq_knobs`,
-    round 10): constant knobs pass the contract at the driver's SF while
-    coverage decays as n^(-1/2) — the sf0.1 full-parity sweep caught it.
+    shortlist are DERIVED from the index geometry (:func:`_pq_knobs`):
+    constant knobs pass the contract at small SF while coverage decays
+    as n^(-1/2).
 
     ``coarse="kmeans"`` swaps the prefix-point coarse quantizer for
     MLlib-learned centroids — the same bounded-sample trainer
@@ -356,15 +355,14 @@ def ivf_pq_search(
         )
     assign_encode = _assign_encode_fn(bc)
 
-    # Checkpoint the codes ALREADY hash-partitioned by cid (r17): the
+    # Checkpoint the codes ALREADY hash-partitioned by cid: the
     # ADC stage is groupBy("cid").applyInPandas, whose required
     # distribution this partitioning satisfies — the per-rep cid
     # exchange (written from the ~3 AQE-coalesced partitions the
     # checkpoint otherwise inherits) disappears from the scoring path.
-    # Width scales with the corpus (r18, _cid_width): full core width
+    # Width scales with the corpus (_cid_width): full core width
     # at the 100× probe and beyond, a handful of tasks at the base SF
-    # where the fixed 32-way form was scheduling overhead (the driver
-    # read base-SF ivf_pq_topk_kmeans 0.69× after r17).
+    # where a fixed 32-way form is scheduling overhead.
     codes_df = (
         prepped.mapInPandas(
             assign_encode, "vec_id BIGINT, cid BIGINT, codes ARRAY<INT>"
@@ -458,8 +456,8 @@ def ivf_pq_search(
             np.copyto(dec, base)
             for m in range(PQ_M):
                 dec[:, m * sub : (m + 1) * sub] += bks[m][codes[:, m]]
-            # Score into a reused worker slab (r17): `qsub @ dec.T`
-            # allocated a fresh |q_probing|×block float64 matrix per
+            # Score into a reused worker slab: `qsub @ dec.T` would
+            # allocate a fresh |q_probing|×block float64 matrix per
             # slab — ~1 GB of first-touch page faults per rep at the
             # 100× probe, the page-fault cost worker_buf avoids. The buffer
             # is sized by the FULL query count so one allocation serves
@@ -645,7 +643,7 @@ def exact_topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("exact_topk", tier=2, oracle=_topk_sql(_DUCK_COS, _DUCK_PREP),
+@query("exact_topk", oracle=_topk_sql(_DUCK_COS, _DUCK_PREP),
        scale_path="ivf_topk")
 def exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BLAS exact search as a first-class registered query: identical
@@ -667,7 +665,6 @@ def exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivf_pq_topk",
-    tier=2,
     oracle=f"""
     WITH e AS ({_DUCK_PREP})
     SELECT COUNT(*) AS n_queries, TRUE AS recall_ok
@@ -705,7 +702,6 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivf_pq_topk_kmeans",
-    tier=2,
     oracle=f"""
     WITH e AS ({_DUCK_PREP})
     SELECT COUNT(*) AS n_queries, TRUE AS recall_ok
@@ -746,7 +742,6 @@ def ivf_pq_topk_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ivf_opq_topk",
-    tier=2,
     oracle=f"""
     WITH e AS ({_DUCK_PREP})
     SELECT COUNT(*) AS n_queries, TRUE AS recall_ok
@@ -791,7 +786,7 @@ def ivf_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- incremental ingest (round 10) -------------------------------------------
+# --- incremental ingest ------------------------------------------------------
 # The dedup family has per-ingest shapes (dedup_incremental,
 # minhash_lsh_incremental); this is the vector-family mirror: assign a NEW
 # batch to the EXISTING coarse centroids + codebooks — broadcast both, one
@@ -843,7 +838,7 @@ def _corpus_pq_index(corpus: DataFrame, n: int):
     return cent_mat, cent_ids, _train_codebooks(res)
 
 
-@query("ivf_pq_incremental", tier=2, oracle=_PQ_INCR_ORACLE)
+@query("ivf_pq_incremental", oracle=_PQ_INCR_ORACLE)
 def ivf_pq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF-PQ ingest: build the index (prefix coarse
     centroids + PQ codebooks, both trained on the CORPUS partition only,
@@ -926,7 +921,6 @@ def _pq_incr_counts(
 
 @query(
     "embedding_pca_spectrum",
-    tier=2,
     oracle=f"""
     WITH x AS (
         SELECT g.i AS dim, CAST(embedding[g.i] AS DOUBLE) AS v

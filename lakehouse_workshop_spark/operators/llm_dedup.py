@@ -91,14 +91,12 @@ def _docs_view(spark: SparkSession, sf_dir: str) -> None:
     # pipelined into it — the shingle/token lambdas, the expensive part of
     # these queries) would run on ONE core. Spreading the raw text first
     # costs a ~MB shuffle and parallelizes the compute. The spread is
-    # CONDITIONAL (r18, guide §2.4): a round-robin REPARTITION_BY_NUM
-    # never coalesces away (the old comment's "coalesces into AQE's
-    # plan" was wrong — it always executes), so when the input already
-    # splits to >= core-count scan tasks (the 32-file probe corpora,
-    # any real multi-file table) it was a full shuffle of the text
-    # payload per rep — 83 MB on every dedup/ngram row at the 100×
-    # probe, the whole corpus at 100 TB. Row order is all it changes;
-    # every consumer is row-order-independent.
+    # CONDITIONAL: a round-robin REPARTITION_BY_NUM never coalesces away,
+    # so when the input already splits to >= core-count scan tasks (the
+    # 32-file probe corpora, any real multi-file table) it would be a full
+    # shuffle of the text payload per rep — 83 MB on every dedup/ngram row
+    # at the 100× probe, the whole corpus at 100 TB. Row order is all it
+    # changes; every consumer is row-order-independent.
     docs = load_table(spark, sf_dir, "documents")
     if len(docs.inputFiles()) >= spark.sparkContext.defaultParallelism:
         docs.createOrReplaceTempView("documents")
@@ -324,13 +322,13 @@ def _minhash_sig_sql(shingle_int: str, shingles_cte: str) -> str:
 
 
 def _minhash_sigs_df(docs: "DataFrame") -> "DataFrame":
-    """Arrow-kernel twin of ``_minhash_sig_sql``'s Spark side (r18,
-    guide §4.2): tokenize → shingle → md5 → 16 universal-hash MINs per
+    """Arrow-kernel twin of ``_minhash_sig_sql``'s Spark side:
+    tokenize → shingle → md5 → 16 universal-hash MINs per
     doc, all inside one ``mapInPandas`` pass — no explode, no groupBy
     shuffle (each doc's signature completes within its row), and the
     md5/tokenize work runs in C (hashlib + numpy) instead of one
     interpreted higher-order-function lambda chain per shingle.
-    Profiled r17: the SQL form cost ~3.5 min of CPU over 24.2M shingles
+    Profiled: the SQL form cost ~3.5 min of CPU over 24.2M shingles
     at the 100× probe — tokenize+md5 evenly spread but paying codegen'd
     JVM string work per shingle.
 
@@ -357,7 +355,7 @@ def _minhash_sigs_df(docs: "DataFrame") -> "DataFrame":
     # Shingle chunk bound for the (K × chunk) hash slab: batch-wide
     # temporaries ((16, ~800k) int64 ×3 passes ≈ 300 MB/task) measured
     # ~2 s/task of pure first-touch page faults on this VM (the
-    # pathology kernels.worker_buf exists for, r17 §6); a fixed-size
+    # pathology kernels.worker_buf exists for); a fixed-size
     # reused slab keeps the pages warm across chunks, batches AND tasks
     # (worker reuse).
     CHUNK = 1 << 16
@@ -587,7 +585,6 @@ def _band_stats_sql(sig_sql: str) -> str:
 
 @query(
     "minhash_band_stats",
-    tier=2,
     oracle=_band_stats_sql(_minhash_sig_sql(_DUCK_SHINGLE_INT, _DUCK_SHINGLES)),
 )
 def minhash_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -897,9 +894,9 @@ def connected_components(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
 
         Equal counts + equal SUM(hash(u, v)) ⟺ set equality up to a
         vanishing hash-collision probability (both sets are distinct, the
-        sum is order-independent). Replaces the r3 count + ``exceptAll``
-        probe (two extra passes per round over the engine's most expensive
-        iterative operator).
+        sum is order-independent), so convergence costs no count +
+        ``exceptAll`` probe (two extra passes per round over the engine's
+        most expensive iterative operator).
         """
         from pyspark.sql import Observation
 
@@ -959,7 +956,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
     return member.union(roots)
 
 
-@query("near_dup_clusters", tier=2, oracle=_CLUSTERS_ORACLE)
+@query("near_dup_clusters", oracle=_CLUSTERS_ORACLE)
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the MinHash-LSH near-pair graph — the
     step that turns pairwise matches into dedup decisions (one
@@ -1085,7 +1082,6 @@ def _chunk_dedup_sql(explode_fn: str, seq_fn: str) -> str:
 
 @query(
     "chunk_dedup",
-    tier=2,
     oracle=_chunk_dedup_sql("unnest", "generate_series"),
 )
 def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1113,7 +1109,7 @@ def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(spark_sql)
 
 
-# --- n-gram novelty score (round 6) ----------------------------------------
+# --- n-gram novelty score --------------------------------------------------
 
 
 def _novelty_sql(shingles: str) -> str:
@@ -1131,7 +1127,7 @@ def _novelty_sql(shingles: str) -> str:
     """
 
 
-@query("ngram_novelty", tier=2, oracle=_novelty_sql(_DUCK_SHINGLES))
+@query("ngram_novelty", oracle=_novelty_sql(_DUCK_SHINGLES))
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document novelty: the share of a doc's distinct
     {SHINGLE_WIDTH}-gram shingles that occur in NO other document —
@@ -1154,7 +1150,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_novelty_sql(_SPARK_SHINGLES))
 
 
-# --- incremental near-dedup: batch vs corpus (round 6) ---------------------
+# --- incremental near-dedup: batch vs corpus -------------------------------
 # The per-ingest production shape of minhash_lsh_pairs: an incoming batch
 # (the llm_pipeline NEW_BATCH_PRED slice) is checked against the EXISTING
 # corpus only — no corpus-side self-join ever runs. The batch band table
@@ -1190,7 +1186,6 @@ def _lsh_incremental_sql(sig_sql: str) -> str:
 
 @query(
     "minhash_lsh_incremental",
-    tier=2,
     oracle=_lsh_incremental_sql(_minhash_sig_sql(_DUCK_SHINGLE_INT, _DUCK_SHINGLES)),
 )
 def minhash_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1265,14 +1260,12 @@ def _lsh_band_join(corpus_bands: DataFrame, batch_bands: DataFrame) -> DataFrame
     )
 
 
-# --- cross-source duplication matrix (round 6) -----------------------------
+# --- cross-source duplication matrix ---------------------------------------
 
-# r16: the queued r15 overflow debt is PAID — pair counts used to
-# multiply per-(hash, source) duplicate counts in BIGINT, so
-# cnt*(cnt-1)/2 wrapped once a single text had ~4.3e9 copies in one
-# source (degenerate boilerplate at 100 TB: empty strings, cookie
-# banners), the drift_retrain_plan/token_dist_shift divergence class.
-# Every count product now promotes to DECIMAL(38,0) BEFORE multiplying,
+# Pair counts never multiply duplicate counts in BIGINT: cnt*(cnt-1)/2
+# would wrap once a single text had ~4.3e9 copies in one source
+# (degenerate boilerplate at 100 TB: empty strings, cookie banners).
+# Every count product promotes to DECIMAL(38,0) BEFORE multiplying,
 # and the /2 folds into whichever factor of cnt·(cnt−1) is even via
 # integer division (the only dialect split: DuckDB `//` vs Spark `div`)
 # so no decimal value is ever divided — exact at any cnt. The emitted
@@ -1312,7 +1305,7 @@ def _dup_matrix_sql(intdiv: str, hs_rel: str | None = None) -> str:
     """
 
 
-@query("cross_source_dup_matrix", tier=2, oracle=_dup_matrix_sql("({x}) // 2"))
+@query("cross_source_dup_matrix", oracle=_dup_matrix_sql("({x}) // 2"))
 def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which sources duplicate each other: for every source pair (incl.
     a source against itself), the number of exact-duplicate document
@@ -1333,7 +1326,7 @@ def cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_dup_matrix_sql("({x}) div 2"))
 
 
-# --- cross-source NEAR-dup matrix (round 12) --------------------------------
+# --- cross-source NEAR-dup matrix -------------------------------------------
 # cross_source_dup_matrix finds sources that copy each other VERBATIM;
 # mirror sites and scraper farms that lightly rewrite (ads injected,
 # boilerplate swapped, tokens dropped) are invisible to the md5 join but
@@ -1370,7 +1363,6 @@ def _near_dup_matrix_sql(pairs_sql: str) -> str:
 
 @query(
     "cross_source_near_dup_matrix",
-    tier=2,
     oracle=_near_dup_matrix_sql(
         _lsh_pairs_sql(_minhash_sig_sql(_DUCK_SHINGLE_INT, _DUCK_SHINGLES))
     ),
@@ -1415,7 +1407,7 @@ def cross_source_near_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- duplicated-span statistics (round 6) ----------------------------------
+# --- duplicated-span statistics --------------------------------------------
 # Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
 # Better") deduplicates at SUBSTRING granularity: a doc is mostly novel yet
 # still carries a long verbatim span copied corpus-wide. The family here
@@ -1472,7 +1464,7 @@ def _dup_span_sql(shingle_pos: str) -> str:
     """
 
 
-@query("dup_span_stats", tier=2, oracle=_dup_span_sql(_DUCK_SHINGLE_POS))
+@query("dup_span_stats", oracle=_dup_span_sql(_DUCK_SHINGLE_POS))
 def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document verbatim-span statistics: islands of CONSECUTIVE
     {SHINGLE_WIDTH}-gram shingle positions whose shingle also occurs in
@@ -1499,7 +1491,7 @@ def dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_dup_span_sql(_SPARK_SHINGLE_POS))
 
 
-# --- duplicate-span SCRUB (round 10) ----------------------------------------
+# --- duplicate-span SCRUB ---------------------------------------------------
 # dup_span_stats REPORTS the Lee et al. substring-duplication signal; this
 # operator ACTS on it: every token position covered by a cross-document
 # duplicated shingle occurrence is removed UNLESS that occurrence is the
@@ -1608,7 +1600,6 @@ def _span_scrub_sql(
 
 @query(
     "dup_span_scrub",
-    tier=2,
     oracle=_span_scrub_sql(
         _DUCK_SHINGLE_POS, _DUCK_TOKEN_POS,
         "{{'doc_id': {a}, 'pos': {b}}}", "unnest", "generate_series",
@@ -1657,7 +1648,7 @@ def dup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(spark_sql)
 
 
-# --- asymmetric containment (round 8) ----------------------------------------
+# --- asymmetric containment --------------------------------------------------
 # Jaccard is symmetric resemblance; CONTAINMENT C(A→B) = |S(A)∩S(B)|/|S(A)|
 # (Broder 1997, "On the resemblance and containment of documents") is the
 # asymmetric signal that catches a small doc embedded in a big one —
@@ -1698,7 +1689,6 @@ def _containment_sql(shingles_cte: str, df_capped: bool) -> str:
 
 @query(
     "ngram_containment_pairs",
-    tier=2,
     oracle=_containment_sql(_DUCK_SHINGLES, df_capped=False),
     scale_path="ngram_containment_capped",
 )
@@ -1720,7 +1710,6 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ngram_containment_capped",
-    tier=2,
     oracle=_containment_sql(_DUCK_SHINGLES, df_capped=True),
 )
 def ngram_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1765,7 +1754,7 @@ def ngram_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- near-dup keep-canonical (round 14) --------------------------------------
+# --- near-dup keep-canonical -------------------------------------------------
 # The near-dup twin of `dedup_keep_canonical`: exact dedup keeps the min
 # doc_id per identical-content group (every copy is the same, so any
 # representative works); near-dup copies DIFFER, so the keeper should be
@@ -1778,7 +1767,6 @@ def ngram_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "near_dup_keep_canonical",
-    tier=2,
     oracle=f"""
     WITH clusters AS ({_CLUSTERS_ORACLE}),
     ranked AS (

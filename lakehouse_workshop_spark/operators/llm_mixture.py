@@ -1,4 +1,4 @@
-"""Corpus mixture, ordering, and ingest-gating operators (round 7).
+"""Corpus mixture, ordering, and ingest-gating operators.
 
 The data-curation decisions a pretraining pipeline makes BETWEEN dedup
 and training: what to sample from each source (mixture weights), what
@@ -68,7 +68,6 @@ def _mixture_sql(split_len: str) -> str:
 
 @query(
     "domain_mixture_weights",
-    tier=2,
     oracle=_mixture_sql("len(string_split(text, ' '))"),
 )
 def domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,7 +99,7 @@ def _lang_mix_sql() -> str:
     """
 
 
-@query("lang_source_mix", tier=2, oracle=_lang_mix_sql())
+@query("lang_source_mix", oracle=_lang_mix_sql())
 def lang_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language composition per source — the crosstab a mixture audit
     starts from (a source whose language mix shifts between crawls is the
@@ -139,7 +138,6 @@ def _entropy_sql(explode_expr: str) -> str:
 
 @query(
     "token_entropy",
-    tier=2,
     oracle=_entropy_sql("unnest(string_split(text, ' '))"),
 )
 def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -193,7 +191,6 @@ def _zipf_sql(split_tok: str) -> str:
 
 @query(
     "zipf_slope",
-    tier=2,
     oracle=_zipf_sql("unnest(string_split(text, ' '))"),
 )
 def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,7 +201,7 @@ def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the vocabulary never ranks globally — a top-k cut (per-
     partition partial top-k, single reduce) precedes the 1000-row window,
-    per the ``hot_keys_events`` pattern round 5's verdict mandated. The
+    per the ``hot_keys_events`` pattern. The
     fit itself is closed-form over DECIMAL moment sums (regr_slope would
     sum doubles in partition order).
     """
@@ -249,7 +246,6 @@ def _curriculum_sql(split_len: str) -> str:
 
 @query(
     "curriculum_stages",
-    tier=2,
     oracle=_curriculum_sql("len(string_split(text, ' '))"),
 )
 def curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,21 +270,17 @@ BLOOM_M = 1 << 20  # bits
 BLOOM_K = 4  # hash functions
 
 
-# Kirsch–Mitzenmacher double hashing (r11): ONE md5 digest per document
+# Kirsch–Mitzenmacher double hashing: ONE md5 digest per document
 # yields both base hashes (hex chars 1-15 and 16-30 → 60-bit ints), and
 # the K probe positions are g_i = (h1 + i·h2') mod m with h2' forced odd
 # — asymptotically the same false-positive behavior as K independent
 # hash functions (Kirsch & Mitzenmacher, ESA 2006, "Less Hashing, Same
-# Performance"), at 1/K the hashing cost. The pre-r11 form md5'd the
-# FULL text K+1 times per doc (K prefixed probe hashes + the exact-dup
-# hash) through per-hash string concats — the allocation profile that
-# made the 10× probe row maximally exposed to the host re-faulting tax;
-# this form computes exactly one digest per doc and reuses it for the
-# exact check. With h2' odd and m a power of two, the K positions of one
-# doc are pairwise distinct for K < m, so COUNT over the position join
-# is exact. Bit positions (hence the false-positive set) differ from the
-# pre-r11 scheme; the oracle recomputes the same positions, and the
-# no-false-negative contract is unchanged (an exact dup shares the
+# Performance"), at 1/K the hashing cost: exactly one digest per doc,
+# reused for the exact check, instead of md5'ing the full text K+1 times
+# through per-hash string concats. With h2' odd and m a power of two,
+# the K positions of one doc are pairwise distinct for K < m, so COUNT
+# over the position join is exact. The oracle recomputes the same
+# positions, and there are no false negatives (an exact dup shares the
 # corpus doc's digest, hence all K positions).
 _SPARK_BLOOM_H = "CAST(conv(substring(dg, {s}, 15), 16, 10) AS BIGINT)"
 _DUCK_BLOOM_H = "('0x' || substr(dg, {s}, 15))::BIGINT"
@@ -330,7 +322,6 @@ def _bloom_sql(md5_h: str, lateral: str) -> str:
 
 @query(
     "bloom_dedup",
-    tier=2,
     oracle=_bloom_sql(
         _DUCK_BLOOM_H, f", generate_series(0, {BLOOM_K - 1}) AS t(i)"
     ),
@@ -342,8 +333,7 @@ def bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer so false positives are visible (bloom true, exact false —
     never the reverse: the no-false-negative property is pinned in
     tests). Positions come from Kirsch–Mitzenmacher double hashing over
-    ONE md5 digest per doc (see ``_bloom_sql`` — r11; the previous form
-    md5'd the full text K+1 times per doc).
+    ONE md5 digest per doc (see ``_bloom_sql``).
 
     Scale: the corpus collapses to its distinct set-bit positions
     (≤ k·n ints, ≤ {BLOOM_M} after distinct — a fixed-size table no
@@ -394,7 +384,6 @@ def _contam_by_bench_sql(shingles: str, pct: str) -> str:
 
 @query(
     "contamination_by_benchmark",
-    tier=2,
     oracle=_contam_by_bench_sql(_DUCK_SHINGLES, _DUCK_DOC_PCT),
 )
 def contamination_by_benchmark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -449,7 +438,6 @@ def _kl_sql(explode_expr: str) -> str:
 
 @query(
     "source_token_kl",
-    tier=2,
     oracle=_kl_sql("unnest(string_split(text, ' '))"),
 )
 def source_token_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -525,7 +513,7 @@ def _dup_hist_sql() -> str:
     """
 
 
-@query("dedup_cluster_sizes", tier=2, oracle=_dup_hist_sql())
+@query("dedup_cluster_sizes", oracle=_dup_hist_sql())
 def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-duplicate cluster-size histogram: how much of the corpus sits
     in clusters of each size and how many docs dedup would remove — the
@@ -540,10 +528,10 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_dup_hist_sql())
 
 
-# --- mixture-wired token budget plan (round 16) --------------------------------
-# r15 verdict ask #4: `token_budget_plan` (llm_text.py) planned against a
-# HARDCODED uniform target while `domain_mixture_weights` above already
-# computes the principled target vector. This twin is the same planner
+# --- mixture-wired token budget plan -------------------------------------------
+# `token_budget_plan` (llm_text.py) plans against a HARDCODED uniform
+# target, while `domain_mixture_weights` above computes the principled
+# target vector. This twin is the same planner
 # (`_budget_plan_sql`, shared skeleton) with its target CTE wired to the
 # REGISTERED mixture operator's emitted shares: target_share_s =
 # mix_weight_s · token_share_s (the parent's own definition of the target
@@ -570,7 +558,6 @@ _MIX_TARGET_SQL = """
 
 @query(
     "token_budget_plan_mixture",
-    tier=2,
     oracle=_budget_plan_sql(
         _ORACLES["tokenizer_fertility"],
         target_rel=_MIX_TARGET_SQL.format(
@@ -607,7 +594,7 @@ def token_budget_plan_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- deficit rebalancing (round 16) --------------------------------------------
+# --- deficit rebalancing -------------------------------------------------------
 # `token_budget_plan*` emit `deficit_tokens` — the share of the budget
 # the 4-epoch cap makes unbuyable from each source — documented as "the
 # mixture re-weighter's input for redistributing it". This is that
@@ -680,7 +667,6 @@ def _rebalance_sql(plan_rel: str) -> str:
 
 @query(
     "token_budget_rebalance",
-    tier=2,
     oracle=_rebalance_sql(
         "SELECT source, n_tokens, budget_tokens, deficit_tokens FROM ("
         + _ORACLES["token_budget_plan_mixture"]
@@ -717,10 +703,10 @@ def token_budget_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- budgeted materialization (round 17) ----------------------------------------
-# The data terminal the whole token-budget chain existed for (r16 verdict
-# ask #5): tokenizer_fertility prices the corpus -> domain_mixture_weights
-# sets the target -> token_budget_plan_mixture decides per-source budgets
+# --- budgeted materialization ---------------------------------------------------
+# The data terminal of the token-budget chain: tokenizer_fertility prices
+# the corpus -> domain_mixture_weights sets the target ->
+# token_budget_plan_mixture decides per-source budgets
 # -> token_budget_rebalance redistributes capped deficits -> THIS operator
 # turns the final allocation into the training set itself — one manifest
 # row per (document, epoch) that actually ships. Epoch assignment is the
@@ -813,7 +799,6 @@ def _materialize_budget_spark_sql(alloc_rel: str) -> str:
 
 @query(
     "token_budget_materialize",
-    tier=2,
     oracle=_materialize_budget_oracle(),
 )
 def token_budget_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -824,7 +809,7 @@ def token_budget_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     so one epoch of a source sums EXACTLY to the plan's n_tokens).
     Copies per doc = floor(epochs_final) + (md5-fraction < frac)
     — deterministic hash-Bernoulli; see the banner comment. The chain
-    now ends in data, not a report (r16 verdict ask #5).
+    ends in data, not a report.
 
     Scale: one raw scan (token pricing is JVM regex codegen), one
     broadcast join against the |sources|-row allocation, and a
@@ -878,7 +863,6 @@ def _fill_report_sql(manifest_rel: str, alloc_rel: str) -> str:
 
 @query(
     "token_budget_fill_report",
-    tier=2,
     oracle=_fill_report_sql(
         _materialize_budget_oracle(), _ORACLES["token_budget_rebalance"]
     ),
@@ -920,7 +904,7 @@ def token_budget_fill_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- training shard manifest (round 17) ------------------------------------------
+# --- training shard manifest -----------------------------------------------------
 # The last mile after `token_budget_materialize`: the (doc_id, epoch)
 # manifest cut into token-balanced training shards in a deterministic
 # epoch-shuffled order — what the shard writer actually writes. Shuffle
@@ -998,7 +982,6 @@ def _shard_manifest_oracle() -> str:
 
 @query(
     "training_shard_manifest",
-    tier=2,
     oracle=_shard_manifest_oracle(),
 )
 def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1037,7 +1020,7 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- incremental shard append (round 17) -----------------------------------------
+# --- incremental shard append ----------------------------------------------------
 # The O(batch) ingest mirror of `training_shard_manifest`, completing the
 # incremental quartet (`dedup_incremental`, `ivf_pq_incremental`,
 # `materialize_training_set_incremental`, THIS): standing shards are
@@ -1093,7 +1076,6 @@ def _shard_append_tail_sql(cum_rel: str, t_rel: str, idiv: str) -> str:
 
 @query(
     "training_shard_append",
-    tier=2,
     oracle=_shard_append_oracle(),
 )
 def training_shard_append(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,7 +42,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The registered (driver-checked) shape posexplodes the feature vector to
     one scalar row per dimension: the driver's pandas canonicalizer crashes
-    on array cells (round-1 ``unhashable type: 'list'``), and doubles
+    on array cells (``unhashable type: 'list'``), and doubles
     compare bit-exactly where a float→string render would not. The
     array-shaped API is :func:`lakehouse_workshop_spark.llm.multimodal.extract_features`.
     """
@@ -96,7 +96,6 @@ def frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "image_decode_stats",
-    tier=2,
     oracle="""
     SELECT doc_id AS media_id,
            CAST(8 AS BIGINT) AS width,
@@ -180,7 +179,6 @@ def _png_channel_sum_sql(c: int) -> str:
 
 @query(
     "png_decode_stats",
-    tier=2,
     oracle=f"""
     SELECT doc_id AS media_id,
            CAST(8 AS BIGINT) AS width,
@@ -255,7 +253,6 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "audio_decode_stats",
-    tier=2,
     oracle="""
     WITH s AS (
         SELECT doc_id,
@@ -368,7 +365,6 @@ def _pool_sum_sql(ch: int) -> str:
 
 @query(
     "image_resize_stats",
-    tier=2,
     oracle=f"""
     SELECT doc_id AS media_id,
            CAST(4 AS BIGINT) AS width,
@@ -459,7 +455,6 @@ def image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "jpeg_decode_stats",
-    tier=2,
     oracle="""
     SELECT doc_id AS media_id,
            CAST(8 AS BIGINT) AS width,
@@ -552,7 +547,6 @@ PHASH_BANDS = 7  # 7 bands x 9 bits over the 63-bit hash: any pair at
 
 @query(
     "image_phash_dedup",
-    tier=2,
     oracle=f"""
     SELECT doc_id AS media_id,
            doc_id + {PHASH_TWIN_OFFSET} AS twin_id,
@@ -647,7 +641,7 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- MJPEG-AVI video queries (round 8) --------------------------------------
+# --- MJPEG-AVI video queries ------------------------------------------------
 from lakehouse_workshop_spark.llm.avi import AVI_US_PER_FRAME
 from lakehouse_workshop_spark.llm.multimodal import (
     AVI_FRAMES_BASE,
@@ -660,7 +654,6 @@ _AVI_NF = f"{AVI_FRAMES_BASE} + doc_id % {AVI_FRAMES_MOD}"
 
 @query(
     "video_decode_stats",
-    tier=2,
     oracle=f"""
     SELECT doc_id AS media_id,
            CAST({_AVI_NF} AS BIGINT) AS n_frames,
@@ -688,8 +681,7 @@ def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one encode pass + one demux/decode pass, both Arrow-batched;
     per-task peak is one record batch of short clips. The reference has
-    no video surface (SURVEY §2 lists none) — this closes the last
-    multimodal container gap flagged in VERDICT r7 "What's missing" #3.
+    no video surface (SURVEY §2 lists none).
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
@@ -761,7 +753,6 @@ def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "video_frame_sample",
-    tier=2,
     oracle=f"""
     WITH f AS (SELECT unnest(generate_series(0,
                    {AVI_FRAMES_BASE + AVI_FRAMES_MOD - 2})) AS frame_no)

@@ -37,7 +37,6 @@ def _duck_md5_pct(key_sql: str) -> str:
 
 @query(
     "train_val_test_split",
-    tier=2,
     oracle=f"""
     SELECT doc_id,
            CASE WHEN {_duck_md5_pct('doc_id')} < {SPLIT_TRAIN_PCT} THEN 'train'
@@ -67,7 +66,6 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stratified_sample",
-    tier=2,
     oracle=f"""
     SELECT doc_id, lang
     FROM documents
@@ -88,7 +86,6 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "shard_assignments",
-    tier=2,
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang,
@@ -140,7 +137,6 @@ CLEAN_MAX_CHARS = 100_000
 
 @query(
     "corpus_clean",
-    tier=2,
     oracle=f"""
     WITH canon AS (
         SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
@@ -175,7 +171,6 @@ NEW_BATCH_PRED = "doc_id % 10 = 9"  # synthetic "incoming batch" partition
 
 @query(
     "dedup_incremental",
-    tier=2,
     oracle=f"""
     WITH corpus AS (
         SELECT DISTINCT md5(text) AS h FROM documents WHERE NOT ({NEW_BATCH_PRED})
@@ -219,7 +214,6 @@ PSEUDO_SALT = "corpus-v1"
 
 @query(
     "pseudonymize_users",
-    tier=2,
     oracle=f"""
     SELECT event_id,
            sha256('{PSEUDO_SALT}' || CAST(user_id AS VARCHAR)) AS user_pseudo_id,
@@ -249,7 +243,6 @@ PACK_WINDOW_TOKENS = 512
 
 @query(
     "sequence_packing",
-    tier=2,
     oracle=f"""
     WITH t AS (
         SELECT doc_id,
@@ -335,7 +328,6 @@ def _packing_efficiency_sql(idiv: str) -> str:
 
 @query(
     "packing_efficiency",
-    tier=2,
     oracle=_packing_efficiency_sql("//").format(
         toklen="len(string_split(text, ' '))"
     ),
@@ -389,7 +381,6 @@ _PII_RAW_DUCK = (
 
 @query(
     "pii_redact",
-    tier=2,
     oracle=f"""
     SELECT doc_id,
            CAST(len(regexp_extract_all(raw, '{PII_EMAIL_RE}')) AS BIGINT)
@@ -431,10 +422,10 @@ def pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- end-to-end training-set materialization (round 10) ---------------------
+# --- end-to-end training-set materialization --------------------------------
 # The composition proof: corpus_clean -> exact dedup -> decontaminate ->
 # BPE-encode -> sequence_packing as ONE declarative plan — no driver
-# round-trip between stages (the r9 verdict's ask #7). Each stage is the
+# round-trip between stages. Each stage is the
 # registered component family's exact shape; the only driver-side object
 # is the FROZEN tokenizer below, broadcast into the encode pass the way a
 # production pipeline ships its frozen tokenizer artifact.
@@ -543,7 +534,7 @@ def _materialize_oracle() -> str:
     """
 
 
-@query("materialize_training_set", tier=2, oracle=_materialize_oracle())
+@query("materialize_training_set", oracle=_materialize_oracle())
 def materialize_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-set materialization in ONE plan:
     ``corpus_clean``'s language/length gate + exact keep-first dedup →
@@ -597,7 +588,7 @@ def materialize_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whose words are ALL empty (all-whitespace text inside the n_chars
     # gate) vanishes there while apply_bpe emits an n_tokens=0 row —
     # token-less documents are dropped from the materialized set in both
-    # dialects (r10 ADVICE; no current fixture hits it).
+    # dialects (no current fixture hits it).
     tok = (
         apply_bpe(kept, BPE_FROZEN_MERGES)
         .select("doc_id", "n_tokens")
@@ -616,8 +607,8 @@ def materialize_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- training-set materialization v2: + near-dedup + span scrub (round 11) --
-# The r10 verdict's "What's missing #3": a production pipeline runs
+# --- training-set materialization v2: + near-dedup + span scrub -----------
+# A production pipeline runs
 # MinHash-LSH near-dedup and substring-span scrubbing between cleaning and
 # decontamination. v2 composes the FULL chain: gate + exact dedup →
 # LSH near-dup drop (keep-lowest-id of each pair at est_jaccard >=
@@ -727,9 +718,9 @@ def _materialize_v2_oracle() -> str:
     """
 
 
-# --- incremental training-set materialization (round 11) --------------------
+# --- incremental training-set materialization -------------------------------
 # The O(batch) ingest mirror of the composition, the same pattern as
-# ivf_pq_incremental (r10) and dedup_incremental: an incoming batch
+# ivf_pq_incremental and dedup_incremental: an incoming batch
 # (NEW_BATCH_PRED) is curated against the STANDING corpus state — its
 # seen-hash set, its benchmark shingle set — and packed CONTINUING from
 # the standing token stream (append semantics: new docs extend the
@@ -782,8 +773,8 @@ def _mti_front_sql(
     kept sets (standing corpus and curated batch) as CTEs. The caller
     appends its dialect's encode/pack tail.
 
-    Round 12 adds the LSH near-dedup stage between the exact-dedup gate
-    and decontamination (r11 verdict missing #3): a batch doc drops when
+    The LSH near-dedup stage sits between the exact-dedup gate and
+    decontamination: a batch doc drops when
     its MinHash bands collide with a STANDING corpus doc (every corpus
     doc precedes every batch doc — its own curation happened at ITS
     ingest) or with a lower-id batch doc, and the colliding pair's
@@ -923,7 +914,7 @@ def _mti_oracle() -> str:
     """
 
 
-@query("materialize_training_set_incremental", tier=2, oracle=_mti_oracle())
+@query("materialize_training_set_incremental", oracle=_mti_oracle())
 def materialize_training_set_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -931,9 +922,9 @@ def materialize_training_set_incremental(
     batch ({NEW_BATCH_PRED}) against the standing corpus state — drop
     batch docs whose content hash the corpus has seen (plus within-batch
     keep-first), gate, LSH near-dedup against the standing corpus
-    signatures (plus within-batch keep-lowest-id; round 12 — the stage
-    ``materialize_training_set_v2`` has and the r11 verdict flagged
-    missing here), decontaminate against the standing benchmark shingle
+    signatures (plus within-batch keep-lowest-id; the stage
+    ``materialize_training_set_v2`` has), decontaminate against the
+    standing benchmark shingle
     set, frozen-BPE encode — and assign windows CONTINUING from
     the standing stream's token total (append semantics; the batch's
     first doc may share a window with the corpus tail). The deployment
@@ -945,7 +936,7 @@ def materialize_training_set_incremental(
     the whole contract stays value-checkable by one oracle — the same
     honestly-documented caveat as ``ivf_pq_incremental``: the bench row
     prices the re-derivation, not the ingest. At the 10× probe that
-    re-derivation is most of the row: ~11s ≈ the r11 row's 3.4s
+    re-derivation is most of the row: ~11s ≈ 3.4s
     (gate/exact-dedup/decontaminate/BPE/pack) + ~2.7s signature
     derivation over corpus+batch + ~1s band join + the materialization
     barriers between the now-five bounded checkpoints; a real ingest
@@ -1092,10 +1083,10 @@ def materialize_training_set_incremental(
     )
 
 
-@query("materialize_training_set_v2", tier=2, oracle=_materialize_v2_oracle())
+@query("materialize_training_set_v2", oracle=_materialize_v2_oracle())
 def materialize_training_set_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-set materialization with the FULL curation chain (extends
-    ``materialize_training_set``, the r10 verdict's missing #3): gate +
+    ``materialize_training_set``): gate +
     exact keep-first dedup → MinHash-LSH near-dup drop (doc_b of every
     candidate pair at est_jaccard ≥ {V2_NEARDUP_EST} — keep-lowest-id,
     the doc-grain twin of the scrub's first-occurrence rule) → duplicate-

@@ -1,4 +1,4 @@
-"""Corpus-quality and sampling operators for LLM data pipelines (round 5).
+"""Corpus-quality and sampling operators for LLM data pipelines.
 
 The passes a training-data pipeline runs between dedup and sharding:
 per-source balancing (cap any one domain's share of the corpus), unigram
@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from lakehouse_workshop_spark.catalog import load_table
 from lakehouse_workshop_spark.kernels import nearest
 
-# ORACLES import contract (r15 ADVICE #3): the operators package defines
+# ORACLES import contract: the operators package defines
 # the QUERIES/ORACLES dicts BEFORE it imports any operator module, so a
 # top-of-module import of the partially-initialized package is safe —
 # but entries only exist once their registering module has run. Consumers
@@ -44,7 +44,6 @@ OUTLIER_MADS = 3.0
 
 @query(
     "source_balanced_sample",
-    tier=2,
     oracle=f"""
     SELECT doc_id, source
     FROM (
@@ -87,7 +86,6 @@ def source_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "unigram_lm_score",
-    tier=2,
     oracle="""
     WITH toks AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -141,7 +139,6 @@ def unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "docs_length_outliers",
-    tier=2,
     oracle=f"""
     WITH med AS (
         SELECT quantile_cont(n_chars, 0.5) AS med FROM documents
@@ -199,7 +196,6 @@ def docs_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_label_centroids",
-    tier=2,
     oracle=f"""
     WITH dims AS (
         -- EMB_DIM interpolated (DuckDB's generate_series can't be lateral
@@ -302,7 +298,7 @@ _TOPIC_ASSIGN_BODY = """
 """
 
 
-@query("topic_assign", tier=2, oracle=_topic_assign_duck_sql())
+@query("topic_assign", oracle=_topic_assign_duck_sql())
 def topic_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-centroid topic assignment: build per-label centroids from
     the labeled vectors, then assign every vector to its most-similar
@@ -310,15 +306,15 @@ def topic_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratify or rebalance a corpus by topic, with ``matches_label`` as
     the built-in self-consistency signal.
 
-    Scale (round-6 rewrite): the centroid build partial-aggregates the
+    Scale: the centroid build partial-aggregates the
     n×dim exploded components map-side down to |labels|×dim rows (one
     shuffle carrying only the reduced set, DECIMAL-accumulated so the
     collected centroid values are bit-identical to the oracle's). That
     tiny matrix broadcasts, and every vector scores against ALL label
     centroids in one BLAS matmul per Arrow batch — the same
-    broadcast-centroid plan as ``llm_similarity._matmul_assign``,
-    replacing the r5 n×dim ⨝ labels×dim component equi-join (6
-    exchanges) with a single scan + mapInPandas. The argmax pins to the
+    broadcast-centroid plan as ``llm_similarity._matmul_assign``: a
+    single scan + mapInPandas instead of an n×dim ⨝ labels×dim component
+    equi-join (6 exchanges). The argmax pins to the
     oracle's ``ORDER BY cosine DESC, label``: ``kernels.nearest`` takes
     the first maximum of the 6-dp-rounded cosines over the
     label-ascending centroid axis. (np.round is half-to-even vs SQL's
@@ -448,7 +444,6 @@ def _funnel_sql(split_fn: str, distinct_fn: str, len_fn: str) -> str:
 
 @query(
     "corpus_quality_funnel",
-    tier=2,
     oracle=_funnel_sql("string_split", "list_distinct", "len"),
 )
 def corpus_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -476,7 +471,6 @@ WSAMPLE_K = 150
 
 @query(
     "weighted_sample_topk",
-    tier=2,
     oracle=f"""
     WITH scored AS (
         SELECT doc_id, n_chars,
@@ -529,7 +523,6 @@ def weighted_sample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bigram_lm_score",
-    tier=2,
     oracle="""
     WITH toks AS (
         SELECT doc_id, tok, pos
@@ -607,7 +600,6 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "embedding_component_variance",
-    tier=2,
     oracle=f"""
     WITH dims AS (
         SELECT g.i - 1 AS pos, CAST(embedding[g.i] AS DOUBLE) AS val
@@ -652,7 +644,7 @@ def embedding_component_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- hashed linear quality classifier (round 6) ----------------------------
+# --- hashed linear quality classifier --------------------------------------
 # fastText-style scoring shape: tokens hash into a bounded feature space
 # (the hashing trick), each bucket carries a linear weight, a document's
 # logit is the mean bucket weight. The weights here are a deterministic
@@ -666,7 +658,6 @@ QC_WEIGHT_SCALE = 32768  # weights are k/32768 with k in [-32768, 32767]
 
 @query(
     "quality_classifier_score",
-    tier=2,
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -726,12 +717,11 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- per-source distribution drift (round 6) -------------------------------
+# --- per-source distribution drift -----------------------------------------
 
 
 @query(
     "token_dist_shift",
-    tier=2,
     oracle="""
     WITH toks AS (
         SELECT source, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -817,7 +807,6 @@ NORM_OUT_TOP = 20
 
 @query(
     "embedding_norm_outliers",
-    tier=2,
     oracle=f"""
     WITH norms AS (
         SELECT vec_id,
@@ -887,7 +876,7 @@ def embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- DSIR-style importance weights (round 6) --------------------------------
+# --- DSIR-style importance weights ------------------------------------------
 # Data Selection via Importance Resampling (Xie et al., 2023,
 # arXiv:2302.03169): score every raw document by how much more likely its
 # hashed-unigram bag is under a target-domain LM than under the raw-corpus
@@ -902,7 +891,6 @@ DSIR_BUCKETS = 1024
 
 @query(
     "dsir_importance_weights",
-    tier=2,
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, source,
@@ -945,12 +933,10 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals), each ln is 1e8-fixed-pointed to BIGINT (the
     ``token_dist_shift`` idiom), and per-token terms sum as exact
     BIGINTs — which IS the emission: ``log_weight_e8`` is the weight at
-    1e-8 fixed-point grain as an exact integer. (Until r11 the emission
-    divided by 1e8 and rounded to 6 dp — the BIGINT sums measured
-    bit-identical across engines at sf0.1, but 2 of its 5000 rows landed
-    on an exact .5 at the 6th decimal, which Spark rounds half-up and
-    DuckDB half-even; emitting the integer removes the only cross-engine
-    boundary in the query.)
+    1e-8 fixed-point grain as an exact integer. Dividing by 1e8 and
+    rounding to 6 dp would put rows on an exact .5 at the 6th decimal,
+    which Spark rounds half-up and DuckDB half-even; the integer has no
+    cross-engine boundary.
 
     Scale: the corpus explodes ONCE — tokens reduce map-side to
     (doc_id, source, bucket) counts (≤ {DSIR_BUCKETS} rows per doc),
@@ -1009,7 +995,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- quality-score PSI (round 14) ---------------------------------------------
+# --- quality-score PSI -------------------------------------------------------
 # Population Stability Index over the quality-classifier score -- the
 # standard score-drift monitor a production gate runs before trusting
 # yesterday's keep-threshold on tonight's ingest (industry convention:
@@ -1105,7 +1091,6 @@ _SPARK_BINS = f"SELECT explode(sequence(0, {QS_PSI_BINS - 1})) AS bin"
 
 @query(
     "quality_score_psi",
-    tier=2,
     oracle=_psi_sql(
         "SELECT doc_id, prob FROM (" + _ORACLES["quality_classifier_score"] + ") qs",
         _DUCK_BINS,
@@ -1143,12 +1128,11 @@ def quality_score_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- quality-gate recalibration (round 15) ------------------------------------
-# The consumer `quality_score_psi` existed for (r14 verdict ask: the
-# score-axis `shifted` flag finally drives a decision, closing the last
-# report-without-decision gap in the drift family — token/source-KL feed
-# mixture weights, embedding drift feeds `drift_retrain_plan`, and now
-# the score axis feeds the gate threshold). A shifted score distribution
+# --- quality-gate recalibration -----------------------------------------------
+# The consumer of `quality_score_psi`: the score-axis `shifted` flag drives
+# a decision, as elsewhere in the drift family — token/source-KL feed
+# mixture weights, embedding drift feeds `drift_retrain_plan`, and the
+# score axis feeds the gate threshold. A shifted score distribution
 # means yesterday's keep-threshold cuts tonight's merged corpus+batch
 # population at the wrong quantile; the re-calibrated threshold is the
 # merged-distribution score whose keep-rate preserves the CORPUS
@@ -1181,7 +1165,7 @@ def _qgate_recal_sql(
     Spark caller passes a pre-ranked relation built with the two-pass
     range-partitioned ``functions.exprs.global_row_number`` instead —
     a bare ``ROW_NUMBER() OVER (ORDER BY ...)`` holds every scored doc
-    in ONE partition (the r15 verdict's one scale-killer). The merged
+    in ONE partition. The merged
     count ``nm`` is a scalar aggregate CTE for the same reason (the old
     ``COUNT(*) OVER ()`` rode the same unpartitioned window)."""
     ranked = ranked_rel or f"""
@@ -1234,7 +1218,6 @@ def _qgate_recal_sql(
 
 @query(
     "quality_gate_recalibrate",
-    tier=2,
     oracle=_qgate_recal_sql(
         "SELECT doc_id, prob FROM ("
         + _ORACLES["quality_classifier_score"]
@@ -1297,9 +1280,9 @@ def quality_gate_recalibrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- quality-gate application (round 17) --------------------------------------
+# --- quality-gate application -------------------------------------------------
 # The quality family's DATA terminal, mirroring the budget family's
-# `token_budget_materialize` (r16 verdict ask #5's pattern): the chain
+# `token_budget_materialize`: the chain
 # monitor (`quality_score_psi`) -> decision (`quality_gate_recalibrate`)
 # now ends in the gated batch itself — the admitted documents, not a
 # report about a threshold. Downstream this IS tonight's ingest: the
@@ -1328,7 +1311,6 @@ def _qgate_apply_sql(scores_rel: str, decision_rel: str) -> str:
 
 @query(
     "quality_gate_apply",
-    tier=2,
     oracle=_qgate_apply_sql(
         "SELECT doc_id, prob FROM ("
         + _ORACLES["quality_classifier_score"]

@@ -71,15 +71,10 @@ _DUCK_COS = "list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm)"
 
 
 # Rows-per-task target for the user cid repartitions feeding the BLAS
-# verdict / ADC applyInPandas stages (r18, VERDICT item 3). The r17 form
-# pinned those shuffles at raw core width, which is overhead when the
-# corpus is small: at the base SF (n=2000) a 32-way shuffle + 32 BLAS
-# tasks of ~60 rows each is pure scheduling cost (the driver's scaling
-# block read most base-SF rows FASTER at 8 cores than 32). Scaling the
-# width with the input keeps the 100×-probe behavior (200k rows → full
-# core width) while collapsing the base-SF shuffle to a handful of
-# tasks; at 100 TB the min() saturates at the core count, identical to
-# the r17 form.
+# verdict / ADC applyInPandas stages. The width scales with the input:
+# full core width at the 100× probe (200k rows), a handful of tasks at
+# the base SF (n=2000), where a 32-way shuffle of ~60-row tasks is pure
+# scheduling cost; at 100 TB the min() saturates at the core count.
 CID_TASK_ROWS = 4096
 
 
@@ -97,7 +92,7 @@ def _emb_view(spark: SparkSession, sf_dir: str) -> None:
     # derivations (corpus count): counting through the repartitioned view
     # would execute its exchange as a full extra shuffle job.
     #
-    # The spread is CONDITIONAL (r18, guide §2.4): when the input
+    # The spread is CONDITIONAL: when the input
     # already splits to >= core-count scan tasks (the 32-file probe
     # corpora under the minPartitionNum floor, any real multi-file
     # table), the round-robin exchange is a full shuffle of the corpus
@@ -135,26 +130,17 @@ def _matmul_assign(
     ≡ the oracle's round-6dp-then-first-max over the cid-ascending
     axis; see its docstring for the half-to-even caveat).
 
-    ``n_universe`` clips the corpus to the id-aligned prefix
-    ``vec_id < n_universe`` (the hybrid-retrieval item universe) and is
-    then also the corpus size, so the geometry derives from the clipped
-    relation without a count job. Without it the corpus size comes from
-    the RAW embeddings relation, not from ``prepped``: counting the
-    prepped form would execute its repartition exchange (a full shuffle
-    of every vector) as a separate job before the query even starts —
-    the raw count is a zero-column scan; only nlist — a scalar —
-    depends on it. Returns (vec_id, emb, nrm, cid, ccos).
+    ``n_total`` is the corpus size (a footer row count); only nlist, a
+    scalar, depends on it. ``n_universe`` instead clips the corpus to the
+    id-aligned prefix ``vec_id < n_universe`` (the hybrid-retrieval item
+    universe) and is then also the corpus size. Returns
+    (vec_id, emb, nrm, cid, ccos).
     """
     prepped = spark.sql(_SPARK_PREP)
+    n = n_total
     if n_universe is not None:
         prepped = prepped.where(F.col("vec_id") < n_universe)
         n = n_universe
-    elif n_total is not None:
-        # Caller already counted the raw relation (e.g. to size a cid
-        # repartition) — reuse it instead of paying a second count job.
-        n = n_total
-    else:
-        n = spark.table("embeddings_raw").select("vec_id").count()
     bc = _prefix_centroids(spark, prepped, _ivf_nlist(n))
     return prepped.mapInPandas(
         _centroid_assign_fn(bc, "ivf_assign_s"), _SEM_ASSIGN_SCHEMA
@@ -421,11 +407,10 @@ IVF_NLIST_MIN = 16  # nlist floor; actual nlist = max(16, floor(sqrt(n)))
 # The standard IVF quality knob: each query searches its nprobe nearest
 # clusters. IVF_NPROBE is a FLOOR — the effective value is derived from
 # the index geometry as max(IVF_NPROBE, ceil(3·√nlist)), the same rule as
-# the PQ family's ``_pq_knobs`` (llm_ann_pq.py). Round 10 proved the
-# constant-knob form is an at-scale defect: with nlist = √n and nprobe
-# fixed, probed coverage nprobe/nlist decays as n^(-1/2), and the non-PQ
-# pair's measured recall@10 decayed 0.68→0.43 (prefix) / 0.66→0.58
-# (kmeans) from sf0.01 to sf0.1 (r10 verdict "What's wrong #3"). With
+# the PQ family's ``_pq_knobs`` (llm_ann_pq.py). A constant nprobe is an
+# at-scale defect: with nlist = √n and nprobe fixed, probed coverage
+# nprobe/nlist decays as n^(-1/2), and measured recall@10 decayed
+# 0.68→0.43 (prefix) / 0.66→0.58 (kmeans) from sf0.01 to sf0.1. With
 # nprobe = 3·√nlist = 3·n^(1/4), probed candidates grow as
 # nprobe·(n/nlist) = 3·n^(3/4) — sublinear, while coverage decays only as
 # n^(-1/4) against a top-k set whose difficulty is roughly scale-free on
@@ -438,18 +423,14 @@ IVF_NPROBE = 8
 # diverge the engines. At 100 TB the count comes free from table metadata;
 # here it is one cheap pre-pass. nlist = √n balances the two stages —
 # assignment (n·nlist dots) and per-cluster search (n/nlist candidates per
-# query) are both O(n^1.5) — fixing nlist leaves search O(n²) (the
-# r02-measured 10.1× at the 10× probe, BENCH_SCALING.md).
+# query) are both O(n^1.5) — fixing nlist leaves search O(n²) (10.1×
+# at the 10× probe, BENCH_SCALING.md).
 def _geom_knobs(count: str, from_rel: str = "") -> tuple[str, str]:
     """One builder for the IVF geometry knobs (nlist, nprobe) as SQL,
     parametrized by the COUNT expression (and optional FROM relation)
     the knobs derive from — the full corpus for the IVF family, the
-    item universe for the hybrid-fusion twin. A single source of truth
-    because the nprobe rule has already changed twice (r10, r11) for
-    measured recall decay, and a copy that misses the next change is
-    exactly the `_pq_knobs` constant-drift defect class. The emitted
-    strings are byte-identical to the r11 forms (pinned by the
-    governance hashes of every out-of-window IVF query)."""
+    item universe for the hybrid-fusion twin. One source of truth, so a
+    change to the nprobe rule reaches every IVF query at once."""
     tail = f" FROM {from_rel}" if from_rel else ""
     nlist = (
         f"(SELECT GREATEST({IVF_NLIST_MIN}, CAST(FLOOR(SQRT({count})) AS BIGINT))"
@@ -533,8 +514,8 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an equi-join on cluster id with √n-bounded per-cluster lists,
     nprobe lists per query. Both knobs derive from the corpus IN-QUERY
     (``_IVF_NLIST_SQL`` / ``_IVF_NPROBE_SQL``): nlist tracks the corpus
-    (r02's fixed nlist=16 measured 10.1× at the 10× probe because
-    per-cluster lists grew linearly), and nprobe tracks nlist (r10's
+    (a fixed nlist=16 measured 10.1× at the 10× probe because
+    per-cluster lists grew linearly), and nprobe tracks nlist (a
     fixed nprobe=8 measured recall@10 decaying 0.68→0.43 from sf0.01 to
     sf0.1 because probed coverage decays n^(-1/2)); probed candidates
     grow 3·n^(3/4), sublinear. Recall floors pinned at all three SFs by
@@ -603,7 +584,7 @@ ANN_LSH_TABLES = 8
 # IN-QUERY as max(4, floor(log2(n)) - 7), so expected bucket population
 # n/2^ppt stays pinned at ~128 as the corpus grows (with ppt fixed, the
 # bucket equi-join's per-bucket pair count — and the candidate set — grow
-# linearly with n; this was the r4-documented residual knob). At the
+# linearly with n). At the
 # driver-verified SFs (n <= 5000) the expression floors at 4, so recall
 # and parity behavior there are byte-identical to the fixed-ppt form.
 ANN_LSH_PPT_MIN = 4
@@ -675,15 +656,15 @@ def _lsh_plane_matrix(n_planes: int) -> "np.ndarray":
 
 def _ann_lsh_buckets_view(spark: SparkSession, sf_dir: str) -> None:
     """Register ``ann_lsh_buckets`` (vec_id, tbl, bucket) via a BLAS
-    bucketing kernel (r18, guide §4.2/§8; VERDICT item 4): the SQL
-    dots CTE paid one interpreted 64-element fold per (vector, plane)
-    pair — 16M folds ≈ 100 s CPU at the 100× probe — plus a 16M-row
-    aggregation exchange into the buckets groupBy. The kernel computes
-    each vector's full bit row with one matmul against the broadcast
-    plane matrix and folds the per-table bucket ids in-row: no plane
-    cross join, no dots aggregation, no shuffle at all.
+    bucketing kernel. The SQL dots CTE (the oracle's form) pays one
+    interpreted 64-element fold per (vector, plane) pair — 16M folds
+    ≈ 100 s CPU at the 100× probe — plus a 16M-row aggregation exchange
+    into the buckets groupBy. The kernel computes each vector's full bit
+    row with one matmul against the broadcast plane matrix and folds the
+    per-table bucket ids in-row: no plane cross join, no dots
+    aggregation, no shuffle at all.
 
-    BIT-SAFETY of the sign test (the r17 blocker): ``dot >= 0`` on an
+    BIT-SAFETY of the sign test: ``dot >= 0`` on an
     unrounded fold is knife-edge under BLAS summation-order changes, so
     any |dot| < 1e-9 is recomputed with the exact left fold (same
     multiplications, same addition order as the SQL lambda) and its
@@ -695,8 +676,7 @@ def _ann_lsh_buckets_view(spark: SparkSession, sf_dir: str) -> None:
     ppt derives from the corpus count driver-side (floor(log2(n))-7,
     floored at {ANN_LSH_PPT_MIN}) — log2 of an exact BIGINT matches the
     SQL scalar-subquery form bit-for-bit; the count comes from the
-    parquet footer (table_rowcount — no job), so the SQL form's scalar
-    count subquery job disappears outright.
+    parquet footer (table_rowcount), so it costs no Spark job.
     """
     import math
 
@@ -819,7 +799,7 @@ def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact twin is pinned by tests/test_recall.py.
 
     Scale: bucketing is one narrow pass per vector — the BLAS kernel
-    behind ``ann_lsh_buckets`` (r18): one matmul per Arrow batch
+    behind ``ann_lsh_buckets``: one matmul per Arrow batch
     against the broadcast plane matrix with margin-repaired signs, the
     per-table bucket fold done in-row (the SQL dots CTE paid one
     interpreted 64-element fold per (vector, plane) pair — 16M folds at
@@ -861,8 +841,8 @@ def ivf_kmeans_search(
     ``ivf_topk`` documents. Train MLlib KMeans (fixed seed) on the corpus,
     assign every vector JVM-side via ``model.transform``, then search the
     ``nprobe`` clusters nearest each query. ``nprobe`` defaults to the
-    geometry-derived max(8, ⌈3√nlist⌉) (``_ivf_nprobe``): r10 measured the
-    fixed nprobe=8 decaying recall@10 0.66→0.58 from sf0.01 to sf0.1 as
+    geometry-derived max(8, ⌈3√nlist⌉) (``_ivf_nprobe``): a fixed
+    nprobe=8 measured recall@10 decaying 0.66→0.58 from sf0.01 to sf0.1 as
     probed coverage shrank n^(-1/2) — the same defect class ``_pq_knobs``
     fixed for the PQ family; floors pinned at all three SFs in
     tests/test_recall.py.
@@ -883,8 +863,8 @@ def ivf_kmeans_search(
     vecs = prepped.withColumn("features", array_to_vector("emb"))
     # Same nlist rule as ivf_topk: √n, floored at 16. ONE aggregation pass
     # covers both the corpus count and the training-prefix emptiness
-    # guard (a separate take(1) was one whole extra Spark job per index
-    # build — r9 verdict ask #5); at 100 TB both come from the catalog.
+    # guard (a separate take(1) would be one more Spark job per index
+    # build); at 100 TB both come from the catalog.
     stats = vecs.agg(
         F.count(F.lit(1)).alias("n"),
         F.count_if(F.col("vec_id") < KMEANS_TRAIN_N).alias("n_prefix"),
@@ -896,8 +876,8 @@ def ivf_kmeans_search(
     # PQ codebook sample) capped at KMEANS_TRAIN_N — identical centroids
     # on any cluster size or rerun, unlike a fraction-based sample.
     # Sparse / non-zero-based vec_ids leave the prefix empty; fall back
-    # to the full relation rather than crash KMeans.fit (the pre-round-7
-    # behavior, correct at any id layout, just slower).
+    # to the full relation rather than crash KMeans.fit (correct at any
+    # id layout, just slower).
     train = (
         vecs.where(F.col("vec_id") < KMEANS_TRAIN_N)
         if stats["n_prefix"]
@@ -964,7 +944,6 @@ def ivf_kmeans_search(
 
 @query(
     "ivf_topk_kmeans",
-    tier=2,
     oracle=f"""
     WITH e AS ({_DUCK_PREP})
     SELECT COUNT(*) AS n_queries, TRUE AS recall_ok
@@ -1059,7 +1038,6 @@ QUANT_LEVELS = 127
 
 @query(
     "embedding_quantize_int8",
-    tier=2,
     oracle=f"""
     WITH e AS ({_DUCK_PREP}),
     s AS (
@@ -1119,7 +1097,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- IVF cluster-balance diagnostics (round 12) ------------------------------
+# --- IVF cluster-balance diagnostics -----------------------------------------
 # Skewed inverted lists are THE operational risk of IVF at scale: one hot
 # cluster turns the per-cluster equi-join into a straggler (the 100×
 # probe corpus deliberately drives 22% of vectors into one cluster).
@@ -1163,7 +1141,6 @@ _DUCK_IVF_ASSIGN = f"""
 
 @query(
     "ivf_cluster_balance",
-    tier=2,
     oracle=_cluster_balance_sql(_DUCK_IVF_ASSIGN),
 )
 def ivf_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1220,12 +1197,11 @@ def _split_plan_sql(balance_sql: str) -> str:
 
 @query(
     "ivf_split_plan",
-    tier=2,
     oracle=_split_plan_sql(_cluster_balance_sql(_DUCK_IVF_ASSIGN)),
 )
 def ivf_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The consumer `ivf_cluster_balance` existed for (r12 verdict ask
-    #6): turn the per-cluster skew factor into the split DECISION an
+    """The consumer of `ivf_cluster_balance`: turn the per-cluster skew
+    factor into the split DECISION an
     index maintainer executes — ``needs_split`` (x_uniform >=
     IVF_SPLIT_FACTOR), ``n_sublists`` = ceil(x_uniform) (the sub-list
     count that provably restores the balanced expectation:
@@ -1396,7 +1372,6 @@ def _sem_verdict_batch(pdf):
 
 @query(
     "semantic_dedup",
-    tier=2,
     oracle=_semantic_dedup_sql(_DUCK_PREP, _DUCK_COS, _IVF_CENTROIDS),
 )
 def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1440,12 +1415,12 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # within-cluster centrality rank as a window over the assigned rows —
     # the window's cid hash-partitioning doubles as the verdict groupBy's
     # distribution, so rank + verdict share ONE shuffle. That shuffle is
-    # a USER repartition (r17): the planner-inserted ENSURE_REQUIREMENTS
+    # a USER repartition: the planner-inserted ENSURE_REQUIREMENTS
     # exchange it replaces was AQE-coalesced by shuffle volume (83 MB →
     # 8 partitions at the 100× probe), blind to the verdict stage's BLAS
     # compute — a user REPARTITION_BY_NUM is not coalescible, so the
     # verdict keeps core-count parallelism. Width scales with the
-    # corpus (r18, _cid_width): full core width at the 100× probe and
+    # corpus (_cid_width): full core width at the 100× probe and
     # beyond, a handful of tasks at the base SF where 32-way fan-out
     # was pure scheduling overhead. n comes from the parquet footer
     # (table_rowcount — no job); n_total hands it into _matmul_assign
@@ -1470,7 +1445,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assigned.groupBy("cid").applyInPandas(_sem_verdict_batch, out_schema)
 
 
-# --- incremental / streaming semantic dedup (round 13) -----------------------
+# --- incremental / streaming semantic dedup ----------------------------------
 # The one dedup family member that lacked a batch-vs-standing-corpus form
 # (exact/bloom, MinHash-LSH, CMS, and PQ ingest all have one): embedding-
 # space dedup of an ingest batch against an already-deduped standing
@@ -1717,7 +1692,6 @@ def _sem_incr_gated(spark: SparkSession, batch_df: DataFrame) -> DataFrame:
 
 @query(
     "semantic_dedup_incremental",
-    tier=2,
     oracle=_sem_incr_sql(_DUCK_PREP, _DUCK_COS),
 )
 def semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1755,7 +1729,7 @@ def semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sem_incr_gated(spark, batch)
 
 
-# --- IVF re-listing: execute the split plan (round 13) ----------------------
+# --- IVF re-listing: execute the split plan ---------------------------------
 def _rebalance_sql(prep: str, cos: str) -> str:
     """Dialect-shared re-listing SQL (the DuckDB oracle): re-derive the
     split plan from the assignment, take each split cluster's
@@ -1815,7 +1789,6 @@ def _rebalance_sql(prep: str, cos: str) -> str:
 
 @query(
     "ivf_rebalance",
-    tier=2,
     oracle=_rebalance_sql(_DUCK_PREP, _DUCK_COS),
 )
 def ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1834,7 +1807,7 @@ def ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     end); the split path fires at the 10× probe corpus — x ≈ 10 on the
     hot cluster — where tests/test_recall.py pins Spark == DuckDB
     bit-exact AND that the hottest post-split list genuinely shrinks.
-    Flood fallback (r13 verdict ask #5, implemented r14): an
+    Flood fallback: an
     identical-vector flood defeats geometric splitting (every member
     scores 1.0 against every sub-centroid and funnels to srank 1), so
     a cluster whose geometric split funneled ALL members into one
@@ -1932,7 +1905,7 @@ def ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assigned.groupBy("cid").applyInPandas(rebal, out_schema)
 
 
-# --- embedding-space drift monitor (round 13) --------------------------------
+# --- embedding-space drift monitor -------------------------------------------
 # The embedding twin of token_dist_shift / source_token_kl: before an
 # ingest's vectors are trusted to the standing index (or the standing
 # centroids are trusted to represent the ingest), compare the batch's
@@ -1940,7 +1913,7 @@ def ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus-only geometry the incremental gate uses. A cluster whose batch
 # share moved >= 2 corpus-share points is the re-train / re-list signal
 # read BEFORE recall decays (constant centroids on drifted data is the
-# same defect class as constant nprobe on grown data — r10/r11).
+# same defect class as constant nprobe on grown data).
 EMB_DRIFT_SHIFTED = 0.02
 
 
@@ -1992,7 +1965,6 @@ _DRIFT_ASSIGN_ORACLE = f"""
 
 @query(
     "embedding_cluster_drift",
-    tier=2,
     oracle=_drift_rollup_sql(_DRIFT_ASSIGN_ORACLE),
 )
 def embedding_cluster_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2012,8 +1984,7 @@ def embedding_cluster_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`token_dist_shift`), per-source KL (`source_token_kl`), and now
     cluster occupancy in embedding space — the one a vector index
     maintainer actually acts on (stale centroids on drifted data decay
-    recall exactly like constant nprobe on grown data, the r10/r11
-    defect class).
+    recall exactly like constant nprobe on grown data).
 
     Scale: two broadcast-centroid matmul passes (corpus, batch — each
     one Arrow pass, no shuffle), a cid rollup over ≤ √n groups, and a
@@ -2071,11 +2042,11 @@ def embedding_cluster_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- drift maintenance plan (round 14) ----------------------------------------
-# The consumer `embedding_cluster_drift` existed for (r13 verdict ask #4):
-# turn the per-cluster drift report into the maintenance DECISION an index
-# operator executes, exactly as `ivf_split_plan` consumed
-# `ivf_cluster_balance` at r13. Two triggers, by blast radius:
+# --- drift maintenance plan --------------------------------------------------
+# The consumer of `embedding_cluster_drift`: turn the per-cluster drift
+# report into the maintenance DECISION an index operator executes, as
+# `ivf_split_plan` consumes `ivf_cluster_balance`. Two triggers, by blast
+# radius:
 #   - GLOBAL: total variation distance between the corpus and batch
 #     cluster distributions >= EMB_DRIFT_RETRAIN_TVD means the geometry
 #     itself no longer represents the data -> retrain_centroids (per-list
@@ -2156,14 +2127,12 @@ def _drift_plan_sql(rollup_sql: str) -> str:
 
 @query(
     "drift_retrain_plan",
-    tier=2,
     oracle=_drift_plan_sql(_drift_rollup_sql(_DRIFT_ASSIGN_ORACLE)),
 )
 def drift_retrain_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consume `embedding_cluster_drift`'s report into per-cluster
-    maintenance ACTIONS — the drift family's decide stage (r13 verdict
-    ask: the `shifted` flag finally has a consumer, closing the same
-    report-without-decision gap `ivf_split_plan` closed for
+    maintenance ACTIONS — the drift family's decide stage and the
+    consumer of the `shifted` flag (as `ivf_split_plan` is for
     `ivf_cluster_balance`). Emits per cluster: the drift evidence, the
     corpus-vs-batch total variation distance (global, repeated per row
     as a decision input), the projected post-merge skew factor
@@ -2189,7 +2158,7 @@ def drift_retrain_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_drift_plan_sql("SELECT * FROM emb_drift_rollup"))
 
 
-# --- hybrid rank fusion (round 14) --------------------------------------------
+# --- hybrid rank fusion ------------------------------------------------------
 # Reciprocal-rank fusion (Cormack/Clarke/Buettcher, SIGIR 2009): fuse a
 # lexical retrieval arm (inverted-index token join, Jaccard-ranked) with
 # a vector arm (exact cosine, `cosine_topk`'s plan) by
@@ -2415,7 +2384,7 @@ def _hybrid_setup(spark: SparkSession, sf_dir: str) -> int:
     n_universe = min(
         table_rowcount(sf_dir, "documents"), table_rowcount(sf_dir, "embeddings")
     )
-    # Partition the checkpoint BY doc_id at core-count width (r17): AQE
+    # Partition the checkpoint BY doc_id at core-count width: AQE
     # coalesces the distinct's exchange to the shuffle-volume-sized ~4
     # partitions (~40 MB of tokens), but the downstream consumer is the
     # lexical arm's inverted-index join whose fan-out is ~150× its input
@@ -2432,7 +2401,6 @@ def _hybrid_setup(spark: SparkSession, sf_dir: str) -> int:
 
 @query(
     "hybrid_rank_fusion",
-    tier=2,
     scale_path="hybrid_rank_fusion_ivf",
     oracle=_fuse_sql(
         _brute_vec_arm(_DUCK_PREP, _DUCK_COS, _DUCK_UNIVERSE),
@@ -2473,7 +2441,6 @@ def hybrid_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hybrid_rank_fusion_ivf",
-    tier=2,
     oracle=_fuse_sql(
         _ivf_vec_arm(
             _DUCK_PREP, _DUCK_COS, _DUCK_UNIVERSE, _DUCK_U_NLIST, _DUCK_U_NPROBE
@@ -2498,8 +2465,8 @@ def hybrid_rank_fusion_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis) instead of the brute arm's n per query; the universe
     assignment is the family's broadcast BLAS kernel
     (`_centroid_assign_fn`), checkpointed once and read by the probe
-    ranking and both sides of the cluster equi-join. Honest decade
-    accounting (BENCH_SCALING r14): with queries scaling as n/100 the
+    ranking and both sides of the cluster equi-join. Decade accounting
+    (BENCH_SCALING.md): with queries scaling as n/100 the
     vec-arm crossover is n ≳ 1e5 vectors, and at the driver SFs and
     the 10× probe BOTH twins are dominated by the shared lexical arm —
     the probe row pins this twin's near-linear growth, not a

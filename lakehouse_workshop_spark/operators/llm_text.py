@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_workshop_spark.catalog import load_table
 
-# ORACLES import contract (r15 ADVICE #3): the operators package defines
+# ORACLES import contract: the operators package defines
 # the QUERIES/ORACLES dicts BEFORE it imports any operator module, so a
 # top-of-module import of the partially-initialized package is safe —
 # but entries only exist once their registering module has run.
@@ -99,7 +99,7 @@ def doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.select("doc_id", label.alias("quality_label"))
 
 
-# --- per-source adaptive quality gate (round 12) ----------------------------
+# --- per-source adaptive quality gate ---------------------------------------
 # A global quality threshold over-prunes the weakest source and
 # under-prunes the strongest (quality distributions differ per crawl);
 # production curation gates PER SOURCE: keep each source's top share by
@@ -136,7 +136,6 @@ def _quality_gate_sql(len_fn: str, filt_fn: str, dist_fn: str) -> str:
 
 @query(
     "source_quality_gate",
-    tier=2,
     oracle=_quality_gate_sql("len", "list_filter", "list_distinct").format(
         split="string_split(text, ' ')"
     ),
@@ -254,8 +253,8 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # size(toks) < 5 guard: Spark's sequence(1, n) with n <= 0 emits a
     # DESCENDING ramp (1, 0, -1, ...) where DuckDB's generate_series is
     # empty — an unguarded short doc would hash garbage slices instead of
-    # yielding NULL (the shared shingle CTEs in llm_dedup got this guard
-    # in round 6; this query was out-of-window then).
+    # yielding NULL (the shared shingle CTEs in llm_dedup carry the same
+    # guard).
     return docs.selectExpr("doc_id", "text", "split(text, ' ') AS toks").selectExpr(
         "doc_id",
         "md5(text) AS content_hash",
@@ -376,7 +375,6 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_normalize",
-    tier=2,
     oracle="""
     SELECT doc_id,
            trim(regexp_replace(regexp_replace(lower(text), '[0-9]+', '0', 'g'),
@@ -509,7 +507,6 @@ BLOCK_MARK = "[BLOCKED]"
 
 @query(
     "blocklist_scrub",
-    tier=2,
     oracle=f"""
     WITH s AS (
         SELECT doc_id, string_split(text, ' ') AS toks FROM documents
@@ -552,7 +549,6 @@ VOCAB_TOP = 100
 
 @query(
     "vocab_coverage",
-    tier=2,
     oracle=f"""
     WITH tf AS (
         SELECT tok, COUNT(*) AS cnt
@@ -578,15 +574,15 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a vocab. ``coverage`` at rank k answers "what fraction of the token
     stream do the k most frequent types cover".
 
-    Scale (round-6 rewrite): explode → map-side-combined (token) count
+    Scale: explode → map-side-combined (token) count
     shrinks the corpus to the type vocabulary; only the top-{VOCAB_TOP}
     rows survive, so the top-k runs FIRST as a sort+limit
     (TakeOrderedAndProject: per-partition partial top-{VOCAB_TOP}, merged
     on the driver — no global window ever sees the billions of distinct
     types a web corpus has), and the rank + running-sum window runs over
     exactly {VOCAB_TOP} rows after the limit (``hot_keys_events``
-    pattern, replacing the r5 two-pass range-partitioned global
-    rank/cumsum over the full vocabulary). The grand total joins back as
+    pattern, not a two-pass range-partitioned global rank/cumsum over
+    the full vocabulary). The grand total joins back as
     a broadcast scalar.
     """
     from pyspark.sql import Window
@@ -623,7 +619,6 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lang_id_confusion",
-    tier=2,
     oracle=f"""
     WITH pred AS (
         SELECT doc_id,
@@ -674,7 +669,6 @@ BPE_TOP = 20
 
 @query(
     "bpe_merge_candidates",
-    tier=2,
     oracle=f"""
     WITH pairs AS (
         SELECT unnest(list_transform(generate_series(1, length(tok) - 1),
@@ -726,7 +720,7 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- tokenizer fertility (round 14) ------------------------------------------
+# --- tokenizer fertility -----------------------------------------------------
 # Fertility = subword pieces per whitespace word (the tokenizer-efficiency
 # metric of Acs 2019 / Rust et al. 2021, "How Good is Your Tokenizer?"):
 # a language or source whose fertility runs high pays proportionally more
@@ -736,7 +730,6 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tokenizer_fertility",
-    tier=2,
     oracle=f"""
     SELECT source, lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -796,7 +789,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- token budget plan (round 15) ---------------------------------------------
+# --- token budget plan -------------------------------------------------------
 # The consumer `tokenizer_fertility` existed for: turn the per-source
 # token pricing into the sampling DECISION a mixture executor runs.
 # Target = uniform-over-sources (the `domain_mixture_weights`
@@ -828,7 +821,7 @@ def _budget_plan_sql(fert_rel: str, target_rel: str | None = None) -> str:
     MAX_DATA_EPOCHS·n_tokens — one division, one final round — instead
     of multiplying the 6-dp-rounded epochs back by n_tokens, which
     amplified the rounding error by up to ~5e-7·n_tokens (~500k tokens
-    on a 1e12-token source; r15 ADVICE #1). The deficit gates on the
+    on a 1e12-token source). The deficit gates on the
     same rounded ``epochs_needed`` the emitted ``action`` reads, so the
     two columns can never disagree about whether the cap binds."""
     tgt = target_rel or "SELECT source, 1 AS target_share FROM per_src"
@@ -896,7 +889,6 @@ from lakehouse_workshop_spark.operators import ORACLES as _ORACLES
 
 @query(
     "token_budget_plan",
-    tier=2,
     oracle=_budget_plan_sql(_ORACLES["tokenizer_fertility"]),
 )
 def token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -912,8 +904,7 @@ def token_budget_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``cap_repeat`` (the budget share is unbuyable from this source) —
     and ``deficit_tokens``, the share the cap leaves unfilled (the
     mixture re-weighter's input for redistributing it), computed
-    exactly from the unrounded budget share (r15 ADVICE #1; see
-    `_budget_plan_sql`).
+    exactly from the unrounded budget share (see `_budget_plan_sql`).
 
     Determinism: the fertility grain rolls up as exact BIGINT sums; the
     target vector normalizes through an exact DECIMAL window sum; every

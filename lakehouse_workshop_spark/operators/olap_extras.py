@@ -237,7 +237,6 @@ def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "gapfill_daily_revenue",
-    tier=2,
     oracle="""
     WITH bounds AS (
         SELECT MIN(o_orderdate)::DATE AS lo, MAX(o_orderdate)::DATE AS hi
@@ -302,7 +301,6 @@ def gapfill_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "gapfill_locf_revenue",
-    tier=2,
     oracle="""
     WITH bounds AS (
         SELECT MIN(o_orderdate)::DATE AS lo, MAX(o_orderdate)::DATE AS hi

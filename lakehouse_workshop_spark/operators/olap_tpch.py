@@ -1,4 +1,4 @@
-"""TPC-H-shaped OLAP operators, round 5 (engine extensions).
+"""TPC-H-shaped OLAP operators (engine extensions).
 
 Adds the remaining canonical warehouse query shapes the reference's users
 graduate to, adapted to the testdata schema (no partsupp / commitdate /
@@ -38,7 +38,6 @@ _REV = "l_extendedprice * (1 - l_discount)"
 
 @query(
     "promo_revenue_monthly",
-    tier=2,
     oracle=f"""
     SELECT date_trunc('month', l_shipdate) AS month,
            ROUND(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
@@ -86,7 +85,6 @@ def promo_revenue_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "late_shipment_priority",
-    tier=2,
     oracle=f"""
     SELECT o_orderpriority, COUNT(*) AS n_orders
     FROM orders
@@ -125,7 +123,6 @@ def late_shipment_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "volume_shipping",
-    tier=2,
     oracle=f"""
     SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
            CAST(YEAR(l_shipdate) AS INT) AS l_year,
@@ -189,7 +186,6 @@ def volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "market_share",
-    tier=2,
     oracle=f"""
     SELECT l_year,
            ROUND(CAST(SUM(CASE WHEN supp_nation = '{Q8_NATION}'
@@ -263,7 +259,6 @@ def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "top_returned_customers",
-    tier=2,
     oracle=f"""
     SELECT c_custkey, c_name, n_name,
            CAST(SUM(CAST({_REV} AS DECIMAL(38,4))) AS DOUBLE) AS revenue
@@ -306,7 +301,6 @@ def top_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "nation_revenue_share",
-    tier=2,
     oracle=f"""
     WITH nat_rev AS (
         SELECT n_name,
@@ -356,7 +350,6 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "min_cost_supplier",
-    tier=2,
     oracle="""
     SELECT p_partkey, p_name, s_suppkey, s_name, unit_price
     FROM (
@@ -416,7 +409,6 @@ def min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "big_quantity_orders",
-    tier=2,
     oracle=f"""
     SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice,
            SUM(l_quantity) AS total_qty
@@ -464,7 +456,6 @@ def big_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dormant_rich_customers",
-    tier=2,
     oracle=f"""
     SELECT n_name, COUNT(*) AS n_cust,
            CAST(SUM(CAST(c_acctbal AS DECIMAL(38,4))) AS DOUBLE) AS total_bal
@@ -511,7 +502,6 @@ def dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "disjunctive_part_revenue",
-    tier=2,
     oracle=f"""
     SELECT CAST(SUM(CAST({_REV} AS DECIMAL(38,4))) AS DOUBLE) AS revenue,
            COUNT(*) AS n_lines
@@ -567,7 +557,6 @@ BASKET_TOP = 50
 
 @query(
     "basket_part_pairs",
-    tier=2,
     oracle=f"""
     WITH items AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
@@ -621,7 +610,6 @@ LTV_DECILES = 10
 
 @query(
     "customer_ltv_deciles",
-    tier=2,
     oracle=f"""
     WITH spend AS (
         SELECT o_custkey,
@@ -702,7 +690,6 @@ def customer_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "supplier_concentration",
-    tier=2,
     oracle=f"""
     WITH rev AS (
         SELECT n_name, l_suppkey,
@@ -768,7 +755,6 @@ Q17_BRAND, Q17_TYPE = "Brand#3", "ECONOMY"
 
 @query(
     "forecast_revenue_discount",
-    tier=2,
     oracle=f"""
     SELECT ROUND(CAST(SUM(CAST(l_extendedprice * l_discount
                               AS DECIMAL(38,4))) AS DOUBLE), 6) AS revenue_delta
@@ -810,7 +796,6 @@ def forecast_revenue_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_order_distribution",
-    tier=2,
     oracle=f"""
     WITH per_cust AS (
         SELECT c_custkey, COUNT(o_orderkey) AS n_orders
@@ -858,7 +843,6 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "top_revenue_supplier",
-    tier=2,
     oracle=f"""
     WITH srev AS (
         SELECT l_suppkey,
@@ -905,7 +889,6 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "small_quantity_avg_yearly",
-    tier=2,
     oracle=f"""
     WITH brand_li AS (
         SELECT l_partkey, l_quantity, l_extendedprice
@@ -975,7 +958,7 @@ def small_quantity_avg_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- the final five canonical shapes (round 6): Q1, Q9, Q16, Q20, Q21 ------
+# --- the final five canonical shapes: Q1, Q9, Q16, Q20, Q21 ----------------
 # With these, every one of the 22 canonical TPC-H query shapes has an
 # engine analog (adapted where the testdata schema lacks partsupp /
 # commitdate / shipmode, as documented per query).
@@ -994,7 +977,6 @@ Q21_TOP = 100
 
 @query(
     "pricing_summary",
-    tier=2,
     oracle=f"""
     SELECT l_returnflag, l_linestatus,
            CAST(SUM(CAST(l_quantity AS DECIMAL(38,2))) AS DOUBLE) AS sum_qty,
@@ -1055,7 +1037,6 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "product_type_profit",
-    tier=2,
     oracle=f"""
     SELECT n_name AS nation,
            CAST(year(o_orderdate) AS INT) AS o_year,
@@ -1105,7 +1086,6 @@ def product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "supplier_part_variety",
-    tier=2,
     oracle=f"""
     WITH observed AS (
         SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
@@ -1162,7 +1142,6 @@ def supplier_part_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "excess_shipped_suppliers",
-    tier=2,
     oracle=f"""
     SELECT s_suppkey, s_name
     FROM supplier
@@ -1211,7 +1190,6 @@ def excess_shipped_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "waiting_orders_blame",
-    tier=2,
     oracle=f"""
     WITH per AS (
         SELECT l_orderkey, l_suppkey,
@@ -1285,7 +1263,7 @@ def waiting_orders_blame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- co-purchase graph centrality (round 6) --------------------------------
+# --- co-purchase graph centrality ------------------------------------------
 # Link analysis over the part co-purchase graph: which parts sit at the
 # center of basket structure. Complements `basket_part_pairs` (edge
 # support counts) and `near_dup_clusters` (components) with WEIGHTED
@@ -1345,7 +1323,7 @@ def _pagerank_sql(div: str) -> str:
     """
 
 
-@query("part_copurchase_pagerank", tier=2, oracle=_pagerank_sql("//"))
+@query("part_copurchase_pagerank", oracle=_pagerank_sql("//"))
 def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the part co-purchase graph ({PR_ITERS} unrolled
     power-method iterations, damping 0.85): parts that anchor basket
@@ -1435,7 +1413,7 @@ def part_copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-# --- Q12 analog + graph triangles (round 7) ---------------------------------
+# --- Q12 analog + graph triangles -------------------------------------------
 # Q12 completes the 22-shape canon: the testdata schema has no shipmode,
 # so the classic "shipmode service-level mix" groups by l_linestatus and
 # the "late" predicate is ship-lag-derived (as Q4/Q21 already do).
@@ -1447,7 +1425,6 @@ TRI_MIN_SUPPORT = 2
 
 @query(
     "linestatus_priority_mix",
-    tier=2,
     oracle=f"""
     SELECT l_linestatus,
            CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -1508,7 +1485,7 @@ def _tri_sql() -> str:
     """
 
 
-@query("copurchase_triangles", tier=2, oracle=_tri_sql())
+@query("copurchase_triangles", oracle=_tri_sql())
 def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangles in the part co-purchase graph (three parts pairwise
     co-ordered ≥{TRI_MIN_SUPPORT} times) — the cohesion structure one

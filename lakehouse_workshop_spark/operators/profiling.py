@@ -174,7 +174,6 @@ EXPECT_STATUSES = ("'O'", "'F'", "'P'")
 
 @query(
     "table_expectations",
-    tier=2,
     oracle=f"""
     WITH scan AS (
         SELECT COUNT(*) AS total,
@@ -268,7 +267,7 @@ def table_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Count-Min Sketch heavy hitters (round 8) -------------------------------
+# --- Count-Min Sketch heavy hitters -----------------------------------------
 # The sketch family (HLL distinct, approx percentiles, Bloom membership,
 # MinHash/SimHash similarity) was missing its frequency member. CMS
 # (Cormode & Muthukrishnan 2005, "An improved data stream summary: the
@@ -281,7 +280,6 @@ CMS_WIDTH = 8192
 
 @query(
     "cms_heavy_hitters",
-    tier=2,
     oracle=f"""
     WITH k AS (SELECT user_id, COUNT(*) AS c FROM events GROUP BY user_id),
     ranked AS (
@@ -317,8 +315,8 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     events.createOrReplaceTempView("cms_events")
     # The sketch is referenced twice below (the est probe join and the n
     # bound CTE); an unmaterialized view would recompute the events
-    # aggregation per reference (verified: no ReusedExchange in the r9
-    # plan — 3 fact scans, r9 ADVICE). The sketch is a FIXED
+    # aggregation per reference (no ReusedExchange: 3 fact scans). The
+    # sketch is a FIXED
     # {CMS_DEPTH}×{CMS_WIDTH} table, so materializing it pins the fact to
     # exactly two scans: one sketch build + the exact-count contract arm.
     spark.sql(
@@ -373,7 +371,6 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "salted_join_event_nations",
-    tier=2,
     oracle="""
     SELECT n.n_name, CAST(COUNT(*) AS BIGINT) AS n_events
     FROM events e
@@ -420,7 +417,6 @@ HLL_REL_ERR = 0.05  # default lgConfigK=12 gives ~1.6% rel. std. error
 
 @query(
     "hll_distinct_rollup",
-    tier=2,
     oracle="""
     SELECT event_type AS grp,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_distinct,

@@ -98,7 +98,6 @@ def streaming_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_dedup",
-    tier=2,
     oracle="""
     SELECT event_id, user_id, ts, event_type
     FROM events
@@ -137,7 +136,6 @@ def streaming_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_sessionize_flushed",
-    tier=2,
     oracle=f"""
     WITH flagged AS (
         SELECT user_id, ts,
@@ -218,7 +216,6 @@ def session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_event_transitions",
-    tier=2,
     oracle="""
     WITH ordered AS (
         SELECT user_id, event_type,
@@ -251,7 +248,6 @@ def streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "streaming_scd2_history",
-    tier=2,
     oracle="""
     SELECT o_custkey AS custkey,
            o_orderkey AS version_key,
@@ -325,7 +321,6 @@ def _streaming_bloom_oracle() -> str:
 
 @query(
     "streaming_bloom_dedup",
-    tier=2,
     oracle=_streaming_bloom_oracle(),
 )
 def streaming_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -365,7 +360,6 @@ def _streaming_cms_oracle() -> str:
 
 @query(
     "streaming_cms_heavy_hitters",
-    tier=2,
     oracle=_streaming_cms_oracle(),
 )
 def streaming_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -396,7 +390,6 @@ def _streaming_pq_oracle() -> str:
 
 @query(
     "streaming_pq_ingest",
-    tier=2,
     oracle=_streaming_pq_oracle(),
 )
 def streaming_pq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,7 +427,6 @@ def _streaming_lsh_oracle() -> str:
 
 @query(
     "streaming_lsh_ingest",
-    tier=2,
     oracle=_streaming_lsh_oracle(),
 )
 def streaming_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -473,7 +465,6 @@ def _streaming_semantic_oracle() -> str:
 
 @query(
     "streaming_semantic_dedup",
-    tier=2,
     oracle=_streaming_semantic_oracle(),
 )
 def streaming_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -111,12 +111,11 @@ def compare_query(name: str, spark_df, oracle_sql: str, sf_dir: str) -> CompareR
     # The driver's value-hash is dtype-sensitive (int64 255 != float64 255.0)
     # and its canonicalizer sort_values-crashes on list cells — reproduce both
     # strictnesses locally so a slip can't pass 100 parity tests and then fail
-    # the driver (this is exactly what happened with DuckDB SUM(BIGINT) ->
-    # HUGEINT -> float64 in round 1).
+    # the driver (as DuckDB SUM(BIGINT) -> HUGEINT -> float64 would).
     if cols_match:
         # Kind-level check (int vs float vs object...), not exact width:
-        # the driver accepted int32-vs-int64 (customer_recast r1) but
-        # rejected int64-vs-float64 (255 != 255.0 after canonicalization).
+        # the driver accepts int32-vs-int64 (customer_recast) but
+        # rejects int64-vs-float64 (255 != 255.0 after canonicalization).
         def _kind(dtype) -> str:
             k = dtype.kind
             return "i" if k == "u" else k

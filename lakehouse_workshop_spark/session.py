@@ -28,10 +28,8 @@ def _default_driver_mem() -> str:
     """min(32g, ~60% of physical RAM), floored at 2g.
 
     Local mode runs driver AND all executor threads in ONE JVM, so this
-    IS the executor heap (see the 32g rationale below) — but a blanket
-    32g default made the JVM unstartable (or swap-bound) on hosts with
-    less than ~32 GB RAM. Hosts that can afford 32 GiB still get it;
-    smaller hosts get a heap that fits. SPARK_GRAFT_DRIVER_MEM overrides.
+    IS the executor heap; a fixed 32g would not start (or swap) on hosts
+    with less than ~32 GB RAM. SPARK_GRAFT_DRIVER_MEM overrides.
     """
     try:
         total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
@@ -53,8 +51,7 @@ def get_spark(
     cpus = _default_parallelism()
     # Single-threaded BLAS in the Python workers: local[N] already
     # saturates the cores with N worker processes, so N workers × M
-    # spinning OpenBLAS threads only adds sched_yield contention —
-    # measured 5× slower on concurrent first-dgemm at the 100× probe.
+    # spinning OpenBLAS threads only adds sched_yield contention.
     # Set via env BEFORE the JVM launches so workers (forked from it)
     # inherit; setdefault keeps any explicit operator override. A real
     # cluster sets the same via spark.executorEnv.
@@ -73,16 +70,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(cpus))
-        # Prefer shuffled-hash over sort-merge when the build side fits
-        # (guide §3.1/§9): SHJ skips both sides' sorts; measured r17 A/B
-        # over the join-heavy subset: dup_span_scrub −13%, containment
-        # −12%, near_dup_keep_canonical −10%, ivf_pq_topk −13% (min-of-
-        # runs; SMJ remains for large-per-partition builds). Re-measured
-        # r18 (VERDICT watch item): static+AQE beats AQE-threshold-only
-        # on the same subset (total 46.8s vs 48.5s; ngram containment
-        # −14%), and the driver's r17 +24% ngram reading did not
-        # reproduce (ratio 1.00 across alternating runs) — host tax.
-        # Risk, stated honestly (r17 ADVICE): preferSortMergeJoin=false
+        # Prefer shuffled-hash over sort-merge when the build side fits:
+        # SHJ skips both sides' sorts (SMJ remains for large-per-partition
+        # builds). Risk: preferSortMergeJoin=false
         # also enables PLAN-TIME SHJ selection via canBuildLocalHashMap
         # on ESTIMATED stats, independent of the AQE threshold; SHJ's
         # build side cannot spill, so a badly misestimated or skewed
@@ -102,24 +92,18 @@ def get_spark(
         # Scan-side partition sizing: 128 MB splits keep tasks executor-sized
         # at 100 TB; harmless locally.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # Floor scan parallelism at the core count (r17 guide §6): split
-        # packing charges each file only openCostInBytes (4 MB), so a
-        # 32-file probe corpus packed into 4 splits ran every corpus
-        # decode on 4 of 32 cores — measured 12s wall on a stage whose
-        # 32-task form is ~1.5s (hybrid_rank_fusion_ivf at the 10×
-        # probe). The floor divides totalBytes/minPartitionNum into the
+        # Floor scan parallelism at the core count: split packing charges
+        # each file only openCostInBytes (4 MB), so a 32-file corpus would
+        # pack into 4 splits and decode on 4 of 32 cores. The floor
+        # divides totalBytes/minPartitionNum into the
         # split size, so it scales with input: at 100 TB splits stay
         # maxPartitionBytes-sized and the floor is a no-op; on small
         # inputs it stops the packer from serializing the scan.
         .config("spark.sql.files.minPartitionNum", str(cpus))
         # Local mode runs driver AND all executor threads in ONE JVM, so
-        # this IS the executor heap: at 8g/32 threads each task got
-        # ~150 MB of execution memory — the 100× probes measured a
-        # +30-65% "session aging" tax (minhash_lsh_pairs 12.6s clean →
-        # 14-19s after a headline sweep) from old-gen pressure and
-        # shuffle spill. 32g removes it (11s steady after the same
-        # sweep). Cluster deployments size executors explicitly and
-        # override via SPARK_GRAFT_DRIVER_MEM.
+        # this IS the executor heap; a small heap taxes long sessions with
+        # old-gen pressure and shuffle spill. Cluster deployments size
+        # executors explicitly and override via SPARK_GRAFT_DRIVER_MEM.
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),

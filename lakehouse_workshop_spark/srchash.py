@@ -1,69 +1,60 @@
 """Transitive source hashing for registry governance.
 
-Round 10 drove through a blind spot in the changed-source rule: the rule
-hashed only ``inspect.getsource(fn)`` of the registered query function,
-so editing a shared module helper (``_pq_knobs``, the ``exact_topk`` BLAS
-norm move, ``_assign_encode_fn``) changed the behavior of out-of-window
-registered queries with zero hash drift — their old driver rows kept
-vouching for code that no longer ran (r10 verdict, "What's wrong #1").
+:func:`governed_source_hash` covers what a registered query computes:
+the registered function plus every package-level function/class it
+transitively references (via ``co_names`` / ``co_freevars`` of its code
+objects, nested lambdas included, and function-local package imports),
+the ``repr`` of every referenced package-level constant, and the
+expanded oracle SQL string. Editing a shared helper therefore drifts the
+hash of every dependent query, and only of those.
 
-:func:`governed_source_hash` closes that hole: the hash covers the
-registered function's source PLUS the source of every package-level
-function/class it transitively references (via ``co_names`` /
-``co_freevars`` of its code objects, nested lambdas included) and the
-``repr`` of every referenced package-level constant, PLUS the expanded
-oracle SQL string (the old function-body hash only saw the oracle
-*builder call* in the decorator text, so oracle-helper edits were
-equally invisible). A helper rewrite now drifts the hash of every
-dependent query, forcing each one back into the driver window.
+Each def/class is hashed as the docstring-free AST of its source
+(:func:`_governed_text`): comments, docstrings, formatting and the
+``@query(...)`` registration call never reach the hash. The oracle that
+call registers is hashed by value, its name is the registry key, and
+``scale_path`` is registry metadata checked by
+``tests/test_registry.py``.
 
-Granularity note: hashing the *referenced closure* (not the whole
-defining module, the r10 verdict's minimum ask) keeps the slot economics
-workable — editing one helper drifts its dependents only, not every
-query that happens to share a file. The trade-off is approximation at
-two edges, both conservative-enough in this codebase: (a) classes are
-hashed by their own source without recursing into what their methods
-reference, and (b) dynamic references (``getattr``-by-string) are
-invisible — neither pattern is used for behavior-carrying query helpers
-here (enforced culturally; the pin tests in ``tests/test_srchash.py``
-cover the patterns that ARE used).
+Known edges: classes are hashed by their own source without recursing
+into what their methods reference, and dynamic references
+(``getattr``-by-string) are invisible. Neither pattern carries query
+behavior in this package; ``tests/test_srchash.py`` pins the patterns
+that do.
 
-Policy corollary: a behavior change to a helper shared by more than a
-window's worth of queries (e.g. ``dec_sum``) will make
-``tools/make_driver_order.py`` refuse to write — which is honest: more
-than 50 driver rows really would be stale. Such an edit must ship in a
-round that windows the biggest dependents and explicitly documents the
-rest as pending re-verification over the following rounds.
+A behavior change to a helper shared by more than a window's worth of
+queries (e.g. ``dec_sum``) makes ``tools/make_driver_order.py`` refuse to
+write, because more than 50 driver rows really would be stale; such an
+edit must defer the dependents it cannot window.
 """
 
 from __future__ import annotations
 
+import ast
 import functools
 import hashlib
+import importlib.util
 import inspect
+import sys
+import textwrap
 import types
 from pathlib import Path
 
 PACKAGE = "lakehouse_workshop_spark"
 # Oracle SQL may embed absolute fixture paths (the CLV golden parquet);
-# hashing them verbatim would make the governed hash depend on where the
-# repo is checked out, so the root is replaced by a fixed token first.
+# the repo root is replaced by a fixed token so the hash does not depend
+# on where the repo is checked out.
 REPO_ROOT = str(Path(__file__).resolve().parents[1])
 
 _MISSING = object()
 _SIMPLE = (int, float, complex, bool, str, bytes, type(None))
 
-# Module-level RUNTIME state (worker scratch buffers, driver-side memo
-# caches) — mutable containers whose contents change as queries execute
-# in-process. Hashing their repr would make the governed hash depend on
-# what ran earlier in the same process (the full pytest session measured
-# exactly that: test_plans_md_current flaked after the CLV tests filled
-# _SCORED_CACHE). Every such cache MUST be listed here; the invariance
-# pin in tests/test_srchash.py fails if a listed cache still leaks into
-# a hash, and a future unlisted cache will resurface as that same
-# in-suite flake pointing here. Keyed on (referencing module, name) —
-# not bare name (r11 ADVICE) — so a genuine behavior-carrying constant
-# that happens to share a cache's name in ANOTHER module still governs.
+# Module-level runtime state (worker scratch buffers, driver-side memo
+# caches): mutable containers whose contents change as queries execute
+# in-process, so hashing their repr would make the hash depend on what
+# ran earlier. Every such cache must be listed here; the invariance pin
+# in tests/test_srchash.py fails if a listed cache leaks into a hash.
+# Keyed on (referencing module, name), so a behavior-carrying constant
+# that shares a cache's name in another module still governs.
 RUNTIME_STATE = {
     (f"{PACKAGE}.kernels", "_WORKER_BUFS"),
     (f"{PACKAGE}.clv.pipeline", "_SCORED_CACHE"),
@@ -95,10 +86,8 @@ def _unwrap(obj):
     Covers ``functools.wraps`` chains (``__wrapped__``) and pyspark UDF
     objects (``.func``) so a module-level ``@pandas_udf`` helper hashes by
     the code it runs, not the wrapper's repr. ``functools.partial`` is
-    NOT unwrapped here — its bound arguments carry behavior, so
-    :func:`_collect` hashes them explicitly before recursing into
-    ``.func`` (r11 ADVICE: blind ``.func`` unwrapping made an
-    args-only partial edit invisible to the hash)."""
+    not unwrapped here: its bound arguments carry behavior, so
+    :func:`_govern_object` hashes them before recursing into ``.func``."""
     if isinstance(obj, functools.partial):
         return obj
     for attr in ("__wrapped__", "func"):
@@ -110,10 +99,9 @@ def _unwrap(obj):
 
 def _const_repr(v) -> str:
     """Process-stable repr for a compile-time constant: frozenset/set
-    literals iterate in string-hash order (randomized per process —
-    ``lambda x: x in {'a', 'b'}`` stores a frozenset in co_consts and
-    its repr differs across PYTHONHASHSEEDs), so sets sort by element
-    repr and tuples recurse to cover nested set literals."""
+    literals iterate in string-hash order (randomized per process), so
+    sets sort by element repr and tuples recurse to cover nested set
+    literals."""
     if isinstance(v, (set, frozenset)):
         return "{" + ", ".join(sorted(_const_repr(x) for x in v)) + "}"
     if isinstance(v, tuple):
@@ -124,14 +112,11 @@ def _const_repr(v) -> str:
 def _bytecode_digest(code) -> str:
     """Process-stable digest of a code object's behavior-carrying parts.
 
-    ``co_code`` alone is NOT enough (r12 ADVICE): CPython stores literal
-    constants in ``co_consts`` and referenced names in ``co_names``, so
+    ``co_code`` alone is not enough: literal constants live in
+    ``co_consts`` and referenced names in ``co_names``, so
     ``lambda x: x + 1`` and ``lambda x: x + 2`` share identical
-    ``co_code`` and a constants-only edit to an exec-defined callable
-    would be invisible. Nested code objects (whose ``repr`` embeds a
-    ``0x`` address) recurse; every other const goes through
-    :func:`_const_repr` (set literals are hash-order-iterated and need
-    element sorting to stay process-stable)."""
+    ``co_code``. Nested code objects (whose ``repr`` embeds a ``0x``
+    address) recurse; every other const goes through :func:`_const_repr`."""
     h = hashlib.sha256()
     stack = [code]
     while stack:
@@ -148,9 +133,8 @@ def _bytecode_digest(code) -> str:
 
 def _stable_identity(obj, key: tuple[str, str]) -> str:
     """Source-free fallback that never embeds a memory address: module-
-    qualified name plus the bytecode digest when available (repr() of a
-    function/class contains ``0x...`` — id()s differ per process, which
-    would make registry_hash nondeterministic across runs; r11 ADVICE)."""
+    qualified name plus the bytecode digest when available (``repr()`` of
+    a function/class contains ``0x...``, which differs per process)."""
     ident = f"{key[0]}.{key[1]}"
     code = getattr(obj, "__code__", None)
     if code is not None:
@@ -158,8 +142,46 @@ def _stable_identity(obj, key: tuple[str, str]) -> str:
     return ident
 
 
+def _is_registration(node: ast.expr) -> bool:
+    """A ``@query(...)`` decorator call."""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "query"
+    )
+
+
+def _governed_text(src: str) -> tuple[str, ast.AST | None]:
+    """The hashed text of a def/class source, and its parsed tree.
+
+    The text is ``ast.unparse`` of the dedented source with the leading
+    docstring of every def/class body and every ``@query(...)`` decorator
+    removed, so comments, docstrings and formatting never reach the hash.
+    Source that does not parse hashes as raw text (tree ``None``)."""
+    try:
+        tree = ast.parse(textwrap.dedent(src))
+    except SyntaxError:
+        return src, None
+    for node in ast.walk(tree):
+        if not isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ):
+            continue
+        node.decorator_list = [
+            d for d in node.decorator_list if not _is_registration(d)
+        ]
+        first = node.body[0]
+        if (
+            isinstance(first, ast.Expr)
+            and isinstance(first.value, ast.Constant)
+            and isinstance(first.value.value, str)
+        ):
+            node.body = node.body[1:] or [ast.Pass()]
+    return ast.unparse(tree), tree
+
+
 def collect_sources(fn) -> dict[str, str]:
-    """Map of identifier -> source/repr for fn and its package-level closure."""
+    """Map of identifier -> hashed text for fn and its package-level closure."""
     out: dict[str, str] = {}
     _collect(fn, out, set())
     return out
@@ -177,7 +199,7 @@ def _collect(fn, out: dict[str, str], seen: set) -> None:
         # identity (+bytecode digest); nothing to recurse into.
         out[f"def {key[0]}.{key[1]}"] = _stable_identity(fn, key)
         return
-    out[f"def {key[0]}.{key[1]}"] = src
+    out[f"def {key[0]}.{key[1]}"], tree = _governed_text(src)
     g = getattr(fn, "__globals__", {})
     gmod = g.get("__name__", key[0])
     closure: dict[str, object] = {}
@@ -194,7 +216,8 @@ def _collect(fn, out: dict[str, str], seen: set) -> None:
         if obj is _MISSING or isinstance(obj, types.ModuleType):
             continue  # builtins, attribute names, module refs
         _govern_object(obj, name, gmod, out, seen)
-    _collect_local_imports(src, out, seen, key[0])
+    if tree is not None:
+        _collect_local_imports(tree, out, seen, key[0])
 
 
 def _govern_object(obj, name: str, gmod: str, out: dict[str, str], seen: set) -> None:
@@ -217,13 +240,10 @@ def _govern_object(obj, name: str, gmod: str, out: dict[str, str], seen: set) ->
                 )
             # repr() only for values with deterministic reprs: simple
             # scalars, plain containers thereof, and objects with a
-            # CUSTOM __repr__ (value-carrying by authorial intent —
-            # np.ndarray included; dropping these to a type-name pin
-            # would make a value-only edit to a bound array invisible,
-            # the r11 partial defect class). Only the DEFAULT
-            # object.__repr__ embeds a 0x address (r12 ADVICE — the
-            # per-process nondeterminism this function exists to
-            # avoid); those pin by module-qualified type.
+            # custom __repr__ (value-carrying by authorial intent,
+            # np.ndarray included, so a value-only edit to a bound array
+            # still drifts). Only the default object.__repr__ embeds a
+            # 0x address; those pin by module-qualified type.
             if isinstance(v, _SIMPLE):
                 return repr(v)
             if isinstance(v, (set, frozenset)):
@@ -265,7 +285,7 @@ def _govern_object(obj, name: str, gmod: str, out: dict[str, str], seen: set) ->
         ckey = f"class {obj.__module__}.{obj.__qualname__}"
         if ckey not in out:
             try:
-                out[ckey] = inspect.getsource(obj)
+                out[ckey] = _governed_text(inspect.getsource(obj))[0]
             except (OSError, TypeError):
                 out[ckey] = _stable_identity(
                     obj, (obj.__module__, obj.__qualname__)
@@ -285,51 +305,30 @@ def _govern_object(obj, name: str, gmod: str, out: dict[str, str], seen: set) ->
 
 
 def _collect_local_imports(
-    src: str, out: dict[str, str], seen: set, module: str = "?"
+    tree: ast.AST, out: dict[str, str], seen: set, module: str = "?"
 ) -> None:
-    """Govern function-LOCAL package imports (r13 review finding #2).
+    """Govern function-local package imports.
 
     ``from lakehouse_workshop_spark.x import y`` inside a function body
     binds ``y`` as a local, so it is absent from ``fn.__globals__`` and
-    the ``co_names`` loop skips it — the 125-line streaming job behind
-    ``streaming_semantic_dedup`` (and the LSH twin before it) was
-    invisible to changed-source governance: an edit to the gate logic
-    would have shipped with zero hash drift, the exact r10 ``_pq_knobs``
-    defect class. Resolving the AST's package-ImportFrom targets closes
-    it: each imported object is governed exactly like a global
-    reference, keyed by its HOME module (which is also what
-    ``RUNTIME_STATE`` exclusion keys mean)."""
-    import ast
-    import importlib.util
-    import textwrap
-
-    try:
-        tree = ast.parse(textwrap.dedent(src))
-    except SyntaxError:  # pragma: no cover - getsource quirk safety net
-        return
+    the ``co_names`` loop skips it. Each package ``ImportFrom`` target in
+    the function's tree is governed exactly like a global reference,
+    keyed by its home module (which is also what ``RUNTIME_STATE``
+    exclusion keys mean)."""
     for node in ast.walk(tree):
         if not isinstance(node, ast.ImportFrom):
             continue
         target = node.module or ""
         if node.level > 0:
-            # Relative package import (``from .jobs import x``): the AST
-            # carries the module WITHOUT the package prefix, so the
-            # prefix check below would silently skip it — reopening the
-            # exact hole this resolver closes (r13 ADVICE #1). Resolve
-            # against the defining module's package first; if the base
-            # module is unknown, pin loudly rather than skip.
-            import sys as _sys
-
-            base_mod = _sys.modules.get(module)
+            # The AST carries a relative import's module without the
+            # package prefix: resolve it against the defining module's
+            # package first.
+            base_mod = sys.modules.get(module)
             base = getattr(base_mod, "__package__", None)
             if not base:
-                # Unknown defining module (not in sys.modules, or no
-                # __package__): guessing a base here resolves a plain
-                # module's level-1 import one level too deep
-                # (pkg.mod + '.x' -> pkg.mod.x instead of pkg.x), which
-                # would pin a NONEXISTENT name and silently stop
-                # governing the real import target — the silent-skip
-                # class this resolver exists to close. Pin loudly.
+                # Unknown defining module: guessing a base would resolve
+                # a plain module's level-1 import one level too deep and
+                # silently govern a nonexistent name. Pin loudly.
                 target = ""
             else:
                 try:
@@ -339,7 +338,7 @@ def _collect_local_imports(
                 except (ImportError, ValueError):
                     target = ""
             if target != PACKAGE and not target.startswith(PACKAGE + "."):
-                # A relative import inside governed package source MUST
+                # A relative import inside governed package source must
                 # resolve into the package — if it didn't, the base was
                 # unknown: pin loudly rather than silently skip.
                 for alias in node.names:
@@ -353,10 +352,8 @@ def _collect_local_imports(
         try:
             mod = importlib.import_module(target)
         except ImportError:
-            # A function-local import guarded by try/except ImportError
-            # (or a module missing in a stripped environment) must not
-            # turn every registry_hash call into a crash (r13 ADVICE
-            # #2): fold a stable module+name pin instead — edits to the
+            # A guarded or missing import must not crash registry_hash:
+            # fold a stable module+name pin instead — edits to the
             # import line still drift the hash via the function source.
             for alias in node.names:
                 out[f"import {target}.{alias.name}"] = (

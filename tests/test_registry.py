@@ -326,14 +326,13 @@ def test_scale_path_targets_resolve():
 
 
 def test_plans_md_current():
-    """Plan-audit atomicity (since round 10, r9 verdict ask #2): every
-    audited (non-streaming) query's registered source must hash-match
-    the footer PLANS.md recorded at generation — a query rewrite cannot
-    ship without regenerating its plan row (both r9 plan rewrites did,
-    leaving PLANS.md stale for a full round). Since round 11 the hash is
-    the governed transitive hash (srchash.py): a helper edit that could
-    change a dependent query's physical plan forces that query's plan row
-    to regenerate too."""
+    """Plan-audit atomicity: every audited (non-streaming) query's
+    governed hash must match the footer PLANS.md recorded at generation,
+    so a query rewrite cannot ship without regenerating its plan row.
+    The hash covers the docstring-free AST of the transitive closure,
+    plus the oracle SQL (srchash.py): a helper edit that could change a
+    dependent query's physical plan forces that query's plan row to
+    regenerate too, and a comment or docstring edit does not."""
     import re
 
     from lakehouse_workshop_spark.srchash import governed_source_hash

@@ -11,6 +11,7 @@ old function-body hash.
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import importlib.util
 import inspect
@@ -94,8 +95,12 @@ def test_helper_only_edit_drifts_new_hash_but_not_old(tmp_path):
     editing ONLY a shared helper (and a module constant) drifts the
     governed hash, while the pre-r11 function-body hash stays identical —
     i.e. the old rule really was blind and the new one really isn't."""
-    m1 = _load_scratch(tmp_path, _MOD_V1, "v1")
-    m2 = _load_scratch(tmp_path, _MOD_V2, "v2")
+    # Same module name for both versions: the module name is part of every
+    # closure key, so distinct names would drift the hash on their own.
+    (tmp_path / "v1").mkdir()
+    (tmp_path / "v2").mkdir()
+    m1 = _load_scratch(tmp_path / "v1", _MOD_V1, "edit")
+    m2 = _load_scratch(tmp_path / "v2", _MOD_V2, "edit")
     try:
         old_style = lambda fn: hashlib.sha256(  # noqa: E731
             inspect.getsource(fn).encode()
@@ -109,10 +114,123 @@ def test_helper_only_edit_drifts_new_hash_but_not_old(tmp_path):
         assert any(k.endswith(".helper") for k in keys)
         assert any(k.endswith(".KNOB") for k in keys)
     finally:
-        for stamp in ("v1", "v2"):
-            sys.modules.pop(
-                f"lakehouse_workshop_spark._scratch_srchash_{stamp}", None
-            )
+        sys.modules.pop("lakehouse_workshop_spark._scratch_srchash_edit", None)
+
+
+_PIN_BASE = '''
+def query(name, oracle=None, scale_path=None):
+    return lambda fn: fn
+
+
+KNOB = 8
+
+
+def helper(x):
+    """Add the knob."""
+    return x + KNOB * 2
+
+
+@query("pin_q", oracle="SELECT 1")
+def query_fn(y):
+    """Scaled helper output."""
+    return helper(y) * 3 + len("abc")
+'''
+
+# Edits to how the source reads, not to what it computes.
+_PIN_SAME = {
+    "docstring": _PIN_BASE.replace("Scaled helper output.", "Reworded."),
+    "helper_docstring": _PIN_BASE.replace(
+        "Add the knob.", "Add\n    the knob twice."
+    ),
+    "comment": _PIN_BASE.replace(
+        '    return helper(y) * 3 + len("abc")',
+        '    # a new comment\n    return helper(y) * 3 + len("abc")  # why',
+    ),
+    "reflow": _PIN_BASE.replace(
+        'return helper(y) * 3 + len("abc")',
+        "return (\n        helper(y) * 3\n        + len('abc')\n    )",
+    ),
+    "query_keyword": _PIN_BASE.replace(
+        '@query("pin_q", oracle="SELECT 1")',
+        '@query(\n    "pin_q",\n    oracle="SELECT 1",\n    scale_path="pin_twin",\n)',
+    ),
+}
+# One-token edits to a literal the query computes with.
+_PIN_DRIFT = {
+    "body_literal": _PIN_BASE.replace("* 3 +", "* 4 +"),
+    "helper_literal": _PIN_BASE.replace("KNOB * 2", "KNOB * 5"),
+    "string_literal": _PIN_BASE.replace('len("abc")', 'len("abcd")'),
+}
+
+
+def test_hash_covers_computation_not_presentation(tmp_path):
+    """Docstrings, comments, line layout and the ``@query(...)`` call
+    never reach the governed hash; a one-token literal edit in the query
+    or in a helper it calls always does. Every variant loads under the
+    same module name (from its own file), so only the text differs."""
+    name = "lakehouse_workshop_spark._scratch_srchash_pin"
+
+    def load_hash(variant: str, text: str) -> str:
+        d = tmp_path / variant
+        d.mkdir()
+        return governed_source_hash(_load_scratch(d, text, "pin").query_fn)
+
+    variants = {**_PIN_SAME, **_PIN_DRIFT}
+    assert all(text != _PIN_BASE for text in variants.values())
+    try:
+        base = load_hash("base", _PIN_BASE)
+        hashes = {k: load_hash(k, text) for k, text in variants.items()}
+    finally:
+        sys.modules.pop(name, None)
+    assert {k: hashes[k] for k in _PIN_SAME} == {k: base for k in _PIN_SAME}
+    assert all(hashes[k] != base for k in _PIN_DRIFT), hashes
+
+
+_DIGEST_SNIPPET = '''
+    @query("q", oracle=f"SELECT {N}")
+    def q(spark, sf_dir: str, *, k=(1, 2.5, -3), **kw) -> "DataFrame":
+        """Docstring."""
+        sql = f"""
+        SELECT a, {k[0]!r:>4} -- kept: part of the string
+        FROM t WHERE b IN ('x', "y")
+        """
+        xs = [v ** 2 for v in range(10) if v % 2 == 0 or not v]
+        m = {key: val for key, val in kw.items()}
+        g = lambda a, b=1: (a @ b, a // b, -a, a if b else None)
+
+        async def inner():
+            """Nested docstring."""
+            async with lock as held:
+                return await held
+
+        try:
+            x = {*xs, 1j}
+        except (ValueError, KeyError) as e:
+            raise RuntimeError("bad") from e
+        finally:
+            del m
+        return spark.sql(sql).where(x[1:-1:2] is not None and (y := 3))
+'''
+_DIGEST_PIN = "bed98c9ceba53eb3"  # Python 3.11
+
+
+def test_governed_text_digest_is_pinned():
+    """The governed hash is ``ast.unparse`` of the docstring-free tree, so
+    its exact text belongs to the interpreter. This pin fails on its own
+    when an interpreter change moves that text, instead of every
+    registry hash drifting at once."""
+    from lakehouse_workshop_spark.srchash import _governed_text
+
+    text, tree = _governed_text(_DIGEST_SNIPPET)
+    assert tree is not None
+    digest = hashlib.sha256(text.encode()).hexdigest()[:16]
+    assert digest == _DIGEST_PIN, (
+        f"ast.unparse output moved with the interpreter (Python "
+        f"{sys.version.split()[0]}): digest {digest} != pinned "
+        f"{_DIGEST_PIN}. Every governed hash moves with it: restamp the "
+        "driver manifest and PLANS.md footers from unchanged source, then "
+        "update this pin."
+    )
 
 
 def test_registry_hashes_are_deterministic_and_distinct():
@@ -469,7 +587,7 @@ def test_relative_local_import_resolves_into_package():
         "    return run_streaming_semantic_dedup\n"
     )
     srchash._collect_local_imports(
-        src, out, set(), f"{srchash.PACKAGE}.streaming"
+        ast.parse(src), out, set(), f"{srchash.PACKAGE}.streaming"
     )
     assert any(
         k.endswith(".run_streaming_semantic_dedup") for k in out
@@ -483,7 +601,7 @@ def test_relative_local_import_resolves_into_package():
         "    return ivf_rebalance\n"
     )
     srchash._collect_local_imports(
-        src2, out2, set(), f"{srchash.PACKAGE}.operators.llm_dedup"
+        ast.parse(src2), out2, set(), f"{srchash.PACKAGE}.operators.llm_dedup"
     )
     assert any(k.endswith(".ivf_rebalance") for k in out2)
 
@@ -495,7 +613,7 @@ def test_relative_local_import_unknown_base_pins_loudly():
 
     out: dict[str, str] = {}
     src = "def f():\n    from .mystery import thing\n"
-    srchash._collect_local_imports(src, out, set(), "?")
+    srchash._collect_local_imports(ast.parse(src), out, set(), "?")
     assert out, "unresolvable relative import was silently skipped"
     assert any("unresolvable relative import" in v for v in out.values())
 
@@ -515,6 +633,6 @@ def test_unimportable_local_import_pins_instead_of_crashing():
         "        gadget = None\n"
         "    return gadget\n"
     )
-    srchash._collect_local_imports(src, out, set(), srchash.PACKAGE)
+    srchash._collect_local_imports(ast.parse(src), out, set(), srchash.PACKAGE)
     key = f"import {srchash.PACKAGE}.does_not_exist.gadget"
     assert out.get(key, "").startswith("unimportable:")

@@ -13,13 +13,13 @@ rules decide who must be in the upcoming window (both enforced by
    relaxed to a fixed 3-round rotation, which itself hit exact capacity
    at 144 queries the same round; the ceil() form is the principled
    fix — at 144 queries P = 4, capacity 200.)
-2. **Changed source re-verifies**: any query whose governed source
-   (transitive package closure of the registered function — module
-   helpers, constants, nested lambdas — plus the expanded oracle SQL;
-   see ``lakehouse_workshop_spark/srchash.py``) changed since the hash
-   recorded at its last window entry must be in the window. Until round
-   11 this hashed only ``inspect.getsource(fn)``, which is how the r10
-   ``_pq_knobs`` helper edit shipped without re-verifying its dependents.
+2. **Changed source re-verifies**: any query whose governed hash changed
+   since the hash recorded at its last window entry must be in the
+   window. The hash covers the docstring-free AST of the transitive
+   closure (the registered function and every package helper, class,
+   constant and nested lambda it reaches), plus the oracle SQL; see
+   ``lakehouse_workshop_spark/srchash.py``. Comments, docstrings,
+   formatting and ``@query(...)`` keywords do not move it.
 
 This tool (a) prints the stale and changed lists so DRIVER_ORDER can be
 rebuilt by hand at round start, and (b) writes

@@ -115,12 +115,11 @@ def main() -> None:
             f"| {s['uwin']} |"
         )
     # Source-hash footer: the same change-atomicity rule that governs
-    # DRIVER_ORDER (r9 verdict ask #2 — both r9 plan rewrites shipped
-    # without their plan rows). tests/test_registry.py::
-    # test_plans_md_current compares every audited query's CURRENT
-    # governed hash (transitive closure + oracle, srchash.py — since r11)
-    # against these, so neither a query rewrite nor a shared-helper edit
-    # can ship without regenerating the affected plan rows.
+    # DRIVER_ORDER. tests/test_registry.py::test_plans_md_current compares
+    # every audited query's CURRENT governed hash (docstring-free AST of
+    # the transitive closure, plus the oracle SQL; srchash.py) against
+    # these, so neither a query rewrite nor a shared-helper edit can ship
+    # without regenerating the affected plan rows.
     from lakehouse_workshop_spark.srchash import registry_hash
 
     lines.append("")
