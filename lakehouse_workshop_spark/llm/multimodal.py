@@ -12,11 +12,14 @@ NATIVELY — real decodes execute in this container, distributed, via the
 features come from a real Hann-window rFFT spectrogram
 (``extract_audio_features``); baseline JPEG decodes natively too
 (``llm/jpeg.py``, lossy-but-deterministic — ``jpeg_decode_stats`` pins a
-reconstruction-error contract). Only video containers still need an
-injected codec — ``decode_image`` raises ``NotImplementedError`` for
-those, explicitly. ``extract_features_batch``
+reconstruction-error contract). ``decode_image`` raises
+``NotImplementedError`` for any other format, explicitly. ``extract_features``
 keeps a deterministic md5-based fake "feature extractor" so the batch
 plumbing is oracle-checkable end-to-end.
+
+Every synthesized media table comes from ``_docs_media``: ``documents``
+read through the one spread gate, one Arrow-batched encode pass. Every
+per-row decode runs through ``_map_rows``.
 
 Scale posture: mapInPandas streams Arrow record batches, so peak memory per
 task is one batch (tune ``spark.sql.execution.arrow.maxRecordsPerBatch``
@@ -31,33 +34,13 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("media_type", StringType(), True),
-        StructField("payload", BinaryType(), True),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-    ]
+MEDIA_SCHEMA = (
+    "media_id BIGINT NOT NULL, media_type STRING, payload BINARY, "
+    "width BIGINT, height BIGINT"
 )
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), True),
-        StructField("n_bytes", LongType(), True),
-        StructField("checksum", StringType(), True),
-        StructField("feature", ArrayType(DoubleType()), True),
-    ]
+FEATURE_SCHEMA = (
+    "media_id BIGINT, n_bytes BIGINT, checksum STRING, feature ARRAY<DOUBLE>"
 )
 
 
@@ -317,17 +300,14 @@ def decode_wav(payload: bytes):
     raise ValueError("WAV missing data chunk")
 
 
-def decode_image(payload: bytes, decoder: Callable[[bytes], object] | None = None):
+def decode_image(payload: bytes):
     """Decode an image payload.
 
-    PPM (P6) and 8-bit RGB PNG decode natively (pure numpy / stdlib zlib —
-    real decodes that execute in this container; exercised distributed by
-    the ``image_decode_stats`` and ``png_decode_stats`` queries). Any other
-    format needs an injected codec (e.g. ``PIL.Image.open``) — without one
-    this raises, explicitly.
+    PPM (P6), 8-bit RGB PNG and baseline JPEG decode natively (pure numpy
+    / stdlib zlib — real decodes that execute in this container; exercised
+    distributed by the ``image_decode_stats``, ``png_decode_stats`` and
+    ``jpeg_decode_stats`` queries). Any other format raises, explicitly.
     """
-    if decoder is not None:
-        return decoder(payload)
     if bytes(payload[:2]) == PPM_MAGIC:
         return decode_ppm(payload)
     if bytes(payload[:8]) == PNG_SIG:
@@ -336,45 +316,97 @@ def decode_image(payload: bytes, decoder: Callable[[bytes], object] | None = Non
         from lakehouse_workshop_spark.llm.jpeg import decode_jpeg
 
         return decode_jpeg(payload)
-    raise NotImplementedError(
-        "no codec for this format in this environment — inject "
-        "decoder=PIL.Image.open (or equivalent) when available"
+    raise NotImplementedError("no codec for this format in this environment")
+
+
+FEATURE_DIM = 4
+
+
+def _fake_feature(digest: bytes) -> list[float]:
+    """Deterministic stand-in for a real encoder: first ``FEATURE_DIM``
+    digest bytes scaled to [0, 1]."""
+    return [round(b / 255.0, 6) for b in digest[:FEATURE_DIM]]
+
+
+def _map_rows(df: DataFrame, cols: list[str], schema_ddl: str, fn) -> DataFrame:
+    """The one per-row decode pass: ``fn`` takes a row's ``cols`` values
+    and returns its output row as a tuple in ``schema_ddl``'s column
+    order, inside Arrow-batched mapInPandas."""
+    from pyspark.sql.types import StructType
+
+    names = StructType.fromDDL(schema_ddl).names
+
+    def body(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [fn(*row) for row in zip(*(pdf[c] for c in cols))]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(*cols).mapInPandas(body, schema=schema_ddl)
+
+
+def _docs_media(
+    spark: SparkSession,
+    sf_dir: str,
+    media_type: str,
+    size: int | None,
+    encode: Callable[[int, str], list[tuple[int, bytes]]],
+) -> DataFrame:
+    """The one document-to-media synthesizer: ``documents`` read through
+    the spread gate (``llm_dedup._docs_view``, which registers the view),
+    then one Arrow-batched pass where ``encode(doc_id, text)`` returns that
+    doc's ``(media_id, payload)`` pairs. ``size`` stamps width and height
+    (None for audio)."""
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
+
+    _docs_view(spark, sf_dir)
+
+    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            pairs = [
+                pair
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
+                for pair in encode(int(doc_id), text)
+            ]
+            ids = pd.Series([m for m, _ in pairs], dtype="int64")
+            yield pd.DataFrame(
+                {
+                    "media_id": ids,
+                    "media_type": media_type,
+                    "payload": [b for _, b in pairs],
+                    "width": size,
+                    "height": size,
+                }
+            )
+
+    docs = spark.table("documents").select("doc_id", "text")
+    return docs.mapInPandas(body, schema=MEDIA_SCHEMA)
+
+
+PPM_SIDE = 8  # synthesized images are PPM_SIDE x PPM_SIDE RGB
+
+
+def digest_raster(text: str):
+    """The PPM_SIDE² RGB raster whose 192 pixel bytes are md5(text)
+    repeated 12× — deterministic, so SQL recomputes any pixel statistic
+    from the digest hex without decoding."""
+    import numpy as np
+
+    digest = hashlib.md5(text.encode("utf-8")).digest()
+    reps = PPM_SIDE * PPM_SIDE * 3 // 16
+    return np.frombuffer(digest * reps, dtype=np.uint8).reshape(
+        PPM_SIDE, PPM_SIDE, 3
     )
-
-
-def _fake_feature(digest: bytes, dim: int = 4) -> list[float]:
-    """Deterministic stand-in for a real encoder: first ``dim`` digest bytes
-    scaled to [0, 1]."""
-    return [round(b / 255.0, 6) for b in digest[:dim]]
-
-
-def extract_features_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: per Arrow batch, hash payloads and emit metadata +
-    a (fake) feature vector. Replace ``_fake_feature`` with a real encoder
-    call; the batch shape stays identical."""
-    for pdf in batches:
-        digests = [hashlib.md5(p).digest() for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "media_id": pdf["media_id"].astype("int64"),
-                "n_bytes": pdf["payload"].map(len).astype("int64"),
-                "checksum": [d.hex() for d in digests],
-                "feature": [_fake_feature(d) for d in digests],
-            }
-        )
 
 
 def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize a media table from ``documents`` (text bytes as payload) —
     exercises the binary-column path end-to-end without real media files."""
-    from lakehouse_workshop_spark.catalog import load_table
+    from lakehouse_workshop_spark.operators.llm_dedup import _docs_view
 
-    # Spread payload rows across workers: the parquet is one row group, and
-    # mapInPandas parallelism equals input partitions.
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    return docs.select(
+    _docs_view(spark, sf_dir)
+    return spark.table("documents").select(
         F.col("doc_id").alias("media_id"),
         F.lit("text/fake").alias("media_type"),
         F.encode("text", "UTF-8").alias("payload"),
@@ -384,94 +416,40 @@ def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def extract_features(media: DataFrame) -> DataFrame:
-    """Feature-extraction operator: Arrow-batched mapInPandas over payloads."""
-    return media.mapInPandas(extract_features_batch, schema=FEATURE_SCHEMA)
+    """Feature-extraction operator: hash each payload and emit metadata + a
+    (fake) feature vector. Replace ``_fake_feature`` with a real encoder
+    call; the batch shape stays identical."""
 
+    def features(mid, payload):
+        digest = hashlib.md5(payload).digest()
+        return int(mid), len(payload), digest.hex(), _fake_feature(digest)
 
-PPM_SIDE = 8  # synthesized images are PPM_SIDE x PPM_SIDE RGB
+    return _map_rows(media, ["media_id", "payload"], FEATURE_SCHEMA, features)
 
 
 def media_ppm_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize a REAL image table from ``documents``: each doc becomes an
-    8×8 RGB binary-PPM payload whose 192 pixel bytes are md5(text) repeated
-    12× — deterministic, so SQL can recompute any pixel statistic from the
-    digest hex without decoding. Payloads are genuine P6 files (header +
-    raster) that :func:`decode_ppm` — or any external viewer — decodes.
+    8×8 RGB binary-PPM payload of its :func:`digest_raster`. Payloads are
+    genuine P6 files (header + raster) that :func:`decode_ppm` — or any
+    external viewer — decodes.
     """
-    import hashlib
-
-    import numpy as np
-
-    from lakehouse_workshop_spark.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    return _docs_media(
+        spark, sf_dir, "image/x-portable-pixmap", PPM_SIDE,
+        lambda doc_id, text: [(doc_id, encode_ppm(digest_raster(text)))],
     )
-    n_px_bytes = PPM_SIDE * PPM_SIDE * 3  # 192 = 12 x 16 digest bytes
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reps = n_px_bytes // 16
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                pixels = np.frombuffer(digest * reps, dtype=np.uint8).reshape(
-                    PPM_SIDE, PPM_SIDE, 3
-                )
-                payloads.append(encode_ppm(pixels))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "media_type": "image/x-portable-pixmap",
-                    "payload": payloads,
-                    "width": PPM_SIDE,
-                    "height": PPM_SIDE,
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(body, schema=MEDIA_SCHEMA)
 
 
 def media_png_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize a REAL PNG table from ``documents``: each doc becomes an
-    8×8 RGB PNG whose 192 pixel bytes are md5(text) repeated 12× — the same
-    deterministic raster as :func:`media_ppm_from_documents`, but carried
-    through actual DEFLATE compression, per-chunk CRCs, and all five
-    scanline filters (the encoder cycles them row by row). SQL recomputes
-    any pixel statistic from the digest hex without decoding.
+    """Synthesize a REAL PNG table from ``documents``: each doc's
+    :func:`digest_raster` — the same raster as
+    :func:`media_ppm_from_documents` — carried through actual DEFLATE
+    compression, per-chunk CRCs, and all five scanline filters (the
+    encoder cycles them row by row).
     """
-    import hashlib
-
-    import numpy as np
-
-    from lakehouse_workshop_spark.catalog import load_table
-
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    return _docs_media(
+        spark, sf_dir, "image/png", PPM_SIDE,
+        lambda doc_id, text: [(doc_id, encode_png(digest_raster(text)))],
     )
-    n_px_bytes = PPM_SIDE * PPM_SIDE * 3  # 192 = 12 x 16 digest bytes
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reps = n_px_bytes // 16
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                pixels = np.frombuffer(digest * reps, dtype=np.uint8).reshape(
-                    PPM_SIDE, PPM_SIDE, 3
-                )
-                payloads.append(encode_png(pixels))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "media_type": "image/png",
-                    "payload": payloads,
-                    "width": PPM_SIDE,
-                    "height": PPM_SIDE,
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(body, schema=MEDIA_SCHEMA)
 
 
 AUDIO_TILE = 8  # synthesized clips are 8 digest-int16s tiled AUDIO_TILE times
@@ -485,55 +463,22 @@ def media_wav_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the digest hex. Payloads are genuine RIFF/WAVE files any player
     parses.
     """
-    import hashlib
-
     import numpy as np
 
-    from lakehouse_workshop_spark.catalog import load_table
+    def encode(doc_id: int, text: str) -> list[tuple[int, bytes]]:
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        samples = np.tile(np.frombuffer(digest, dtype="<i2"), AUDIO_TILE)
+        return [(doc_id, encode_wav(samples, AUDIO_RATE))]
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                samples = np.tile(np.frombuffer(digest, dtype="<i2"), AUDIO_TILE)
-                payloads.append(encode_wav(samples, AUDIO_RATE))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "media_type": "audio/wav",
-                    "payload": payloads,
-                    "width": None,
-                    "height": None,
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(body, schema=MEDIA_SCHEMA)
+    return _docs_media(spark, sf_dir, "audio/wav", None, encode)
 
 
 # --- resize / frame-sample plumbing ---------------------------------------
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), True),
-        StructField("media_type", StringType(), True),
-        StructField("payload", BinaryType(), True),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-    ]
+RESIZED_SCHEMA = (
+    "media_id BIGINT, media_type STRING, payload BINARY, width BIGINT, height BIGINT"
 )
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), True),
-        StructField("frame_no", LongType(), True),
-        StructField("frame_payload", BinaryType(), True),
-    ]
-)
+FRAME_SCHEMA = "media_id BIGINT, frame_no BIGINT, frame_payload BINARY"
 
 
 def resize_images(
@@ -562,19 +507,22 @@ def resize_images(
     return media.mapInPandas(body, schema=RESIZED_SCHEMA)
 
 
+FRAME_BYTES = 64  # the fake decoder's frame: one FRAME_BYTES slice
+MAX_FRAMES = 8
+
+
 def sample_frames(
     media: DataFrame,
-    every_n_bytes: int = 64,
-    max_frames: int = 8,
     decoder: Callable[[bytes], list[bytes]] | None = None,
 ) -> DataFrame:
     """Frame-sampling operator for video payloads (1 row in → ≤k frames out).
 
     With no video codec available, the deterministic fake treats every
-    ``every_n_bytes`` slice of the payload as a "frame" — exercising the
+    ``FRAME_BYTES`` slice of the payload as a "frame" — exercising the
     row-expanding mapInPandas shape (output cardinality > input) that a
     real ffmpeg-style sampler needs. Inject ``decoder`` to decode real
-    containers; batch shape is unchanged.
+    containers; batch shape is unchanged. At most ``MAX_FRAMES`` frames
+    are kept per row.
     """
 
     def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -587,11 +535,11 @@ def sample_frames(
                     decoder(payload)
                     if decoder is not None
                     else [
-                        payload[i : i + every_n_bytes]
-                        for i in range(0, len(payload), every_n_bytes)
+                        payload[i : i + FRAME_BYTES]
+                        for i in range(0, len(payload), FRAME_BYTES)
                     ]
                 )
-                for no, chunk in enumerate(chunks[:max_frames]):
+                for no, chunk in enumerate(chunks[:MAX_FRAMES]):
                     ids.append(int(mid))
                     nos.append(no)
                     frames.append(bytes(chunk))
@@ -608,39 +556,33 @@ SPEC_FRAME = 32
 SPEC_HOP = 16
 SPEC_BANDS = 4
 
-SPECTROGRAM_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), True),
-        StructField("n_frames", LongType(), True),
-        StructField("band_energy", ArrayType(DoubleType()), True),
-    ]
-)
+SPECTROGRAM_SCHEMA = "media_id BIGINT, n_frames BIGINT, band_energy ARRAY<DOUBLE>"
 
 
-def spectrogram_bands(samples, frame: int = SPEC_FRAME, hop: int = SPEC_HOP,
-                      bands: int = SPEC_BANDS):
+def spectrogram_bands(samples):
     """Mean log-power per frequency band of a PCM16 clip (pure numpy).
 
-    Hann-windowed frames → rFFT power spectrum → ``bands`` equal bins of
-    the positive-frequency axis → log10 of the frame-averaged energy
-    (+1 so silence maps to 0). Deterministic; the distributed operator
-    calls exactly this, so distributed == local is testable directly.
+    Hann-windowed ``SPEC_FRAME``-sample frames every ``SPEC_HOP`` samples
+    → rFFT power spectrum → ``SPEC_BANDS`` equal bins of the
+    positive-frequency axis → log10 of the frame-averaged energy (+1 so
+    silence maps to 0). Deterministic; the distributed operator calls
+    exactly this, so distributed == local is testable directly.
     """
     import numpy as np
 
     x = np.asarray(samples, dtype=np.float64)
-    n_frames = max(0, 1 + (len(x) - frame) // hop) if len(x) >= frame else 0
-    if n_frames == 0:
-        return 0, [0.0] * bands
-    win = np.hanning(frame)
+    if len(x) < SPEC_FRAME:
+        return 0, [0.0] * SPEC_BANDS
+    n_frames = 1 + (len(x) - SPEC_FRAME) // SPEC_HOP
+    win = np.hanning(SPEC_FRAME)
     frames = np.stack(
-        [x[i * hop : i * hop + frame] * win for i in range(n_frames)]
+        [x[i * SPEC_HOP : i * SPEC_HOP + SPEC_FRAME] * win for i in range(n_frames)]
     )
     power = np.abs(np.fft.rfft(frames, axis=1)) ** 2  # (n_frames, frame//2+1)
-    edges = np.linspace(0, power.shape[1], bands + 1).astype(int)
+    edges = np.linspace(0, power.shape[1], SPEC_BANDS + 1).astype(int)
     band = [
         float(np.log10(1.0 + power[:, edges[b] : edges[b + 1]].mean()))
-        for b in range(bands)
+        for b in range(SPEC_BANDS)
     ]
     return n_frames, band
 
@@ -650,69 +592,32 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     per-clip spectrogram band energies, Arrow-batched.
 
     Scale: same one-pass mapInPandas shape as the image decoders; FFT
-    work is per-clip and embarrassingly parallel; the payload column is
-    pruned unless referenced.
+    work is per-clip and embarrassingly parallel.
     """
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nf, be = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples, _rate = decode_wav(payload)
-                n, bandv = spectrogram_bands(samples)
-                ids.append(int(mid))
-                nf.append(n)
-                be.append(bandv)
-            yield pd.DataFrame(
-                {"media_id": ids, "n_frames": nf, "band_energy": be}
-            )
-
-    return media.mapInPandas(body, schema=SPECTROGRAM_SCHEMA)
+    return _map_rows(
+        media,
+        ["media_id", "payload"],
+        SPECTROGRAM_SCHEMA,
+        lambda mid, payload: (int(mid), *spectrogram_bands(decode_wav(payload)[0])),
+    )
 
 
 JPEG_ERR_BOUND = 32.0  # digest rasters measure mean-abs-err <= 25.3; garbage ~85
 
 
 def media_jpeg_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthesize a REAL JPEG table from ``documents``: each doc's 8×8
-    digest raster (md5(text) repeated 12×) carried through actual DCT,
-    Annex-K quantization, and Huffman entropy coding. Lossy but
-    deterministic — the decode contract bounds reconstruction error
-    against the digest raster SQL can recompute.
+    """Synthesize a REAL JPEG table from ``documents``: each doc's
+    :func:`digest_raster` carried through actual DCT, Annex-K
+    quantization, and Huffman entropy coding. Lossy but deterministic —
+    the decode contract bounds reconstruction error against the digest
+    raster SQL can recompute.
     """
-    import hashlib
-
-    import numpy as np
-
-    from lakehouse_workshop_spark.catalog import load_table
     from lakehouse_workshop_spark.llm.jpeg import encode_jpeg
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    return _docs_media(
+        spark, sf_dir, "image/jpeg", PPM_SIDE,
+        lambda doc_id, text: [(doc_id, encode_jpeg(digest_raster(text)))],
     )
-    n_px_bytes = PPM_SIDE * PPM_SIDE * 3
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        reps = n_px_bytes // 16
-        for pdf in batches:
-            payloads = []
-            for text in pdf["text"]:
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                pixels = np.frombuffer(digest * reps, dtype=np.uint8).reshape(
-                    PPM_SIDE, PPM_SIDE, 3
-                )
-                payloads.append(encode_jpeg(pixels))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "media_type": "image/jpeg",
-                    "payload": payloads,
-                    "width": PPM_SIDE,
-                    "height": PPM_SIDE,
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(body, schema=MEDIA_SCHEMA)
 
 
 # --- perceptual hashing ------------------------------------------------------
@@ -767,45 +672,24 @@ def media_phash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     (media_id + {PHASH_TWIN_OFFSET}) with one block brightened by 1 —
     a sub-perceptual edit the hash must survive (measured twin hamming
     ≤ 6 vs unrelated ≥ 6 on the test corpus)."""
-    import hashlib
-
     import numpy as np
 
-    from lakehouse_workshop_spark.catalog import load_table
+    def encode(doc_id: int, text: str) -> list[tuple[int, bytes]]:
+        digest = hashlib.md5(text.encode("utf-8")).digest()
+        vals = np.frombuffer(digest, dtype=np.uint8).reshape(4, 4)
+        gray = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
+        pairs = [(doc_id, encode_ppm(np.repeat(gray[:, :, None], 3, axis=2)))]
+        if doc_id % PHASH_TWIN_PCT == PHASH_TWIN_REM:
+            g2 = gray.astype(np.int16)
+            g2[0:8, 0:8] += 1
+            g2 = np.clip(g2, 0, 255).astype(np.uint8)
+            twin = encode_ppm(np.repeat(g2[:, :, None], 3, axis=2))
+            pairs.append((doc_id + PHASH_TWIN_OFFSET, twin))
+        return pairs
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
+    return _docs_media(
+        spark, sf_dir, "image/x-portable-pixmap", PHASH_SIDE, encode
     )
-
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                vals = np.frombuffer(digest, dtype=np.uint8).reshape(4, 4)
-                gray = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                rgb = np.repeat(gray[:, :, None], 3, axis=2)
-                ids.append(int(doc_id))
-                payloads.append(encode_ppm(rgb))
-                if doc_id % PHASH_TWIN_PCT == PHASH_TWIN_REM:
-                    g2 = gray.astype(np.int16)
-                    g2[0:8, 0:8] += 1
-                    g2 = np.clip(g2, 0, 255).astype(np.uint8)
-                    ids.append(int(doc_id) + PHASH_TWIN_OFFSET)
-                    payloads.append(
-                        encode_ppm(np.repeat(g2[:, :, None], 3, axis=2))
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "media_type": "image/x-portable-pixmap",
-                    "payload": payloads,
-                    "width": PHASH_SIDE,
-                    "height": PHASH_SIDE,
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(body, schema=MEDIA_SCHEMA)
 
 
 # --- MJPEG-AVI video corpus -------------------------------------------------
@@ -826,18 +710,10 @@ def video_n_frames(doc_id: int) -> int:
 
 
 def video_frame_pixels(text: str, frame_no: int):
-    """The lossless original of frame ``frame_no``: the md5 digest of
-    ``text|f<frame_no>`` tiled to a PPM_SIDE² RGB raster (the same
-    digest-raster rule as the JPEG image corpus, keyed per frame)."""
-    import hashlib
-
-    import numpy as np
-
-    digest = hashlib.md5(f"{text}|f{frame_no}".encode("utf-8")).digest()
-    reps = PPM_SIDE * PPM_SIDE * 3 // 16
-    return np.frombuffer(digest * reps, dtype=np.uint8).reshape(
-        PPM_SIDE, PPM_SIDE, 3
-    )
+    """The lossless original of frame ``frame_no``: the
+    :func:`digest_raster` of ``text|f<frame_no>`` (the JPEG image
+    corpus's rule, keyed per frame)."""
+    return digest_raster(f"{text}|f{frame_no}")
 
 
 def media_avi_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,30 +721,10 @@ def media_avi_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     an MJPEG AVI of ``video_n_frames(doc_id)`` digest-raster frames. The
     payloads are genuine RIFF-AVI files (hdrl/movi/idx1) any demuxer
     walks."""
-    from lakehouse_workshop_spark.catalog import load_table
     from lakehouse_workshop_spark.llm.avi import encode_avi
 
-    docs = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    def encode(doc_id: int, text: str) -> list[tuple[int, bytes]]:
+        frames = [video_frame_pixels(text, f) for f in range(video_n_frames(doc_id))]
+        return [(doc_id, encode_avi(frames))]
 
-    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                frames = [
-                    video_frame_pixels(text, f)
-                    for f in range(video_n_frames(doc_id))
-                ]
-                payloads.append(encode_avi(frames))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"].astype("int64"),
-                    "media_type": "video/x-msvideo",
-                    "payload": payloads,
-                    "width": PPM_SIDE,
-                    "height": PPM_SIDE,
-                }
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(body, schema=MEDIA_SCHEMA)
+    return _docs_media(spark, sf_dir, "video/x-msvideo", PPM_SIDE, encode)

@@ -14,6 +14,7 @@ from lakehouse_workshop_spark.llm.multimodal import (
     PHASH_TWIN_OFFSET,
     PHASH_TWIN_PCT,
     PHASH_TWIN_REM,
+    _map_rows,
     extract_features,
     media_from_documents,
 )
@@ -122,48 +123,25 @@ def image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched, payload bytes never row-trip Python; peak task memory
     is one record batch of 8×8 images.
     """
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from lakehouse_workshop_spark.llm.multimodal import (
         decode_image,
         media_ppm_from_documents,
     )
 
-    media = media_ppm_from_documents(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), True),
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("n_pixels", LongType(), True),
-            StructField("mean_intensity", DoubleType(), True),
-        ]
+    def stats(mid, payload):
+        arr = decode_image(payload)  # native P6 path — real decode
+        h, w, _ = arr.shape
+        s16 = int(arr.sum()) // 12  # pixels are the 16-byte digest repeated 12x
+        # same op order as the oracle: (sum/16) then /255
+        return int(mid), w, h, w * h, (float(s16) / 16.0) / 255.0
+
+    return _map_rows(
+        media_ppm_from_documents(spark, sf_dir),
+        ["media_id", "payload"],
+        "media_id BIGINT, width BIGINT, height BIGINT, n_pixels BIGINT, "
+        "mean_intensity DOUBLE",
+        stats,
     )
-
-    def body(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {"media_id": [], "width": [], "height": [], "n_pixels": [], "mean_intensity": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_image(payload)  # native P6 path — real decode
-                h, w, _ = arr.shape
-                s192 = int(arr.sum())
-                s16 = s192 // 12  # pixels are the 16-byte digest repeated 12x
-                rows["media_id"].append(int(mid))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pixels"].append(w * h)
-                # same op order as the oracle: (sum/16) then /255
-                rows["mean_intensity"].append((float(s16) / 16.0) / 255.0)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(body, schema=schema)
 
 
 def _png_channel_sum_sql(c: int) -> str:
@@ -206,49 +184,25 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     one record batch of thumbnails — for multi-MB rasters, lower
     ``spark.sql.execution.arrow.maxRecordsPerBatch``.
     """
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from lakehouse_workshop_spark.llm.multimodal import (
         decode_image,
         media_png_from_documents,
     )
 
-    media = media_png_from_documents(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), True),
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("mean_r", DoubleType(), True),
-            StructField("mean_g", DoubleType(), True),
-            StructField("mean_b", DoubleType(), True),
-        ]
+    def stats(mid, payload):
+        arr = decode_image(payload)  # native PNG path — real decode
+        h, w, _ = arr.shape
+        sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
+        # same op order as the oracle: (sum / n_px) / 255
+        return (int(mid), w, h, *(float(c) / (h * w) / 255.0 for c in sums))
+
+    return _map_rows(
+        media_png_from_documents(spark, sf_dir),
+        ["media_id", "payload"],
+        "media_id BIGINT, width BIGINT, height BIGINT, mean_r DOUBLE, "
+        "mean_g DOUBLE, mean_b DOUBLE",
+        stats,
     )
-
-    def body(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "width", "height", "mean_r", "mean_g", "mean_b")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_image(payload)  # native PNG path — real decode
-                h, w, _ = arr.shape
-                sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
-                rows["media_id"].append(int(mid))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                # same op order as the oracle: (sum / n_px) / 255
-                rows["mean_r"].append(float(sums[0]) / (h * w) / 255.0)
-                rows["mean_g"].append(float(sums[1]) / (h * w) / 255.0)
-                rows["mean_b"].append(float(sums[2]) / (h * w) / 255.0)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(body, schema=schema)
 
 
 @query(
@@ -295,51 +249,29 @@ def audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    import numpy as np
 
     from lakehouse_workshop_spark.llm.multimodal import (
         decode_wav,
         media_wav_from_documents,
     )
 
-    media = media_wav_from_documents(spark, sf_dir)
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), True),
-            StructField("n_samples", LongType(), True),
-            StructField("sample_rate", LongType(), True),
-            StructField("peak_abs", LongType(), True),
-            StructField("mean_abs", DoubleType(), True),
-            StructField("rms", DoubleType(), True),
-        ]
+    def stats(mid, payload):
+        samples, rate = decode_wav(payload)  # real RIFF parse
+        s = samples.astype(np.int64)
+        a = np.abs(s)
+        return (
+            int(mid), len(s), int(rate), int(a.max()),
+            int(a.sum()) / 64.0, math.sqrt(int((s * s).sum()) / 64.0),
+        )
+
+    return _map_rows(
+        media_wav_from_documents(spark, sf_dir),
+        ["media_id", "payload"],
+        "media_id BIGINT, n_samples BIGINT, sample_rate BIGINT, peak_abs BIGINT, "
+        "mean_abs DOUBLE, rms DOUBLE",
+        stats,
     )
-
-    def body(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "n_samples", "sample_rate", "peak_abs", "mean_abs", "rms")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                samples, rate = decode_wav(payload)  # real RIFF parse
-                s = samples.astype(np.int64)
-                n = len(s)
-                total_abs = int(np.abs(s).sum())
-                total_sq = int((s * s).sum())
-                rows["media_id"].append(int(mid))
-                rows["n_samples"].append(n)
-                rows["sample_rate"].append(int(rate))
-                rows["peak_abs"].append(int(np.abs(s).max()))
-                rows["mean_abs"].append(total_abs / 64.0)
-                rows["rms"].append(math.sqrt(total_sq / 64.0))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(body, schema=schema)
 
 
 def _pool_sum_sql(ch: int) -> str:
@@ -395,12 +327,6 @@ def image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from pyspark.sql.types import (
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from lakehouse_workshop_spark.llm.multimodal import (
         decode_png,
         encode_png,
@@ -420,37 +346,20 @@ def image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).astype(np.uint8)
         return encode_png(pooled)
 
+    def stats(mid, payload):
+        arr = decode_png(payload)  # the RESIZED file, decoded anew
+        h, w, _ = arr.shape
+        sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
+        return (int(mid), w, h, *(int(c) for c in sums))
+
     media = media_png_from_documents(spark, sf_dir)
-    resized = resize_images(media, 4, 4, resizer=png_pool_resizer)
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), True),
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("pooled_sum_r", LongType(), True),
-            StructField("pooled_sum_g", LongType(), True),
-            StructField("pooled_sum_b", LongType(), True),
-        ]
+    return _map_rows(
+        resize_images(media, 4, 4, resizer=png_pool_resizer),
+        ["media_id", "payload"],
+        "media_id BIGINT, width BIGINT, height BIGINT, pooled_sum_r BIGINT, "
+        "pooled_sum_g BIGINT, pooled_sum_b BIGINT",
+        stats,
     )
-
-    def body(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "width", "height", "pooled_sum_r", "pooled_sum_g", "pooled_sum_b")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                arr = decode_png(payload)  # the RESIZED file, decoded anew
-                h, w, _ = arr.shape
-                sums = arr.reshape(-1, 3).sum(axis=0, dtype="int64")
-                rows["media_id"].append(int(mid))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pooled_sum_r"].append(int(sums[0]))
-                rows["pooled_sum_g"].append(int(sums[1]))
-                rows["pooled_sum_b"].append(int(sums[2]))
-            yield pd.DataFrame(rows)
-
-    return resized.mapInPandas(body, schema=schema)
 
 
 @query(
@@ -480,63 +389,34 @@ def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: encode pass + decode pass, both Arrow-batched; per-task peak
     is one record batch of thumbnails.
     """
-    import hashlib
-
+    import numpy as np
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
+    from lakehouse_workshop_spark.catalog import load_table
     from lakehouse_workshop_spark.llm.jpeg import decode_jpeg
     from lakehouse_workshop_spark.llm.multimodal import (
         JPEG_ERR_BOUND,
+        digest_raster,
         media_jpeg_from_documents,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     media = media_jpeg_from_documents(spark, sf_dir).join(
         docs, F.col("media_id") == F.col("doc_id")
     )
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), True),
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("err_ok", BooleanType(), True),
-        ]
-    )
 
-    def body(batches):
-        import numpy as np
-        import pandas as pd
+    def stats(mid, payload, text):
+        arr = decode_jpeg(bytes(payload))
+        h, w, _ = arr.shape
+        orig = digest_raster(str(text))
+        err = float(np.abs(arr.astype(np.int64) - orig.astype(np.int64)).mean())
+        return int(mid), w, h, err <= JPEG_ERR_BOUND
 
-        for pdf in batches:
-            rows = {"media_id": [], "width": [], "height": [], "err_ok": []}
-            for mid, payload, text in zip(
-                pdf["media_id"], pdf["payload"], pdf["text"]
-            ):
-                arr = decode_jpeg(bytes(payload))
-                h, w, _ = arr.shape
-                digest = hashlib.md5(str(text).encode("utf-8")).digest()
-                orig = np.frombuffer(digest * 12, dtype=np.uint8).reshape(
-                    h, w, 3
-                )
-                err = float(
-                    np.abs(arr.astype(np.int64) - orig.astype(np.int64)).mean()
-                )
-                rows["media_id"].append(int(mid))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["err_ok"].append(err <= JPEG_ERR_BOUND)
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "payload", "text").mapInPandas(
-        body, schema=schema
+    return _map_rows(
+        media,
+        ["media_id", "payload", "text"],
+        "media_id BIGINT, width BIGINT, height BIGINT, err_ok BOOLEAN",
+        stats,
     )
 
 
@@ -582,28 +462,16 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         phash63,
     )
 
+    _map_rows(
+        media_phash_corpus(spark, sf_dir),
+        ["media_id", "payload"],
+        "media_id BIGINT, phash BIGINT",
+        # channels are identical: hash the first
+        lambda mid, payload: (int(mid), phash63(decode_image(payload)[:, :, 0])),
+    ).localCheckpoint(eager=True).createOrReplaceTempView("phash_table")
+    # the final join reads the plain table: the synthesizer left the
+    # spread ``documents`` view behind, and its pass is checkpointed above
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    media = media_phash_corpus(spark, sf_dir)
-
-    def hash_pass(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, hs = [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                gray = decode_image(payload)[:, :, 0]  # channels identical
-                ids.append(int(mid))
-                hs.append(phash63(gray))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "phash": pd.Series(hs, dtype="int64"),
-                }
-            )
-
-    media.mapInPandas(hash_pass, "media_id BIGINT, phash BIGINT").localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("phash_table")
 
     spark.sql(
         f"""
@@ -683,13 +551,8 @@ def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-task peak is one record batch of short clips. The reference has
     no video surface (SURVEY §2 lists none).
     """
+    import numpy as np
     from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     from lakehouse_workshop_spark.catalog import load_table
     from lakehouse_workshop_spark.llm.avi import decode_avi
@@ -703,51 +566,29 @@ def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = media_avi_from_documents(spark, sf_dir).join(
         docs, F.col("media_id") == F.col("doc_id")
     )
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), True),
-            StructField("n_frames", LongType(), True),
-            StructField("width", LongType(), True),
-            StructField("height", LongType(), True),
-            StructField("duration_ms", LongType(), True),
-            StructField("err_ok", BooleanType(), True),
+
+    def stats(mid, payload, text):
+        meta, decoded = decode_avi(bytes(payload))
+        h, w, _ = decoded[0].shape
+        errs = [
+            np.abs(
+                d.astype(np.int64)
+                - video_frame_pixels(str(text), f).astype(np.int64)
+            ).mean()
+            for f, d in enumerate(decoded)
         ]
-    )
+        n = len(decoded)
+        return (
+            int(mid), n, w, h, n * meta["us_per_frame"] // 1000,
+            float(np.mean(errs)) <= JPEG_ERR_BOUND,
+        )
 
-    def body(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            rows = {k: [] for k in
-                    ("media_id", "n_frames", "width", "height",
-                     "duration_ms", "err_ok")}
-            for mid, payload, text in zip(
-                pdf["media_id"], pdf["payload"], pdf["text"]
-            ):
-                meta, decoded = decode_avi(bytes(payload))
-                h, w, _ = decoded[0].shape
-                errs = [
-                    np.abs(
-                        d.astype(np.int64)
-                        - video_frame_pixels(str(text), f).astype(np.int64)
-                    ).mean()
-                    for f, d in enumerate(decoded)
-                ]
-                rows["media_id"].append(int(mid))
-                rows["n_frames"].append(len(decoded))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["duration_ms"].append(
-                    len(decoded) * meta["us_per_frame"] // 1000
-                )
-                rows["err_ok"].append(
-                    float(np.mean(errs)) <= JPEG_ERR_BOUND
-                )
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "payload", "text").mapInPandas(
-        body, schema=schema
+    return _map_rows(
+        media,
+        ["media_id", "payload", "text"],
+        "media_id BIGINT, n_frames BIGINT, width BIGINT, height BIGINT, "
+        "duration_ms BIGINT, err_ok BOOLEAN",
+        stats,
     )
 
 
@@ -773,13 +614,7 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     its digest-raster original — per FRAME, tighter than
     ``video_decode_stats``'s whole-clip mean.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        BooleanType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    import numpy as np
 
     from lakehouse_workshop_spark.catalog import load_table
     from lakehouse_workshop_spark.llm.avi import parse_avi
@@ -795,36 +630,16 @@ def video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames = sample_frames(media, decoder=lambda p: parse_avi(bytes(p))[1])
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     joined = frames.join(docs, frames["media_id"] == docs["doc_id"])
-    schema = StructType(
-        [
-            StructField("media_id", LongType(), True),
-            StructField("frame_no", LongType(), True),
-            StructField("err_ok", BooleanType(), True),
-        ]
-    )
 
-    def body(batches):
-        import numpy as np
-        import pandas as pd
+    def stats(mid, fno, fp, text):
+        decoded = decode_jpeg(bytes(fp))
+        orig = video_frame_pixels(str(text), int(fno))
+        err = float(np.abs(decoded.astype(np.int64) - orig.astype(np.int64)).mean())
+        return int(mid), int(fno), err <= JPEG_ERR_BOUND
 
-        for pdf in batches:
-            rows = {"media_id": [], "frame_no": [], "err_ok": []}
-            for mid, fno, fp, text in zip(
-                pdf["media_id"], pdf["frame_no"], pdf["frame_payload"],
-                pdf["text"],
-            ):
-                decoded = decode_jpeg(bytes(fp))
-                orig = video_frame_pixels(str(text), int(fno))
-                err = float(
-                    np.abs(
-                        decoded.astype(np.int64) - orig.astype(np.int64)
-                    ).mean()
-                )
-                rows["media_id"].append(int(mid))
-                rows["frame_no"].append(int(fno))
-                rows["err_ok"].append(err <= JPEG_ERR_BOUND)
-            yield pd.DataFrame(rows)
-
-    return joined.select("media_id", "frame_no", "frame_payload", "text").mapInPandas(
-        body, schema=schema
+    return _map_rows(
+        joined,
+        ["media_id", "frame_no", "frame_payload", "text"],
+        "media_id BIGINT, frame_no BIGINT, err_ok BOOLEAN",
+        stats,
     )

@@ -171,7 +171,8 @@ def test_decode_image_is_explicit_stub():
     # video container (no native codec): must raise, not fake a decode
     with pytest.raises(NotImplementedError):
         decode_image(b"\x00\x00\x00\x18ftypmp42 video bytes")
-    assert decode_image(b"abc", decoder=lambda b: len(b)) == 3
+    with pytest.raises(NotImplementedError):
+        decode_image(b"abc")
 
 
 def test_png_codec_roundtrip_all_filters():

@@ -317,9 +317,11 @@ def test_semantic_dedup_verdict_shuffle_is_user_pinned(spark, sf_dir):
 
 
 # Corpus reads routed through the one spread gate (llm_dedup._docs_view,
-# llm_similarity._emb_view). The last four localCheckpoint a token
-# reduction, so their spread runs in the checkpoint job, not in the plan
-# they return.
+# llm_similarity._emb_view). tfidf_top_terms .. dsir_importance_weights
+# localCheckpoint a token reduction and image_phash_dedup its hash pass,
+# so their spread runs in the checkpoint job, not in the plan they
+# return. The multimodal queries read documents through
+# llm.multimodal._docs_media / media_from_documents.
 SPREAD_GATED = (
     "doc_fingerprint",
     "doc_chunks",
@@ -331,6 +333,16 @@ SPREAD_GATED = (
     "vocab_coverage",
     "token_dist_shift",
     "dsir_importance_weights",
+    "multimodal_features",
+    "frame_samples",
+    "image_decode_stats",
+    "png_decode_stats",
+    "audio_decode_stats",
+    "image_resize_stats",
+    "jpeg_decode_stats",
+    "image_phash_dedup",
+    "video_decode_stats",
+    "video_frame_sample",
 )
 
 

@@ -7,6 +7,11 @@ pushdown, and whole-stage-codegen coverage. The artifact makes plan
 regressions (a broadcast silently becoming a sort-merge, a filter
 falling out of a scan) reviewable in diffs.
 
+Plans are built on a fixed ``local[AUDIT_CPUS]`` session whatever the
+host or ``SPARK_GRAFT_CPUS``/``SPARK_GRAFT_MASTER`` say: shuffle width and
+scan splits follow the core count, and some join choices with them, so
+a host-sized session would rewrite rows of queries that did not change.
+
 Usage: python tools/plan_audit.py [sf_dir]
 """
 
@@ -20,6 +25,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SKIP_PREFIXES = ("streaming_",)  # streaming queries execute on build
+AUDIT_CPUS = 32  # the core count every committed PLANS.md was planned at
 
 
 def _unpartitioned_ordered_windows(plan: str) -> int:
@@ -81,12 +87,14 @@ def main() -> None:
     from lakehouse_workshop_spark import get_spark
     from lakehouse_workshop_spark.operators import all_queries
 
+    os.environ["SPARK_GRAFT_CPUS"] = str(AUDIT_CPUS)
+    os.environ.pop("SPARK_GRAFT_MASTER", None)
     spark = get_spark(app_name="plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     lines = [
         "# Physical-plan audit (generated by tools/plan_audit.py — do not edit)",
         "",
-        f"Plans built against `{sf_dir}` on `local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}]`. "
+        f"Plans built against `{sf_dir}` on `local[{AUDIT_CPUS}]`. "
         "Columns: shuffle exchanges, broadcast-hash / sort-merge / "
         "shuffled-hash / broadcast-nested-loop joins, cartesian products, scans with pushed "
         "filters, Python (Arrow) boundaries, unpartitioned ORDERED windows "
