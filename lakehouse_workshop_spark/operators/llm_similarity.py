@@ -1236,19 +1236,24 @@ SEM_DEDUP_THRESHOLD = 0.4
 def _semantic_assign_sql(prep: str, cos: str, centroid_filter: str) -> str:
     """Assignment stage (window form, kept as the DuckDB-oracle dialect):
     broadcast-size centroid set -> per-vector argmax cluster assignment ->
-    within-cluster centrality rank. Spark materializes its (max_by-form)
-    twin once (eager localCheckpoint) because the verdict stage below
-    reads it from three join sides — as an unmaterialized CTE each
-    reference would recompute the n × sqrt(n) assignment cross join."""
+    within-cluster centrality rank. The 6-dp cosine is projected over the
+    cross join before the window ranks it, so the window buffers narrow
+    (vec_id, cid, ccos) rows, not both `emb` arrays of every pair. Spark
+    materializes its (max_by-form) twin once (eager localCheckpoint)
+    because the verdict stage below reads it from three join sides — as
+    an unmaterialized CTE each reference would recompute the n × sqrt(n)
+    assignment cross join."""
+    # cdist ranks a projected cosine: DuckDB's window over the raw cross
+    # join would buffer both emb arrays of every (vector, centroid) pair
     return f"""
     WITH e AS ({prep}),
     cent AS (SELECT vec_id AS cid, emb, nrm FROM e WHERE {centroid_filter}),
     cdist AS (
-        SELECT a.vec_id, b.cid,
-               ROUND({cos}, 6) AS ccos,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                  ORDER BY ROUND({cos}, 6) DESC, b.cid) AS rn
-        FROM e a JOIN cent b ON 1 = 1
+        SELECT vec_id, cid, ccos,
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                                  ORDER BY ccos DESC, cid) AS rn
+        FROM (SELECT a.vec_id, b.cid, ROUND({cos}, 6) AS ccos
+              FROM e a JOIN cent b ON 1 = 1) p
     )
     SELECT e.vec_id, e.emb, e.nrm, c.cid,
            ROW_NUMBER() OVER (PARTITION BY c.cid
@@ -1946,6 +1951,8 @@ def _drift_rollup_sql(asg_rel: str) -> str:
     """
 
 
+# cdist ranks a projected cosine: DuckDB's window over the raw cross join
+# would buffer both emb arrays of every (vector, centroid) pair
 _DRIFT_ASSIGN_ORACLE = f"""
     WITH e AS ({_DUCK_PREP}),
     cent AS (
@@ -1953,11 +1960,12 @@ _DRIFT_ASSIGN_ORACLE = f"""
         WHERE NOT ({SEM_INCR_SPLIT}) AND vec_id < {_SEM_INCR_NLIST_SQL}
     ),
     cdist AS (
-        SELECT a.vec_id, a.{SEM_INCR_SPLIT} AS is_batch, b.cid,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                  ORDER BY ROUND({_DUCK_COS}, 6) DESC, b.cid)
-                   AS rn
-        FROM e a JOIN cent b ON 1 = 1
+        SELECT vec_id, is_batch, cid,
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                                  ORDER BY ccos DESC, cid) AS rn
+        FROM (SELECT a.vec_id, a.{SEM_INCR_SPLIT} AS is_batch, b.cid,
+                     ROUND({_DUCK_COS}, 6) AS ccos
+              FROM e a JOIN cent b ON 1 = 1) p
     )
     SELECT vec_id, is_batch, cid FROM cdist WHERE rn = 1
 """
