@@ -34,6 +34,7 @@ from lakehouse_workshop_spark.operators.llm_similarity import (
     _DUCK_COS,
     _DUCK_PREP,
     _emb_view,
+    _nearest_sql,
     _SPARK_COS,
     _SPARK_PREP,
     _topk_sql,
@@ -324,8 +325,9 @@ def ivf_pq_search(
     cluster) top-shortlist rows leaving the worker. The only full-width
     reads are the one assign-and-encode pass and the shortlist re-rank
     (|queries|·shortlist rows fetched by key, shortlist capped at
-    {PQ_SHORTLIST_CAP}). Probed candidates grow as 3·n^(3/4) — sublinear
-    (see :func:`_pq_knobs`).
+    {PQ_SHORTLIST_CAP}); the re-rank attaches the corpus-side vector
+    first, so the shortlist exchange carries ids only. Probed candidates
+    grow as 3·n^(3/4) — sublinear (see :func:`_pq_knobs`).
     Queries, codebooks and centroids broadcast (|Q|·{EMB_DIM} +
     √n·{EMB_DIM} + {PQ_M}·{PQ_K} doubles — the same query broadcast the
     exact search's BNLJ already ships). Training reads a bounded prefix
@@ -508,17 +510,7 @@ def ivf_pq_search(
             ) WHERE srn <= {shortlist}
         ),
         exact AS (
-            -- Join ORDER pinned (r17, guide §8): attach the corpus-side
-            -- vector FIRST (the shortlist exchange carries ids only),
-            -- then the query-side vector by BROADCAST. The flat form
-            -- shipped the attached query embedding through the second
-            -- join's exchange — the ann_topk_lsh finding. The broadcast
-            -- side is the QUERY_FILTER slice (r18, the r17 ADVICE
-            -- finding): the unfiltered relation broadcast the FULL
-            -- corpus embeddings — linear in corpus size, breaching the
-            -- |Q|+√n broadcast budget. Every shortlist query_id is
-            -- drawn from rows satisfying the filter, so the slice is
-            -- exactly the matchable rows.
+            -- attach corpus vectors first, then broadcast the |Q|-row query slice
             SELECT /*+ BROADCAST(a) */
                    b.query_id, b.vec_id, ROUND({_SPARK_COS}, 6) AS cosine
             FROM (SELECT s.query_id, s.vec_id, ie.emb, ie.nrm
@@ -809,13 +801,9 @@ _PQ_INCR_ORACLE = f"""
                             CAST(FLOOR(SQRT(COUNT(*))) AS BIGINT))
                         FROM corpus)
     ),
-    assign AS (
-        SELECT a.vec_id, a.vec_id % 10 = 9 AS is_batch, b.cid,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                  ORDER BY ROUND({_DUCK_COS}, 6) DESC,
-                                           b.cid) AS rn
-        FROM e a JOIN cent b ON 1 = 1
-    )
+    assign AS ({_nearest_sql(
+        "e", "cent", _DUCK_COS, carry=(f"a.{_PQ_INCR_SPLIT} AS is_batch",)
+    )})
     SELECT cid,
            CAST(COUNT(CASE WHEN NOT is_batch THEN 1 END) AS BIGINT)
                AS n_corpus,

@@ -70,6 +70,34 @@ _SPARK_COS = """
 _DUCK_COS = "list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm)"
 
 
+def _nearest_sql(
+    points: str,
+    cents: str,
+    cos: str,
+    carry: tuple[str, ...] = (),
+    key: str = "cid",
+    on: str = "1 = 1",
+    hint: str = "",
+) -> str:
+    """The one nearest-centroid rank: every ``points`` row (alias ``a``)
+    against the ``cents`` rows (alias ``b``) it joins ``on``, ranked by
+    the 6-dp-rounded cosine, ties to the smallest ``key``. Emits
+    (vec_id, <carry>, <key>, ccos, rn); callers filter ``rn = 1`` for
+    the assignment or ``rn <= nprobe`` for a probe set.
+
+    The cosine is projected before the window ranks it, so the window
+    buffers narrow (vec_id, key, ccos) rows: a DuckDB window ordered on
+    the cosine expression over the raw join buffers both ``emb`` arrays
+    of every pair and does not fit its memory cap at the 10x probe."""
+    cols = ", ".join(("a.vec_id", *carry, f"b.{key}"))
+    return f"""
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                                     ORDER BY ccos DESC, {key}) AS rn
+        FROM (SELECT {hint}{cols}, ROUND({cos}, 6) AS ccos
+              FROM {points} a JOIN {cents} b ON {on}) p
+    """
+
+
 # Rows-per-task target for the user cid repartitions feeding the BLAS
 # verdict / ADC applyInPandas stages. The width scales with the input:
 # full core width at the 100× probe (200k rows), a handful of tasks at
@@ -467,12 +495,7 @@ def _ivf_sql(prep: str, cos: str, centroid_filter: str) -> str:
     return f"""
     WITH e AS ({prep}),
     cent AS (SELECT vec_id AS cid, emb, nrm FROM e WHERE {centroid_filter}),
-    cdist AS (
-        SELECT a.vec_id, b.cid,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                  ORDER BY ROUND({cos}, 6) DESC, b.cid) AS rn
-        FROM e a JOIN cent b ON 1 = 1
-    ),
+    cdist AS ({_nearest_sql("e", "cent", cos)}),
     clustered AS (
         SELECT e.vec_id, e.emb, e.nrm, c.cid
         FROM e JOIN (SELECT vec_id, cid FROM cdist WHERE rn = 1) c
@@ -532,29 +555,24 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "emb", "nrm", "cid").localCheckpoint(
         eager=True
     ).createOrReplaceTempView("ivf_clustered")
+    # The centroid table is <= sqrt(n) rows: broadcast it (the checkpointed
+    # view has no stats, so the planner would otherwise fall back to
+    # CartesianProduct).
+    probe = _nearest_sql(
+        f"(SELECT * FROM ivf_clustered WHERE {QUERY_FILTER})",
+        "cent",
+        _SPARK_COS,
+        hint="/*+ BROADCAST(b) */ ",
+    )
     return spark.sql(
         f"""
         WITH cent AS (SELECT vec_id AS cid, emb, nrm FROM ivf_clustered
                       WHERE {_IVF_CENTROIDS}),
         qprobe AS (
-            SELECT vec_id, cid FROM (
-                -- centroid table is <= sqrt(n) rows: broadcast it (the
-                -- checkpointed view has no stats, so the planner would
-                -- otherwise fall back to CartesianProduct)
-                SELECT /*+ BROADCAST(b) */ a.vec_id, b.cid,
-                       ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                          ORDER BY ROUND({_SPARK_COS}, 6) DESC, b.cid) AS rn
-                FROM (SELECT * FROM ivf_clustered WHERE {QUERY_FILTER}) a
-                JOIN cent b ON 1 = 1
-            ) WHERE rn <= {_IVF_NPROBE_SQL}
+            SELECT vec_id, cid FROM ({probe}) WHERE rn <= {_IVF_NPROBE_SQL}
         ),
         scored AS (
-            -- BROADCAST the (query × probed-list) side (r17): pool-sized
-            -- input, ~5000× output fan-out — without the hint AQE
-            -- coalesces the tiny probe exchange to ONE partition and
-            -- every cosine fold runs on a single task (measured ~20s
-            -- CPU at the 10× probe). Broadcasting keeps the corpus side
-            -- streaming on its full partitioning.
+            -- broadcast the probe side so AQE cannot coalesce the join to one task
             SELECT /*+ BROADCAST(a) */
                    a.vec_id AS query_id, b.vec_id AS vec_id,
                    ROUND({_SPARK_COS}, 6) AS cosine
@@ -598,7 +616,10 @@ def _ann_lsh_tail_sql(cos: str, buckets: str) -> str:
     shared VERBATIM by the oracle (which derives ``buckets`` from the
     dots CTE) and the Spark side (which reads the kernel-built
     ``ann_lsh_buckets`` view) — one copy of the join-order and
-    tie-break conventions, the `_pq_knobs` drift lesson."""
+    tie-break conventions, the `_pq_knobs` drift lesson. The scoring join
+    attaches the corpus-side embedding first, so the ``cand`` exchange
+    carries ids only, and broadcasts only the |Q|-row query slice, never
+    the corpus embeddings."""
     return f"""cand AS (
         SELECT DISTINCT x.vec_id AS query_id, y.vec_id AS vec_id
         FROM {buckets} x JOIN {buckets} y
@@ -606,19 +627,7 @@ def _ann_lsh_tail_sql(cos: str, buckets: str) -> str:
         WHERE x.{QUERY_FILTER}
     ),
     scored AS (
-        -- Join ORDER pinned (r17 §5, re-landed r18 after de68468's
-        -- wholesale revert dropped it; guide §8): attach the
-        -- corpus-side embedding FIRST (the cand exchange carries ids
-        -- only), then the query-side embedding by BROADCAST. The flat
-        -- two-join form let the planner attach a.emb first and ship
-        -- it through the second join's exchange — measured 1.6 GB of
-        -- shuffled embedding payload at the 100× probe where the ids
-        -- are ~50 MB. The broadcast side is the QUERY_FILTER slice of
-        -- e (|Q| rows): broadcasting the unfiltered relation would
-        -- ship the FULL corpus embeddings (the r17 ADVICE finding on
-        -- the PQ re-rank) — every cand.query_id satisfies the filter,
-        -- so the slice is exactly the rows the join can match. DuckDB
-        -- reads the hint as a comment; the nesting is inert.
+        -- attach corpus embeddings first, then broadcast the |Q|-row query slice
         SELECT /*+ BROADCAST(a) */
                b.query_id, b.vec_id, ROUND({cos}, 6) AS cosine
         FROM (SELECT cand.query_id, ie.vec_id, ie.emb, ie.nrm
@@ -1128,13 +1137,7 @@ def _cluster_balance_sql(assign_sql: str) -> str:
 _DUCK_IVF_ASSIGN = f"""
     WITH e AS ({_DUCK_PREP}),
     cent AS (SELECT vec_id AS cid, emb, nrm FROM e WHERE {_IVF_CENTROIDS}),
-    cdist AS (
-        SELECT a.vec_id, b.cid,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                  ORDER BY ROUND({_DUCK_COS}, 6) DESC, b.cid)
-                   AS rn
-        FROM e a JOIN cent b ON 1 = 1
-    )
+    cdist AS ({_nearest_sql("e", "cent", _DUCK_COS)})
     SELECT vec_id, cid FROM cdist WHERE rn = 1
 """
 
@@ -1236,25 +1239,14 @@ SEM_DEDUP_THRESHOLD = 0.4
 def _semantic_assign_sql(prep: str, cos: str, centroid_filter: str) -> str:
     """Assignment stage (window form, kept as the DuckDB-oracle dialect):
     broadcast-size centroid set -> per-vector argmax cluster assignment ->
-    within-cluster centrality rank. The 6-dp cosine is projected over the
-    cross join before the window ranks it, so the window buffers narrow
-    (vec_id, cid, ccos) rows, not both `emb` arrays of every pair. Spark
-    materializes its (max_by-form) twin once (eager localCheckpoint)
-    because the verdict stage below reads it from three join sides — as
-    an unmaterialized CTE each reference would recompute the n × sqrt(n)
-    assignment cross join."""
-    # cdist ranks a projected cosine: DuckDB's window over the raw cross
-    # join would buffer both emb arrays of every (vector, centroid) pair
+    within-cluster centrality rank. Spark materializes its (max_by-form)
+    twin once (eager localCheckpoint) because the verdict stage below
+    reads it from three join sides — as an unmaterialized CTE each
+    reference would recompute the n × sqrt(n) assignment cross join."""
     return f"""
     WITH e AS ({prep}),
     cent AS (SELECT vec_id AS cid, emb, nrm FROM e WHERE {centroid_filter}),
-    cdist AS (
-        SELECT vec_id, cid, ccos,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY ccos DESC, cid) AS rn
-        FROM (SELECT a.vec_id, b.cid, ROUND({cos}, 6) AS ccos
-              FROM e a JOIN cent b ON 1 = 1) p
-    )
+    cdist AS ({_nearest_sql("e", "cent", cos)})
     SELECT e.vec_id, e.emb, e.nrm, c.cid,
            ROW_NUMBER() OVER (PARTITION BY c.cid
                               ORDER BY c.ccos DESC, e.vec_id) AS crn
@@ -1511,19 +1503,15 @@ def _sem_incr_sql(prep: str, cos: str, corpus_only: bool = False) -> str:
         SELECT vec_id AS cid, emb, nrm FROM e
         WHERE NOT ({SEM_INCR_SPLIT}) AND vec_id < {_SEM_INCR_NLIST_SQL}
     ),
-    cdist AS (
-        SELECT a.vec_id, a.emb, a.nrm,
-               a.{SEM_INCR_SPLIT} AS is_batch, b.cid,
-               ROUND({cos}, 6) AS ccos,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                  ORDER BY ROUND({cos}, 6) DESC, b.cid) AS rn
-        FROM e a JOIN cent b ON 1 = 1
-    ),
+    cdist AS ({_nearest_sql(
+        "e", "cent", cos, carry=(f"a.{SEM_INCR_SPLIT} AS is_batch",)
+    )}),
     assigned AS (
-        SELECT vec_id, emb, nrm, is_batch, cid,
-               ROW_NUMBER() OVER (PARTITION BY cid, is_batch
-                                  ORDER BY ccos DESC, vec_id) AS rnk
-        FROM cdist WHERE rn = 1
+        SELECT e.vec_id, e.emb, e.nrm, c.is_batch, c.cid,
+               ROW_NUMBER() OVER (PARTITION BY c.cid, c.is_batch
+                                  ORDER BY c.ccos DESC, e.vec_id) AS rnk
+        FROM e JOIN (SELECT * FROM cdist WHERE rn = 1) c
+          ON e.vec_id = c.vec_id
     ),
     ca AS (SELECT vec_id, emb, nrm, cid, rnk AS crn FROM assigned
            WHERE NOT is_batch),
@@ -1762,13 +1750,10 @@ def _rebalance_sql(prep: str, cos: str) -> str:
         FROM assigned a JOIN plan p ON a.cid = p.cid
         WHERE p.ns > 1 AND a.crn <= p.ns
     ),
-    subassign AS (
-        SELECT a.vec_id, a.cid, b.srank,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                  ORDER BY ROUND({cos}, 6) DESC, b.srank)
-                   AS rn
-        FROM assigned a JOIN subcent b ON a.cid = b.cid
-    ),
+    subassign AS ({_nearest_sql(
+        "assigned", "subcent", cos, carry=("a.cid",), key="srank",
+        on="a.cid = b.cid",
+    )}),
     geo AS (SELECT vec_id, cid, srank FROM subassign WHERE rn = 1),
     funnel AS (
         -- Flood fallback trigger: the geometric split funneled EVERY
@@ -1951,22 +1936,15 @@ def _drift_rollup_sql(asg_rel: str) -> str:
     """
 
 
-# cdist ranks a projected cosine: DuckDB's window over the raw cross join
-# would buffer both emb arrays of every (vector, centroid) pair
 _DRIFT_ASSIGN_ORACLE = f"""
     WITH e AS ({_DUCK_PREP}),
     cent AS (
         SELECT vec_id AS cid, emb, nrm FROM e
         WHERE NOT ({SEM_INCR_SPLIT}) AND vec_id < {_SEM_INCR_NLIST_SQL}
     ),
-    cdist AS (
-        SELECT vec_id, is_batch, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY ccos DESC, cid) AS rn
-        FROM (SELECT a.vec_id, a.{SEM_INCR_SPLIT} AS is_batch, b.cid,
-                     ROUND({_DUCK_COS}, 6) AS ccos
-              FROM e a JOIN cent b ON 1 = 1) p
-    )
+    cdist AS ({_nearest_sql(
+        "e", "cent", _DUCK_COS, carry=(f"a.{SEM_INCR_SPLIT} AS is_batch",)
+    )})
     SELECT vec_id, is_batch, cid FROM cdist WHERE rn = 1
 """
 
@@ -2189,15 +2167,17 @@ def _brute_vec_arm(prep: str, cos: str, universe: str) -> str:
     Emits (query_id, doc_id, rank_vec)."""
     return f"""
         SELECT query_id, doc_id, rank_vec FROM (
-            SELECT a.vec_id AS query_id, b.vec_id AS doc_id,
-                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                      ORDER BY ROUND({cos}, 6) DESC,
-                                               b.vec_id) AS rank_vec
-            FROM (SELECT * FROM ({prep}) qe
-                  WHERE vec_id < {universe} AND {QUERY_FILTER}) a
-            JOIN (SELECT * FROM ({prep}) ie
-                  WHERE vec_id < {universe}) b ON a.vec_id <> b.vec_id
-        ) v WHERE rank_vec <= {RRF_POOL}
+            SELECT query_id, doc_id,
+                   ROW_NUMBER() OVER (PARTITION BY query_id
+                                      ORDER BY cosine DESC, doc_id) AS rank_vec
+            FROM (SELECT a.vec_id AS query_id, b.vec_id AS doc_id,
+                         ROUND({cos}, 6) AS cosine
+                  FROM (SELECT * FROM ({prep}) qe
+                        WHERE vec_id < {universe} AND {QUERY_FILTER}) a
+                  JOIN (SELECT * FROM ({prep}) ie
+                        WHERE vec_id < {universe}) b
+                    ON a.vec_id <> b.vec_id) scored
+        ) ranked WHERE rank_vec <= {RRF_POOL}
     """
 
 
@@ -2208,29 +2188,24 @@ def _ivf_arm_core(clustered: str, probe: str, cos: str) -> str:
     checkpointed assignment) — ONE copy of the per-list scoring join
     and its tie-break convention, because the two dialect arms must
     stay structurally identical for bit-parity and a hand-synced pair
-    is the `_pq_knobs` drift class. Emits (query_id, doc_id, rank_vec)
-    pooled to RRF_POOL."""
+    is the `_pq_knobs` drift class; DuckDB reads the Spark hint as a
+    comment. Emits (query_id, doc_id, rank_vec) pooled to RRF_POOL."""
     return f"""
         SELECT query_id, doc_id, rank_vec FROM (
-            -- BROADCAST the (query × probed-list) side (r17): it is
-            -- pool-sized (|Q|·nprobe rows) while the scoring join's
-            -- output fans out ~5000× — without the hint AQE coalesces
-            -- the tiny probe exchange to ONE partition and the ~1M
-            -- cosine folds run on a single task (measured 19.5s CPU at
-            -- the 10× probe). Broadcasting streams the corpus side on
-            -- its full partitioning instead. DuckDB reads the hint as a
-            -- comment, so the dialect-shared body stays shared.
-            SELECT /*+ BROADCAST(a) */
-                   a.vec_id AS query_id, b.vec_id AS doc_id,
-                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                      ORDER BY ROUND({cos}, 6) DESC,
-                                               b.vec_id) AS rank_vec
-            FROM (SELECT q.vec_id, q.emb, q.nrm, p.cid
-                  FROM (SELECT * FROM ({clustered}) cq
-                        WHERE {QUERY_FILTER}) q
-                  JOIN ({probe}) p ON q.vec_id = p.vec_id) a
-            JOIN ({clustered}) b ON a.cid = b.cid AND a.vec_id <> b.vec_id
-        ) v WHERE rank_vec <= {RRF_POOL}
+            SELECT query_id, doc_id,
+                   ROW_NUMBER() OVER (PARTITION BY query_id
+                                      ORDER BY cosine DESC, doc_id) AS rank_vec
+            -- broadcast the probe side so AQE cannot coalesce the join to one task
+            FROM (SELECT /*+ BROADCAST(a) */
+                         a.vec_id AS query_id, b.vec_id AS doc_id,
+                         ROUND({cos}, 6) AS cosine
+                  FROM (SELECT q.vec_id, q.emb, q.nrm, p.cid
+                        FROM (SELECT * FROM ({clustered}) cq
+                              WHERE {QUERY_FILTER}) q
+                        JOIN ({probe}) p ON q.vec_id = p.vec_id) a
+                  JOIN ({clustered}) b
+                    ON a.cid = b.cid AND a.vec_id <> b.vec_id) scored
+        ) ranked WHERE rank_vec <= {RRF_POOL}
     """
 
 
@@ -2250,13 +2225,7 @@ def _ivf_vec_arm(
                          WHERE vec_id < {universe}),
         u_cent AS (SELECT vec_id AS cid, emb, nrm FROM u_items
                    WHERE vec_id < {nlist}),
-        u_cdist AS (
-            SELECT a.vec_id, b.cid,
-                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                      ORDER BY ROUND({cos}, 6) DESC,
-                                               b.cid) AS rn
-            FROM u_items a JOIN u_cent b ON 1 = 1
-        ),
+        u_cdist AS ({_nearest_sql("u_items", "u_cent", cos)}),
         u_clustered AS (
             SELECT i.vec_id, i.emb, i.nrm, c.cid
             FROM u_items i
@@ -2501,18 +2470,14 @@ def hybrid_rank_fusion_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The probe set is re-ranked from the checkpoint (the oracle reuses
     # its one cdist CTE instead — same expression, same tie-break, so
     # identical rn); the scoring body is the SHARED `_ivf_arm_core`.
-    probe = f"""
-        SELECT vec_id, cid FROM (
-            SELECT /*+ BROADCAST(b) */ a.vec_id, b.cid,
-                   ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                                      ORDER BY ROUND({_SPARK_COS}, 6) DESC,
-                                               b.cid) AS rn
-            FROM (SELECT * FROM hyb_ivf_clustered
-                  WHERE {QUERY_FILTER}) a
-            JOIN (SELECT vec_id AS cid, emb, nrm FROM hyb_ivf_clustered
-                  WHERE vec_id < {nlist}) b ON 1 = 1
-        ) pr WHERE rn <= {nprobe}
-    """
+    ranked = _nearest_sql(
+        f"(SELECT * FROM hyb_ivf_clustered WHERE {QUERY_FILTER})",
+        "(SELECT vec_id AS cid, emb, nrm FROM hyb_ivf_clustered "
+        f"WHERE vec_id < {nlist})",
+        _SPARK_COS,
+        hint="/*+ BROADCAST(b) */ ",
+    )
+    probe = f"SELECT vec_id, cid FROM ({ranked}) pr WHERE rn <= {nprobe}"
     return spark.sql(
         _fuse_sql(
             _ivf_arm_core(

@@ -564,6 +564,44 @@ def test_drift_retrain_plan_fires_at_probe_scale(spark):
     assert all(r.n_sublists == 1 for r in rows)
 
 
+@needs_sf01
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ivf_topk",
+        "ivf_cluster_balance",
+        "ivf_split_plan",
+        "semantic_dedup",
+        "semantic_dedup_incremental",
+        "streaming_semantic_dedup",
+        "embedding_cluster_drift",
+        "hybrid_rank_fusion",
+        "hybrid_rank_fusion_ivf",
+        "ivf_pq_incremental",
+        "streaming_pq_ingest",
+    ],
+)
+def test_nearest_centroid_oracle_parity_at_probe_scale(spark, name):
+    """The oracles that rank nearest centroids (`_nearest_sql`) or a
+    brute top-k pool run under DuckDB's memory cap at the 10x probe and
+    equal Spark bit-exact there. `ivf_rebalance` and `drift_retrain_plan`
+    are pinned at this scale by their own tests above."""
+    from bench import _probe_dir
+    from lakehouse_workshop_spark.operators import all_oracles, all_queries
+    from lakehouse_workshop_spark.oracle import canon_rows, duck_connect
+
+    probe = _probe_dir(spark, SF01)
+    con = duck_connect(probe)
+    try:
+        oracle_pdf = con.sql(all_oracles()[name]).df()
+    finally:
+        con.close()
+    spark_pdf = all_queries()[name](spark, probe).toPandas()
+    assert canon_rows(spark_pdf) == canon_rows(oracle_pdf), (
+        f"Spark vs DuckDB {name} diverged at probe scale"
+    )
+
+
 def test_geom_knobs_emit_pinned_byte_forms():
     """`_geom_knobs` is the single source of the IVF geometry SQL; its
     full-corpus emission is pinned BYTE-exact here because those strings
